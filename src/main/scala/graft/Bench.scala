@@ -23,11 +23,17 @@ object Bench {
     * `steal_pct` (battery-wide) and `steal_gates` (per-gate %, only gates
     * over 2%), the existing contract fields are untouched. */
   private def stealSample(): (Long, Long) = try {
-    val line = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get("/proc/stat")).get(0)
-    val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-    (if (f.length > 7) f(7) else 0L, f.sum)
+    stealTicks(java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("/proc/stat")).get(0))
   } catch { case _: Throwable => (0L, 0L) }
+
+  /** (steal, total) ticks of a `/proc/stat` cpu line. The total sums only
+    * the first 8 fields (user … steal): the kernel already counts guest
+    * and guest_nice time inside user and nice. */
+  private[graft] def stealTicks(line: String): (Long, Long) = {
+    val f = line.trim.split("\\s+").drop(1).map(_.toLong)
+    (if (f.length > 7) f(7) else 0L, f.take(8).sum)
+  }
 
   private def stealPct(before: (Long, Long), after: (Long, Long)): Double = {
     val dTotal = after._2 - before._2

@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
  */
 object Tables {
 
-  /** Schema memo, keyed by (path, mtime, size): `spark.read.parquet`
+  /** Schema memo, keyed by (path, mtime, size) and the session confs that
+    * change what inference returns: `spark.read.parquet`
     * without an explicit schema runs parquet footer INFERENCE on every
     * call — measured 104-159 ms/call at sf0.1 (it launches a schema-merge
     * job even for one file), paid ~2-4× per gate × ~300 gates per battery,
@@ -29,19 +30,28 @@ object Tables {
     * schema drops resolution to 11-20 ms/call. This caches METADATA only
     * (a StructType — the same thing a catalog table pins); every action
     * still scans the parquet file itself, and the mtime+size key makes a
-    * regenerated fixture re-infer. Attribute IDs stay fresh per load (each
-    * call builds a new relation), so self-joins of two loads of the same
-    * table behave exactly as before. */
+    * regenerated fixture re-infer, and a session with other schema confs
+    * infer its own. Attribute IDs stay fresh per load (each call builds a
+    * new relation), so self-joins of two loads of the same table behave
+    * exactly as before. */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Seq[Option[String]]),
       org.apache.spark.sql.types.StructType]()
+
+  /** Confs under which parquet inference yields a different schema for the
+    * same file: nanos timestamps as longs, timestamp NTZ-vs-LTZ, and the
+    * case of field names. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val f = new java.io.File(path)
     val df =
       if (f.isFile) {
-        val key = (path, f.lastModified(), f.length())
+        val key = (path, f.lastModified(), f.length(), SchemaConfs.map(spark.conf.getOption))
         val schema = schemaCache.computeIfAbsent(key,
           _ => spark.read.parquet(path).schema)
         spark.read.schema(schema).parquet(path)

@@ -1,10 +1,11 @@
 package graft.serving
 
 import graft.log.TopicConfig
+import io.netty.buffer.{ByteBuf, ByteBufUtil, Unpooled}
+import io.netty.channel.{Channel, ChannelFutureListener, ChannelHandlerContext}
+import io.netty.handler.codec.ByteToMessageDecoder
 import org.apache.spark.sql.SparkSession
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
-import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.CRC32
 
@@ -27,7 +28,8 @@ import java.util.zip.CRC32
  *
  * Produce requests flow into the SAME [[ProduceCoalescer]] as the HTTP
  * façade (the reference pools coalescers across both servers), so the wire
- * format is transport, not a second data path.
+ * format is transport, not a second data path. Connections are Netty
+ * channels on the server's own event-loop group; `stop()` closes them all.
  */
 class PolarBinaryServer(
     spark: SparkSession,
@@ -42,128 +44,88 @@ class PolarBinaryServer(
   private val coalescer = sharedCoalescer.getOrElse(
     new ProduceCoalescer(spark, root, clusterSize, rangesPerToken))
   private val ownsCoalescer = sharedCoalescer.isEmpty
-  private val listener = new ServerSocket(port, 50, InetAddress.getLoopbackAddress)
-  @volatile private var running = true
+  private val group = Transport.eventLoops("polar-binary")
+  private val listener = Transport.listen(group, port)(_.pipeline.addLast(new FrameDecoder))
 
-  def boundPort: Int = listener.getLocalPort
+  def boundPort: Int = Transport.portOf(listener)
 
-  def start(): this.type = {
-    val t = new Thread(() => acceptLoop(), "polar-binary-acceptor")
-    t.setDaemon(true)
-    t.start()
-    this
-  }
+  def start(): this.type = { Transport.accept(listener); this }
 
   def stop(): Unit = {
-    running = false
-    try listener.close() catch { case _: Exception => () }
+    Transport.shutdown(group)
     if (ownsCoalescer) coalescer.stop()
   }
 
-  private def acceptLoop(): Unit =
-    while (running) {
-      try {
-        val conn = listener.accept()
-        val t = new Thread(() => serve(conn), "polar-binary-conn")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Exception if !running => ()
-        case _: java.io.IOException => ()
-      }
-    }
-
-  /** Per-connection read loop, mirroring `binaryServer.serve()`
+  /** Per-connection frame reader, mirroring `binaryServer.serve()`
     * (`binary_server.go:77-118`): first frame must be startup; produce is
     * handled in the background (the coalescer) and acked on commit. */
-  private def serve(conn: Socket): Unit = {
-    conn.setTcpNoDelay(true)
-    val in = new DataInputStream(conn.getInputStream)
-    val out = new DataOutputStream(conn.getOutputStream)
-    val writeLock = new Object
-    var initialized = false
-    try {
-      while (true) {
-        val h = readHeader(in)
-        // wire-supplied length: bound it BEFORE any allocation (a crafted
-        // or desynced frame could otherwise demand a 2 GiB buffer), and
-        // drop the connection on violation — past a refused body there is
-        // no way to resynchronize the stream
-        if (h.bodyLength < 0 || h.bodyLength > MaxFrameBytes) {
-          writeFrame(out, writeLock, h.streamId, ErrorOp,
-            errorBody(ServerError,
-              s"frame body length ${h.bodyLength} out of bounds"))
-          return
-        }
-        // every non-produce frame's body must be consumed (or the next
-        // header read parses leftover body bytes as a frame header and the
-        // stream is permanently desynchronized)
-        if (!initialized) {
-          in.skipNBytes(h.bodyLength.toLong)
-          initialized = true
-          if (h.op != StartupOp) {
-            writeFrame(out, writeLock, h.streamId, ErrorOp,
-              errorBody(ServerError, "Invalid first message"))
-            return
-          }
-          writeFrame(out, writeLock, h.streamId, ReadyOp, Array.emptyByteArray)
-        } else h.op match {
-          case ProduceOp =>
-            val body = new Array[Byte](h.bodyLength)
-            in.readFully(body)
-            handleProduce(h, body, out, writeLock)
-          case HeartbeatOp =>
-            in.skipNBytes(h.bodyLength.toLong)
-            writeFrame(out, writeLock, h.streamId, ReadyOp, Array.emptyByteArray)
-          case _ =>
-            in.skipNBytes(h.bodyLength.toLong)
-            writeFrame(out, writeLock, h.streamId, ErrorOp,
+  private final class FrameDecoder extends ByteToMessageDecoder {
+    private var initialized = false
+
+    override def decode(ctx: ChannelHandlerContext, in: ByteBuf, out: java.util.List[AnyRef]): Unit =
+      if (in.readableBytes >= HeaderSize) {
+        val at = in.readerIndex
+        val streamId = in.getUnsignedShort(at + 2)
+        val bodyLength = in.getInt(at + 5)
+        // wire-supplied length: bound it BEFORE any buffering (a crafted or
+        // desynced frame could otherwise demand a 2 GiB buffer), and drop
+        // the connection on violation — past a refused body there is no
+        // way to resynchronize the stream
+        if (bodyLength < 0 || bodyLength > MaxFrameBytes)
+          refuse(ctx, in, streamId, s"frame body length $bodyLength out of bounds")
+        else if (in.readableBytes >= HeaderSize + bodyLength) {
+          val flags = in.getUnsignedByte(at + 1).toInt
+          val op = in.getByte(at + 4)
+          // version and head crc go unchecked, as in the reference's serve()
+          in.skipBytes(HeaderSize)
+          // every frame's body is consumed whole, so the next header read
+          // never parses leftover body bytes
+          val body = in.readSlice(bodyLength)
+          if (!initialized) {
+            initialized = true
+            if (op != StartupOp) refuse(ctx, in, streamId, "Invalid first message")
+            else send(ctx.channel, streamId, ReadyOp, Array.emptyByteArray)
+          } else op match {
+            case ProduceOp => handleProduce(ctx.channel, flags, streamId, body)
+            case HeartbeatOp => send(ctx.channel, streamId, ReadyOp, Array.emptyByteArray)
+            case _ => send(ctx.channel, streamId, ErrorOp,
               errorBody(ServerError, "Only producer operations are supported"))
+          }
         }
       }
-    } catch {
-      case _: EOFException => ()
-      case _: java.io.IOException => ()
-    } finally {
-      try conn.close() catch { case _: Exception => () }
+
+    /** Error frame, then close; nothing after it on this connection is read. */
+    private def refuse(ctx: ChannelHandlerContext, in: ByteBuf, streamId: Int, msg: String): Unit = {
+      in.skipBytes(in.readableBytes)
+      send(ctx.channel, streamId, ErrorOp, errorBody(ServerError, msg))
+        .addListener(ChannelFutureListener.CLOSE): Unit
     }
   }
 
-  private def handleProduce(
-      h: Header, body: Array[Byte], out: DataOutputStream, lock: Object): Unit = {
+  /** A truncated body fails a bounds-checked read and gets an error frame. */
+  private def handleProduce(ch: Channel, flags: Int, streamId: Int, body: ByteBuf): Unit = {
     try {
-      var pos = 0
-      val tsMicros = if ((h.flags & WithTimestampFlag) != 0) {
-        val ts = java.nio.ByteBuffer.wrap(body, 0, 8).getLong
-        pos = 8
-        Some(ts)
-      } else None
-      val keyLen = body(pos) & 0xFF
-      val key = new String(body, pos + 1, keyLen, UTF_8)
-      pos += 1 + keyLen
-      val topicLen = body(pos) & 0xFF
-      val topic = new String(body, pos + 1, topicLen, UTF_8)
-      pos += 1 + topicLen
-      val payload = java.util.Arrays.copyOfRange(body, pos, body.length)
+      val tsMicros = if ((flags & WithTimestampFlag) != 0) Some(body.readLong) else None
+      val key = body.readCharSequence(body.readUnsignedByte, UTF_8).toString
+      val topic = body.readCharSequence(body.readUnsignedByte, UTF_8).toString
+      val payload = ByteBufUtil.getBytes(body)
       if (!TopicConfig.validTopicName(topic)) {
-        writeFrame(out, lock, h.streamId, ErrorOp, errorBody(ServerError, "Invalid topic"))
+        send(ch, streamId, ErrorOp, errorBody(ServerError, "Invalid topic"))
         return
       }
+      // the ack is queued to the channel from the coalescer's future; the
+      // event loop writes it, never the flusher thread
       coalescer
         .append(topic, Some(key).filter(_.nonEmpty), tsMicros,
           ProduceCoalescer.BinaryContentType, payload)
         .whenComplete { (_, err) =>
-          if (err == null)
-            writeFrame(out, lock, h.streamId, ProduceResponseOp, Array.emptyByteArray)
-          else
-            writeFrame(out, lock, h.streamId, ErrorOp,
-              errorBody(ServerError, String.valueOf(err.getMessage)))
+          if (err == null) send(ch, streamId, ProduceResponseOp, Array.emptyByteArray)
+          else send(ch, streamId, ErrorOp, errorBody(ServerError, String.valueOf(err.getMessage)))
         }
       ()
     } catch {
       case e: Exception =>
-        writeFrame(out, lock, h.streamId, ErrorOp,
-          errorBody(ServerError, String.valueOf(e.getMessage)))
+        send(ch, streamId, ErrorOp, errorBody(ServerError, String.valueOf(e.getMessage)))
     }
   }
 }
@@ -191,17 +153,6 @@ object PolarBinaryServer {
 
   val HeaderSize = 13
 
-  private[serving] def readHeader(in: DataInputStream): Header = {
-    val version = in.readUnsignedByte()
-    val flags = in.readUnsignedByte()
-    val streamId = in.readUnsignedShort()
-    val op = in.readByte()
-    val bodyLength = in.readInt()
-    in.readInt() // head crc: read, not validated (the reference's serve()
-                 // also binary.Reads it without checking)
-    Header(version, flags, streamId, op, bodyLength)
-  }
-
   /** Header bytes with the crc32-IEEE of the first 9 bytes in the tail
     * slot (`binary_messages.go:107-118`). */
   private[serving] def headerBytes(
@@ -215,16 +166,8 @@ object PolarBinaryServer {
     buf.array()
   }
 
-  private def writeFrame(
-      out: DataOutputStream, lock: Object, streamId: Int, op: Byte,
-      body: Array[Byte]): Unit =
-    lock.synchronized {
-      try {
-        out.write(headerBytes(0, streamId, op, body.length))
-        if (body.nonEmpty) out.write(body)
-        out.flush()
-      } catch { case _: java.io.IOException => () }
-    }
+  private def send(ch: Channel, streamId: Int, op: Byte, body: Array[Byte]) =
+    ch.writeAndFlush(Unpooled.wrappedBuffer(headerBytes(0, streamId, op, body.length), body))
 
   private def errorBody(code: Byte, message: String): Array[Byte] = {
     val msg = message.getBytes(UTF_8)

@@ -1,19 +1,33 @@
 package graft.serving
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.log.{ConsumerGroups, PolarLog, RetentionScheduler, RingTemplate, TopicConfig, TopicOps}
+import io.netty.buffer.{ByteBuf, ByteBufUtil, Unpooled}
+import io.netty.channel.{Channel, ChannelFuture, ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer}
+import io.netty.handler.codec.ByteToMessageDecoder
+import io.netty.handler.codec.http.{DefaultFullHttpResponse, FullHttpRequest, FullHttpResponse, HttpContent, HttpHeaderNames, HttpHeaderValues, HttpMethod, HttpObjectAggregator, HttpRequest, HttpResponseStatus, HttpServerCodec, HttpUtil, HttpVersion, LastHttpContent, QueryStringDecoder}
+import io.netty.handler.codec.http2.{Http2CodecUtil, Http2FrameCodecBuilder, Http2MultiplexHandler, Http2StreamFrameToHttpObjectCodec}
+import io.netty.util.ReferenceCountUtil
 import org.apache.spark.sql.SparkSession
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.{Executors, RejectedExecutionException, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /**
  * The reference's HTTP serving surface (SURVEY §2 A1/A15/A17/A19/A32,
  * `/root/reference/docs/rest_api/README.md`) as a thin façade over the
- * engine: a single JDK `HttpServer` exposing the discovery, producer and
- * consumer APIs, with Spark doing all routing, storage and scanning
- * underneath.
+ * engine: one route table exposing the discovery, producer and consumer
+ * APIs, with Spark doing all routing, storage and scanning underneath.
+ *
+ * Transport: the server owns one Netty event-loop group with two ports.
+ * `boundPort` speaks HTTP/1.1; `h2cPort` speaks prior-knowledge HTTP/2
+ * cleartext, which the reference's consumer API also serves by wrapping its
+ * router in Go's `h2c.NewHandler` (`internal/consuming/server.go:116,163`).
+ * Netty terminates both protocols and hands each request to the route
+ * table as one aggregated `FullHttpRequest`. Routes run on a fixed pool of
+ * 8 threads, never on an event loop, one request at a time per HTTP/1.1
+ * connection so keep-alive responses leave in request order.
  *
  * Endpoints (one port stands in for the reference's 9250/9251/9252 trio —
  * `GET /v1/brokers` reports it for both roles):
@@ -92,8 +106,13 @@ class PolarHttpServer(
 
   import PolarHttpServer._
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  private val pool = Executors.newFixedThreadPool(8)
+  private val pool = Executors.newFixedThreadPool(8, Transport.threads("polar-http"))
+  private val group = Transport.eventLoops("polar-http-io")
+  private val http = Transport.listen(group, port) { ch =>
+    ch.pipeline.addLast(new HttpServerCodec, new ProduceLengthGate,
+      new HttpObjectAggregator(maxMessageSize), new Dispatcher)
+  }
+  private val h2c = Transport.listen(group, 0)(_.pipeline.addLast(new H2cPreface))
   private val consumers = scala.collection.concurrent.TrieMap.empty[String, Registered]
   private val lastSeen = scala.collection.concurrent.TrieMap.empty[String, Long]
 
@@ -141,13 +160,14 @@ class PolarHttpServer(
 
   private def cfgOf(topic: String): TopicConfig = coalescer.cfgOf(topic)
 
-  def boundPort: Int = server.getAddress.getPort
+  private val produceLengthError =
+    s"Content length must be defined (HTTP/1.1 chunked not supported), " +
+      s"greater than 0 and less than $maxMessageSize bytes"
 
-  /** h2c (HTTP/2 cleartext, prior knowledge) listener over the same router —
-    * the reference's consumer API terminates h2c identically via the Go
-    * h2c wrapper (`internal/consuming/server.go:116,163`). */
-  val h2c = new H2cServer(boundPort)
-  def h2cPort: Int = h2c.boundPort
+  def boundPort: Int = Transport.portOf(http)
+
+  /** The h2c (HTTP/2 cleartext, prior knowledge) port over the same routes. */
+  def h2cPort: Int = Transport.portOf(h2c)
 
   // the lease keepalive (leased mode only): renews at ttl/3 so an IDLE
   // façade stays authoritative between requests — the write path's inline
@@ -198,10 +218,8 @@ class PolarHttpServer(
         // commit
         graft.log.StorageProbe.check(root): Unit
     }
-    server.setExecutor(pool)
-    server.createContext("/", (ex: HttpExchange) => route(ex))
-    server.start()
-    h2c.start()
+    Transport.accept(http)
+    Transport.accept(h2c)
     retention.start()
     this
   }
@@ -209,8 +227,7 @@ class PolarHttpServer(
   def stop(): Unit = {
     retention.close()
     coalescer.stop()
-    h2c.stop()
-    server.stop(0)
+    Transport.shutdown(group)
     pool.shutdown()
     leaseKeepalive.foreach { t => t.interrupt(); t.join(2000) }
     leaseKeepalive = None
@@ -220,13 +237,112 @@ class PolarHttpServer(
     if (leaseAcquired) graft.log.WriterLease.release(root)
   }
 
+  // -------------------------------------------------------------- transport
+
+  /** Runs each request's route on the pool, one request at a time per
+    * channel, so an HTTP/1.1 connection's keep-alive responses leave in
+    * request order. Requests that arrive meanwhile wait here, and reading
+    * pauses until they have been answered. */
+  private final class Dispatcher extends ChannelInboundHandlerAdapter {
+    private val waiting = new java.util.ArrayDeque[AnyRef]()
+    private var busy = false
+
+    override def channelRead(ctx: ChannelHandlerContext, msg: AnyRef): Unit = {
+      waiting.add(msg)
+      if (busy) ctx.channel.config.setAutoRead(false): Unit else next(ctx)
+    }
+
+    override def channelInactive(ctx: ChannelHandlerContext): Unit = {
+      waiting.forEach(ReferenceCountUtil.release(_): Unit)
+      waiting.clear()
+      ctx.fireChannelInactive(): Unit
+    }
+
+    private def next(ctx: ChannelHandlerContext): Unit = waiting.poll() match {
+      case null =>
+        busy = false
+        ctx.channel.config.setAutoRead(true): Unit
+      case msg =>
+        busy = true
+        val (keepAlive, answer) = msg match {
+          case req: FullHttpRequest if req.decoderResult.isFailure =>
+            (false, () => reply(400, "Bad request"))
+          case req: FullHttpRequest =>
+            val remote = ctx.channel.remoteAddress.asInstanceOf[InetSocketAddress]
+            (HttpUtil.isKeepAlive(req), () => route(new Exchange(req, remote)))
+          case Refused(keepAlive) => (keepAlive, () => reply(400, produceLengthError))
+        }
+        try pool.execute { () =>
+          val resp = try answer() finally ReferenceCountUtil.release(msg): Unit
+          if (!keepAlive)
+            resp.headers.set(HttpHeaderNames.CONNECTION, HttpHeaderValues.CLOSE)
+          ctx.writeAndFlush(resp).addListener((f: ChannelFuture) =>
+            if (keepAlive && f.isSuccess) next(ctx) else ctx.close(): Unit)
+        } catch {
+          case _: RejectedExecutionException => // stopped
+            ReferenceCountUtil.release(msg)
+            ctx.close(): Unit
+        }
+    }
+  }
+
+  /** Refuses a produce whose body length is unknown (chunked) or out of
+    * range on its request head, before the aggregator buffers any of it,
+    * and discards the body that follows. */
+  private final class ProduceLengthGate extends ChannelInboundHandlerAdapter {
+    private var discarding = false
+
+    override def channelRead(ctx: ChannelHandlerContext, msg: AnyRef): Unit = msg match {
+      case req: HttpRequest if isProduce(req) && !lengthInBounds(req) =>
+        discarding = true
+        ReferenceCountUtil.release(req)
+        ctx.fireChannelRead(Refused(HttpUtil.isKeepAlive(req))): Unit
+      case c: HttpContent if discarding =>
+        discarding = !c.isInstanceOf[LastHttpContent]
+        c.release(): Unit
+      case _ => ctx.fireChannelRead(msg): Unit
+    }
+
+    private def isProduce(req: HttpRequest): Boolean =
+      req.method == HttpMethod.POST &&
+        scala.util.Try(new QueryStringDecoder(req.uri).path).toOption
+          .exists(TopicMessages.matches)
+
+    private def lengthInBounds(req: HttpRequest): Boolean = {
+      val n = HttpUtil.getContentLength(req, -1L)
+      !HttpUtil.isTransferEncodingChunked(req) && n > 0 && n <= maxMessageSize
+    }
+  }
+
+  /** The h2c port's first handler: once the first 24 bytes are the HTTP/2
+    * client preface it hands them, unread, to Netty's frame codec, whose
+    * streams each become one `FullHttpRequest` for the [[Dispatcher]]. Any
+    * other opening closes the connection before a byte is written. */
+  private final class H2cPreface extends ByteToMessageDecoder {
+    override def decode(ctx: ChannelHandlerContext, in: ByteBuf, out: java.util.List[AnyRef]): Unit = {
+      val n = math.min(in.readableBytes, ClientPreface.readableBytes)
+      if (!ByteBufUtil.equals(in, in.readerIndex, ClientPreface, 0, n)) {
+        in.skipBytes(in.readableBytes)
+        ctx.close(): Unit
+      } else if (n == ClientPreface.readableBytes) {
+        ctx.pipeline
+          .addAfter(ctx.name, "h2", Http2FrameCodecBuilder.forServer.build)
+          .addAfter("h2", null, new Http2MultiplexHandler(new ChannelInitializer[Channel] {
+            override def initChannel(stream: Channel): Unit =
+              stream.pipeline.addLast(new Http2StreamFrameToHttpObjectCodec(true),
+                new HttpObjectAggregator(maxMessageSize), new Dispatcher,
+                Transport.CloseOnError): Unit
+          }))
+        ctx.pipeline.remove(this): Unit
+      }
+    }
+  }
+
   // ---------------------------------------------------------------- routing
 
-  private def route(ex: HttpExchange): Unit = {
+  private def route(ex: Exchange): FullHttpResponse = {
     try {
-      val path = ex.getRequestURI.getPath
-      val method = ex.getRequestMethod
-      (method, path) match {
+      (ex.method, ex.path) match {
         case ("GET", p) if p == "/status" || p.endsWith("/status") =>
           respond(ex, 200, "OK")
         case ("GET", "/v1/brokers") =>
@@ -298,7 +414,7 @@ class PolarHttpServer(
           // DESCRIBE HISTORY for a topic: every retained commit version
           // with its in-doc commit time and cumulative record count — the
           // catalog of what VERSION/TIMESTAMP AS OF can still resolve
-          val t = query(ex).get("topic").flatMap(_.headOption)
+          val t = ex.query.get("topic").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "topic is required"))
           if (!TopicConfig.validTopicName(t)) throw HttpError(400, "Invalid topic")
           val hist = graft.log.LogMetadata.history(cfgOf(t))
@@ -312,10 +428,10 @@ class PolarHttpServer(
           // offset — `?topic=t&before=o` (one global cutoff; -1 = tail,
           // i.e. truncate). File-granular, clamped, offsets preserved —
           // the HTTP face of PolarLog.deleteRecords / TRUNCATE TABLE.
-          val t = query(ex).get("topic").flatMap(_.headOption)
+          val t = ex.query.get("topic").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "topic is required"))
           if (!TopicConfig.validTopicName(t)) throw HttpError(400, "Invalid topic")
-          val raw = query(ex).get("before").flatMap(_.headOption)
+          val raw = ex.query.get("before").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "before is required"))
           val before = scala.util.Try(raw.trim.toLong).getOrElse(
             throw HttpError(400, s"before must be an offset or -1, got '$raw'"))
@@ -331,7 +447,7 @@ class PolarHttpServer(
         case ("GET", "/v1/admin/topics/config") =>
           // per-topic config view: the persisted overrides (retention.ms,
           // cleanup.policy) — the HTTP face of SHOW TBLPROPERTIES
-          val t = query(ex).get("topic").flatMap(_.headOption)
+          val t = ex.query.get("topic").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "topic is required"))
           if (!TopicConfig.validTopicName(t)) throw HttpError(400, "Invalid topic")
           val cfgG = cfgOf(t)
@@ -345,12 +461,12 @@ class PolarHttpServer(
         case ("POST", "/v1/admin/topics/config") =>
           // set/unset one config key: `?topic=t&key=retention.ms&value=…`
           // (no value = unset) — the kafka-configs --alter shape, one CAS
-          val t = query(ex).get("topic").flatMap(_.headOption)
+          val t = ex.query.get("topic").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "topic is required"))
           if (!TopicConfig.validTopicName(t)) throw HttpError(400, "Invalid topic")
-          val key = query(ex).get("key").flatMap(_.headOption)
+          val key = ex.query.get("key").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "key is required"))
-          val value = query(ex).get("value").flatMap(_.headOption)
+          val value = ex.query.get("value").flatMap(_.headOption)
           value match {
             case Some(v) =>
               val ok = try graft.log.TopicProps.validate(key, v)
@@ -378,7 +494,7 @@ class PolarHttpServer(
           // the HTTP face of the producer-txn lifecycle: begin fences any
           // zombie incarnation and returns the epoch every later call
           // (and every transactional DSv2 write) must echo
-          val q = query(ex)
+          val q = ex.query
           val id = q.get("id").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "id is required"))
           val timeoutMs = q.get("timeoutMs").flatMap(_.headOption)
@@ -399,7 +515,7 @@ class PolarHttpServer(
           // sendOffsetsToTransaction: stage `group`'s next offsets for
           // `topic` inside the transaction — `offsets` is the same
           // {"part":next,...} JSON the commit endpoint takes
-          val q = query(ex)
+          val q = ex.query
           val h = txnHandleOf(ex)
           val t = q.get("topic").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "topic is required"))
@@ -409,7 +525,7 @@ class PolarHttpServer(
           if (!ConsumerGroups.validGroupName(g))
             throw HttpError(400, s"Invalid group name: '$g'")
           val offsJson = q.get("offsets").flatMap(_.headOption).getOrElse(
-            new String(ex.getRequestBody.readAllBytes(), UTF_8))
+            new String(ex.body, UTF_8))
           val offs = ConsumerGroups.parseOffsets(offsJson)
           if (offs.isEmpty) throw HttpError(400,
             """offsets are required as {"partition":nextOffset,...} (query param or body)""")
@@ -482,7 +598,7 @@ class PolarHttpServer(
           // offset of the first record with event time >= T (record-exact
           // seek; tail where nothing qualifies) — what a client uses to
           // seek manually instead of a full group reset
-          val q2 = query(ex)
+          val q2 = ex.query
           val t = q2.get("topic").flatMap(_.headOption)
             .getOrElse(throw HttpError(400, "topic is required"))
           if (!TopicConfig.validTopicName(t)) throw HttpError(400, "Invalid topic")
@@ -511,57 +627,28 @@ class PolarHttpServer(
       case e: graft.log.WriterLease.FencedWriterException =>
         respond(ex, 409, s"Fenced: ${e.getMessage}")
       case e: Exception => respond(ex, 500, s"Internal error: ${e.getMessage}")
-    } finally ex.close()
-  }
-
-  private def query(ex: HttpExchange): Map[String, Seq[String]] = {
-    val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-    raw.split("&").filter(_.nonEmpty).toSeq
-      .map { kv =>
-        val i = kv.indexOf('=')
-        if (i < 0) kv -> ""
-        else java.net.URLDecoder.decode(kv.take(i), "UTF-8") ->
-          java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    }
   }
 
   private def respond(
-      ex: HttpExchange, status: Int, body: String,
-      contentType: String = "text/plain"): Unit =
+      ex: Exchange, status: Int, body: String,
+      contentType: String = "text/plain"): FullHttpResponse =
     respondBytes(ex, status, body.getBytes(UTF_8), contentType)
 
   private def respondBytes(
-      ex: HttpExchange, status: Int, body0: Array[Byte], contentType: String): Unit = {
-    // The JDK server resets the connection if a response is sent while
-    // request-body bytes remain unread (the oversize-reject path); drain a
-    // bounded amount so the client actually receives the 4xx.
-    try {
-      val in = ex.getRequestBody
-      val buf = new Array[Byte](8192)
-      var drained = 0L
-      var n = 0
-      while (drained < (8L << 20) && { n = in.read(buf); n >= 0 }) drained += n
-    } catch { case _: java.io.IOException => }
+      ex: Exchange, status: Int, body: Array[Byte], contentType: String): FullHttpResponse = {
     // content negotiation: gzip success bodies when the client advertises
     // it and the payload clears one MTU-ish floor (tiny bodies get larger)
-    val acceptsGzip = Option(ex.getRequestHeaders.getFirst("Accept-encoding"))
+    val acceptsGzip = ex.header("Accept-Encoding")
       .exists(_.toLowerCase.split(",").exists(_.trim.takeWhile(_ != ';') == "gzip"))
-    val body =
-      if (acceptsGzip && status == 200 && body0.length >= 512) {
-        ex.getResponseHeaders.set("Content-Encoding", "gzip")
-        val bos = new java.io.ByteArrayOutputStream(body0.length / 2 + 64)
-        val gz = new java.util.zip.GZIPOutputStream(bos)
-        gz.write(body0); gz.close()
-        bos.toByteArray
-      } else body0
-    ex.getResponseHeaders.set("Content-Type", contentType)
-    if (status == 204 || body.isEmpty) ex.sendResponseHeaders(status, -1)
-    else {
-      ex.sendResponseHeaders(status, body.length.toLong)
-      val os = ex.getResponseBody
-      try os.write(body) finally os.close()
-    }
+    if (acceptsGzip && status == 200 && body.length >= 512) {
+      val bos = new java.io.ByteArrayOutputStream(body.length / 2 + 64)
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(body); gz.close()
+      val resp = reply(status, bos.toByteArray, contentType)
+      resp.headers.set(HttpHeaderNames.CONTENT_ENCODING, HttpHeaderValues.GZIP)
+      resp
+    } else reply(status, body, contentType)
   }
 
   /** Bounded gunzip of a request body: a payload whose DECOMPRESSED size
@@ -592,8 +679,8 @@ class PolarHttpServer(
 
   /** (id, epoch) handle from the request — epoch REQUIRED, it is the
     * fencing guard (same rule as the DSv2 write options). */
-  private def txnHandleOf(ex: HttpExchange): graft.log.Transactions.TxnHandle = {
-    val q = query(ex)
+  private def txnHandleOf(ex: Exchange): graft.log.Transactions.TxnHandle = {
+    val q = ex.query
     val id = q.get("id").flatMap(_.headOption)
       .getOrElse(throw HttpError(400, "id is required"))
     val epoch = q.get("epoch").flatMap(_.headOption)
@@ -616,7 +703,7 @@ class PolarHttpServer(
 
   // ---------------------------------------------------------------- produce
 
-  private def handleProduce(ex: HttpExchange, topic: String): Unit = {
+  private def handleProduce(ex: Exchange, topic: String): FullHttpResponse = {
     if (!TopicConfig.validTopicName(topic))
       throw HttpError(400, "Invalid topic")
     // a produce to a not-yet-existing topic CREATES it: creation obeys the
@@ -627,16 +714,15 @@ class PolarHttpServer(
     if (!TopicConfig.validNewTopicName(topic) &&
         graft.log.LogMetadata.readIfExists(TopicConfig(root, topic)).isEmpty)
       throw HttpError(400, "Invalid topic: new topic names are capped at 248 characters")
-    val declaredLen = Option(ex.getRequestHeaders.getFirst("Content-length"))
-      .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(-1L)
-    if (declaredLen <= 0 || declaredLen > maxMessageSize)
-      throw HttpError(400,
-        s"Content length must be defined (HTTP/1.1 chunked not supported), " +
-          s"greater than 0 and less than $maxMessageSize bytes")
-    val raw = ex.getRequestBody.readAllBytes()
+    // HTTP/1.1 refuses a missing or out-of-range length on the request
+    // head (ProduceLengthGate); an h2c stream need not carry a length
+    // header, so its aggregated body is held to the same bound here
+    val raw = ex.body
+    if (raw.isEmpty || raw.length > maxMessageSize)
+      throw HttpError(400, produceLengthError)
     // transport decompression before size accounting: the limit is on the
     // record payload the log stores, not the wire bytes
-    val body = Option(ex.getRequestHeaders.getFirst("Content-encoding"))
+    val body = ex.header("Content-Encoding")
       .map(_.trim.toLowerCase) match {
       case Some("gzip") => gunzipBounded(raw, maxMessageSize)
       case Some(other) if other.nonEmpty && other != "identity" =>
@@ -644,11 +730,11 @@ class PolarHttpServer(
       case _ => raw
     }
     if (body.length > maxMessageSize) throw HttpError(400, "Body exceeds max message size")
-    val q = query(ex)
+    val q = ex.query
     val partitionKey = q.get("partitionKey").flatMap(_.headOption).filter(_.nonEmpty)
     val tsMicros = q.get("timestamp").flatMap(_.headOption)
       .flatMap(s => scala.util.Try(s.toLong).toOption)
-    val contentType = Option(ex.getRequestHeaders.getFirst("Content-type"))
+    val contentType = ex.header("Content-Type")
       .getOrElse("application/json").takeWhile(_ != ';').trim.toLowerCase
 
     messagesReceived.incrementAndGet()
@@ -681,8 +767,8 @@ class PolarHttpServer(
     * the same keep-alive connection share a consumer and a dropped
     * connection is evicted by inactivity, mirroring the reference's
     * per-connection tracked consumers (`internal/consuming/server.go:186`). */
-  private def consumerIdOf(ex: HttpExchange): String = {
-    val q = query(ex)
+  private def consumerIdOf(ex: Exchange): String = {
+    val q = ex.query
     q.get("consumerId").flatMap(_.headOption)
       .orElse(q.get("consumer_id").flatMap(_.headOption))
       .map { id =>
@@ -695,13 +781,13 @@ class PolarHttpServer(
         id
       }
       .getOrElse {
-        val r = ex.getRemoteAddress
+        val r = ex.remote
         s"conn-${r.getAddress.getHostAddress}:${r.getPort}"
       }
   }
 
-  private def handleRegister(ex: HttpExchange): Unit = {
-    val q = query(ex)
+  private def handleRegister(ex: Exchange): FullHttpResponse = {
+    val q = ex.query
     val consumerId = consumerIdOf(ex)
     val group = q.get("group").flatMap(_.headOption).getOrElse("default")
     if (!ConsumerGroups.validGroupName(group))
@@ -742,7 +828,7 @@ class PolarHttpServer(
     * driver as single authority they are served directly, plus a per-topic
     * lag computed with EXACTLY the `/metrics` gauge's registry arithmetic
     * (tail − committed per partition, no data reads). */
-  private def handleGroups(ex: HttpExchange): Unit = {
+  private def handleGroups(ex: Exchange): FullHttpResponse = {
     evictInactive()
     val body = consumers.values.toSeq.groupBy(_.group).toSeq.sortBy(_._1)
       .map { case (g, members) =>
@@ -775,9 +861,9 @@ class PolarHttpServer(
     * per topic (the same [[ConsumerGroups.assignment]] arithmetic poll
     * uses — what the reference's rebalancer gossips), and per-partition
     * committed/tail/lag. */
-  private def handleGroupDescribe(ex: HttpExchange): Unit = {
+  private def handleGroupDescribe(ex: Exchange): FullHttpResponse = {
     evictInactive()
-    val g = query(ex).get("group").flatMap(_.headOption)
+    val g = ex.query.get("group").flatMap(_.headOption)
       .getOrElse(throw HttpError(400, "group is required"))
     val members = consumers.values.filter(_.group == g).toSeq
     if (members.isEmpty) throw HttpError(404, s"Unknown group '$g'")
@@ -810,8 +896,8 @@ class PolarHttpServer(
     * view over the DURABLE group document (works for groups with no live
     * member on this façade, unlike describe which reflects registered
     * consumers): per-partition committed/tail/lag from pure metadata. */
-  private def handleGroupLag(ex: HttpExchange): Unit = {
-    val q = query(ex)
+  private def handleGroupLag(ex: Exchange): FullHttpResponse = {
+    val q = ex.query
     val g = q.get("group").flatMap(_.headOption)
       .getOrElse(throw HttpError(400, "group is required"))
     val t = q.get("topic").flatMap(_.headOption)
@@ -840,8 +926,8 @@ class PolarHttpServer(
     * ISO-8601 instant (the startingTimestamp convention). Responds with
     * the group's new per-partition positions; the lag endpoint reflects
     * them immediately. */
-  private def handleGroupReset(ex: HttpExchange): Unit = {
-    val q = query(ex)
+  private def handleGroupReset(ex: Exchange): FullHttpResponse = {
+    val q = ex.query
     def param(k: String) = q.get(k).flatMap(_.headOption)
     val g = param("group").getOrElse(throw HttpError(400, "group is required"))
     val t = param("topic").getOrElse(throw HttpError(400, "topic is required"))
@@ -875,7 +961,7 @@ class PolarHttpServer(
       "application/json")
   }
 
-  private def registered(ex: HttpExchange): Registered = {
+  private def registered(ex: Exchange): Registered = {
     val id = consumerIdOf(ex)
     evictInactive()
     val r = consumers.getOrElse(id, throw HttpError(409, "Consumer not registered"))
@@ -918,7 +1004,7 @@ class PolarHttpServer(
     cleared
   }
 
-  private def handlePoll(ex: HttpExchange): Unit = {
+  private def handlePoll(ex: Exchange): FullHttpResponse = {
     val r0 = registered(ex)
     // the reference auto-commits the previously served position when new
     // data is requested (docs/rest_api/README.md:178-180)
@@ -933,7 +1019,7 @@ class PolarHttpServer(
     // octet-stream, */*" is the common client pattern — flipping it to a
     // JSON array would be a wire-format break for binary consumers), so
     // wildcards only decide when nothing concrete was named.
-    val json = Option(ex.getRequestHeaders.getFirst("Accept")).forall { a =>
+    val json = ex.header("Accept").forall { a =>
       val types = a.split(",").iterator
         .map(_.trim.takeWhile(_ != ';').trim.toLowerCase).filter(_.nonEmpty)
         .toSeq
@@ -997,18 +1083,18 @@ class PolarHttpServer(
       else {
         val out = new java.io.ByteArrayOutputStream()
         out.write((items.size >> 8) & 0xFF); out.write(items.size & 0xFF)
-        items.foreach(h => out.write(hexToBytes(h)))
+        items.foreach(h => out.write(ByteBufUtil.decodeHexDump(h)))
         respondBytes(ex, 200, out.toByteArray, "application/octet-stream")
       }
     }
   }
 
-  private def handleCommit(ex: HttpExchange): Unit = {
+  private def handleCommit(ex: Exchange): FullHttpResponse = {
     commitPending(registered(ex))
     respond(ex, 204, "")
   }
 
-  private def handleGoodbye(ex: HttpExchange): Unit = {
+  private def handleGoodbye(ex: Exchange): FullHttpResponse = {
     val r = commitPending(registered(ex))
     consumers.remove(r.consumerId)
     lastSeen.remove(r.consumerId)
@@ -1023,6 +1109,34 @@ object PolarHttpServer {
 
   private final case class HttpError(status: Int, msg: String)
     extends RuntimeException(msg)
+
+  /** A produce refused on its head; the [[Dispatcher]] answers it in turn. */
+  private final case class Refused(keepAlive: Boolean)
+
+  private val ClientPreface: ByteBuf = Http2CodecUtil.connectionPrefaceBuf()
+
+  /** An aggregated request as the route table reads it. */
+  private final class Exchange(req: FullHttpRequest, val remote: InetSocketAddress) {
+    // ';' is an ordinary character here, not a second parameter separator
+    private val uri = new QueryStringDecoder(req.uri, UTF_8, true, 1024, true)
+    def method: String = req.method.name
+    def path: String = uri.path
+    lazy val query: Map[String, Seq[String]] =
+      uri.parameters.asScala.map { case (k, vs) => k -> vs.asScala.toSeq }.toMap
+    def header(name: String): Option[String] = Option(req.headers.get(name))
+    def body: Array[Byte] = ByteBufUtil.getBytes(req.content)
+  }
+
+  private def reply(status: Int, text: String): FullHttpResponse =
+    reply(status, text.getBytes(UTF_8), "text/plain")
+
+  private def reply(status: Int, body: Array[Byte], contentType: String): FullHttpResponse = {
+    val resp = new DefaultFullHttpResponse(HttpVersion.HTTP_1_1,
+      HttpResponseStatus.valueOf(status), Unpooled.wrappedBuffer(body))
+    resp.headers.set(HttpHeaderNames.CONTENT_TYPE, contentType)
+    if (status != 204) HttpUtil.setContentLength(resp, body.length.toLong)
+    resp
+  }
 
   private final case class Registered(
       consumerId: String,
@@ -1044,15 +1158,5 @@ object PolarHttpServer {
       case c => sb.append(c)
     }
     sb.append('"').toString
-  }
-
-  private[serving] def hexToBytes(h: String): Array[Byte] = {
-    val out = new Array[Byte](h.length / 2)
-    var i = 0
-    while (i < out.length) {
-      out(i) = Integer.parseInt(h.substring(2 * i, 2 * i + 2), 16).toByte
-      i += 1
-    }
-    out
   }
 }

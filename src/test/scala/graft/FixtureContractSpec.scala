@@ -104,4 +104,31 @@ class FixtureContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!row.isNullAt(0) && !row.isNullAt(1), s"$dir events.ts all null")
     }
   }
+
+  test("the Tables schema memo follows the session's parquet inference confs") {
+    import org.apache.parquet.schema.MessageTypeParser
+    val conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val before = spark.conf.getOption(conf)
+    val dir = java.nio.file.Files.createTempDirectory("tables_ntz").toFile
+    try {
+      // written without Spark's schema metadata, as the fixtures are: the
+      // reader then infers the type from the parquet annotation alone
+      val schema = MessageTypeParser.parseMessageType(
+        "message t { required int64 ts (TIMESTAMP(MICROS,false)); }")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(new java.io.File(dir, "ntz.parquet").getPath))
+        .withType(schema).build()
+      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+        .newGroup().append("ts", 1704164645000000L))
+      finally w.close()
+      // one JVM, one file, two confs: each load sees its own conf's type
+      spark.conf.set(conf, "true")
+      assert(Tables.load(spark, dir.getPath, "ntz").schema("ts").dataType == TimestampNTZType)
+      spark.conf.set(conf, "false")
+      assert(Tables.load(spark, dir.getPath, "ntz").schema("ts").dataType == TimestampType)
+    } finally {
+      before.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
 }

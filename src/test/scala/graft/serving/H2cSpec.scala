@@ -4,16 +4,21 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import io.netty.buffer.{ByteBufUtil, Unpooled}
+import io.netty.handler.codec.http2.{DefaultHttp2Headers, DefaultHttp2HeadersDecoder, DefaultHttp2HeadersEncoder}
+
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 import java.net.Socket
-import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /**
- * HPACK codec unit coverage (RFC 7541 Appendix C published vectors) plus
- * end-to-end h2c prior-knowledge exchanges against the façade listener,
- * driven by a minimal frame-level client.
+ * End-to-end h2c prior-knowledge exchanges against the façade listener,
+ * driven by a minimal frame-level client. Header blocks come from Netty's
+ * HPACK codec, or are fixed bytes where a test needs one exact
+ * representation on the wire.
  */
 class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -38,69 +43,23 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def hex(s: String): Array[Byte] =
     s.replaceAll("\\s", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
-  // ---------------------------------------------------------------- HPACK
-
-  test("Huffman decode matches RFC 7541 Appendix C strings") {
-    assert(new String(Hpack.huffmanDecode(hex("f1e3 c2e5 f23a 6ba0 ab90 f4ff")), UTF_8)
-      === "www.example.com")
-    assert(new String(Hpack.huffmanDecode(hex("a8eb 1064 9cbf")), UTF_8) === "no-cache")
-    assert(new String(Hpack.huffmanDecode(hex("25a8 49e9 5ba9 7d7f")), UTF_8) === "custom-key")
-    assert(new String(Hpack.huffmanDecode(hex("25a8 49e9 5bb8 e8b4 bf")), UTF_8) === "custom-value")
-  }
-
-  test("Huffman encode/decode round-trips arbitrary byte strings") {
-    val rnd = new scala.util.Random(42)
-    (0 until 200).foreach { i =>
-      val len = rnd.nextInt(64)
-      val bytes = Array.fill(len)(rnd.nextInt(256).toByte)
-      val decoded = Hpack.huffmanDecode(Hpack.huffmanEncode(bytes))
-      assert(java.util.Arrays.equals(decoded, bytes), s"round-trip failed at $i")
-    }
-  }
-
-  test("decoder replays RFC 7541 C.3 (plain) request sequence with dynamic table") {
-    val d = new Hpack.Decoder()
-    assert(d.decode(hex("8286 8441 0f77 7777 2e65 7861 6d70 6c65 2e63 6f6d")) ===
-      Seq(":method" -> "GET", ":scheme" -> "http", ":path" -> "/",
-        ":authority" -> "www.example.com"))
-    // second request hits the dynamic-table entry inserted by the first
-    assert(d.decode(hex("8286 84be 5808 6e6f 2d63 6163 6865")) ===
-      Seq(":method" -> "GET", ":scheme" -> "http", ":path" -> "/",
-        ":authority" -> "www.example.com", "cache-control" -> "no-cache"))
-    assert(d.decode(hex("8287 85bf 400a 6375 7374 6f6d 2d6b 6579 0c63 7573 746f 6d2d 7661 6c75 65")) ===
-      Seq(":method" -> "GET", ":scheme" -> "https", ":path" -> "/index.html",
-        ":authority" -> "www.example.com", "custom-key" -> "custom-value"))
-  }
-
-  test("decoder replays RFC 7541 C.4 (Huffman) request sequence") {
-    val d = new Hpack.Decoder()
-    assert(d.decode(hex("8286 8441 8cf1 e3c2 e5f2 3a6b a0ab 90f4 ff")).last ===
-      (":authority" -> "www.example.com"))
-    assert(d.decode(hex("8286 84be 5886 a8eb 1064 9cbf")).last ===
-      ("cache-control" -> "no-cache"))
-    assert(d.decode(hex("8287 85bf 4088 25a8 49e9 5ba9 7d7f 8925 a849 e95b b8e8 b4bf")).last ===
-      ("custom-key" -> "custom-value"))
-  }
-
-  test("encoder output decodes to the same header list") {
-    val headers = Seq(":status" -> "200", "content-type" -> "application/json",
-      "x-thing" -> "a,b;c d")
-    assert(new Hpack.Decoder().decode(Hpack.Encoder.encode(headers)) === headers)
-  }
-
   // --------------------------------------------------- minimal h2c client
 
   /** Frame-level h2c client: prior-knowledge preface, SETTINGS exchange,
-    * then synchronous request/response streams with client-side receive
-    * window replenishment. */
+    * then synchronous request/response streams. It honours the server's
+    * send windows on upload and replenishes its own receive windows. */
   private final class H2Client(port: Int) {
-    import H2cServer._
+    import H2cSpec._
     private val sock = new Socket("127.0.0.1", port)
     sock.setSoTimeout(30000)
     private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
     private val out = new BufferedOutputStream(sock.getOutputStream)
-    private val decoder = new Hpack.Decoder()
+    private val encoder = new DefaultHttp2HeadersEncoder()
+    private val decoder = new DefaultHttp2HeadersDecoder()
     private var nextStream = 1
+    // send windows (RFC 7540 §6.9.2: 65535 until the peer opens them)
+    private var connWindow = 65535L
+    private val streamWindow = mutable.Map.empty[Int, Long].withDefaultValue(65535L)
 
     // connection preface + empty SETTINGS; server answers SETTINGS which
     // the frame pump acks lazily
@@ -118,6 +77,18 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
       (tpe, flags, sid, payload)
     }
 
+    /** Answers the connection-level frames every read loop may meet. */
+    private def control(tpe: Int, flags: Int, sid: Int, payload: Array[Byte]): Unit = tpe match {
+      case FrameSettings if (flags & FlagAck) == 0 =>
+        writeFrame(out, FrameSettings, FlagAck, 0, Array.emptyByteArray); out.flush()
+      case FramePing if (flags & FlagAck) == 0 =>
+        writeFrame(out, FramePing, FlagAck, 0, payload); out.flush()
+      case FrameWindowUpdate =>
+        val inc = java.nio.ByteBuffer.wrap(payload).getInt & 0x7fffffff
+        if (sid == 0) connWindow += inc else streamWindow(sid) += inc
+      case _ => ()
+    }
+
     /** Send one request; `headerBlock` is a pre-encoded HPACK fragment (so
       * tests control exactly which representations the server must decode).
       * Returns (status, headers, body). */
@@ -129,53 +100,39 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
       var off = 0
       while (off < body.length) {
         val n = math.min(dataFrameSize, body.length - off)
-        writeFrame(out, FrameData, if (off + n >= body.length) FlagEndStream else 0,
-          sid, java.util.Arrays.copyOfRange(body, off, off + n))
-        off += n
-      }
-      out.flush()
-
-      var status = -1
-      var headers: Seq[(String, String)] = Nil
-      val respBody = new java.io.ByteArrayOutputStream()
-      var done = false
-      while (!done) {
-        val (tpe, flags, fsid, payload) = readFrame()
-        tpe match {
-          case FrameSettings =>
-            if ((flags & FlagAck) == 0) {
-              writeFrame(out, FrameSettings, FlagAck, 0, Array.emptyByteArray); out.flush()
-            }
-          case FrameHeaders if fsid == sid =>
-            headers = decoder.decode(payload)
-            status = headers.collectFirst { case (":status", v) => v.toInt }.getOrElse(-1)
-            if ((flags & FlagEndStream) != 0) done = true
-          case FrameData if fsid == sid =>
-            respBody.write(payload)
-            if (payload.nonEmpty) { // replenish so >64 KiB responses flow
-              val p = new Array[Byte](4)
-              p(0) = ((payload.length >>> 24) & 0x7f).toByte
-              p(1) = ((payload.length >>> 16) & 0xff).toByte
-              p(2) = ((payload.length >>> 8) & 0xff).toByte
-              p(3) = (payload.length & 0xff).toByte
-              writeFrame(out, FrameWindowUpdate, 0, 0, p)
-              if ((flags & FlagEndStream) == 0) writeFrame(out, FrameWindowUpdate, 0, sid, p)
-              out.flush()
-            }
-            if ((flags & FlagEndStream) != 0) done = true
-          case FramePing if (flags & FlagAck) == 0 =>
-            writeFrame(out, FramePing, FlagAck, 0, payload); out.flush()
-          case _ => // window updates, acks: ignore
+        if (math.min(connWindow, streamWindow(sid)) < n) {
+          out.flush()
+          val (tpe, flags, fsid, payload) = readFrame()
+          control(tpe, flags, fsid, payload)
+        } else {
+          writeFrame(out, FrameData, if (off + n >= body.length) FlagEndStream else 0,
+            sid, java.util.Arrays.copyOfRange(body, off, off + n))
+          connWindow -= n; streamWindow(sid) -= n
+          off += n
         }
       }
-      (status, headers, respBody.toByteArray)
+      out.flush()
+      awaitResponse(sid)
     }
 
-    /** Encode a full request header set with the stateless literal form. */
+    /** Encode a full request header set with this connection's encoder;
+      * blocks must be sent in the order they were encoded. */
     def literalHeaders(method: String, path: String,
         extra: Seq[(String, String)] = Nil): Array[Byte] =
-      Hpack.Encoder.encode(Seq(":method" -> method, ":scheme" -> "http",
+      encode(Seq(":method" -> method, ":scheme" -> "http",
         ":path" -> path, ":authority" -> "127.0.0.1") ++ extra)
+
+    def encode(headers: Seq[(String, String)]): Array[Byte] = {
+      val h = new DefaultHttp2Headers()
+      headers.foreach { case (n, v) => h.add(n, v) }
+      val buf = Unpooled.buffer()
+      try { encoder.encodeHeaders(0, h, buf); ByteBufUtil.getBytes(buf) }
+      finally buf.release()
+    }
+
+    private def decode(block: Array[Byte]): Seq[(String, String)] =
+      decoder.decodeHeaders(0, Unpooled.wrappedBuffer(block)).iterator.asScala
+        .map(e => e.getKey.toString -> e.getValue.toString).toSeq
 
     /** A request whose body is followed by TRAILER headers (second HEADERS
       * block, END_STREAM) — gRPC's framing shape. */
@@ -212,20 +169,20 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
       while (!done) {
         val (tpe, flags, fsid, payload) = readFrame()
         tpe match {
-          case FrameSettings =>
-            if ((flags & FlagAck) == 0) {
-              writeFrame(out, FrameSettings, FlagAck, 0, Array.emptyByteArray); out.flush()
-            }
           case FrameHeaders if fsid == sid =>
-            headers = decoder.decode(payload)
+            headers = decode(payload)
             status = headers.collectFirst { case (":status", v) => v.toInt }.getOrElse(-1)
             if ((flags & FlagEndStream) != 0) done = true
           case FrameData if fsid == sid =>
             respBody.write(payload)
+            if (payload.nonEmpty) { // replenish so >64 KiB responses flow
+              val p = java.nio.ByteBuffer.allocate(4).putInt(payload.length).array()
+              writeFrame(out, FrameWindowUpdate, 0, 0, p)
+              if ((flags & FlagEndStream) == 0) writeFrame(out, FrameWindowUpdate, 0, sid, p)
+              out.flush()
+            }
             if ((flags & FlagEndStream) != 0) done = true
-          case FramePing if (flags & FlagAck) == 0 =>
-            writeFrame(out, FramePing, FlagAck, 0, payload); out.flush()
-          case _ => ()
+          case _ => control(tpe, flags, fsid, payload)
         }
       }
       (status, headers, respBody.toByteArray)
@@ -276,18 +233,12 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c = new H2Client(server.h2cPort)
     try {
       // literal WITH incremental indexing + Huffman-coded strings, then a
-      // second request addressing the inserted entries by dynamic index
-      def litIdx(name: String, value: String): Array[Byte] = {
-        val out = new java.io.ByteArrayOutputStream()
-        out.write(0x40)
-        val n = Hpack.huffmanEncode(name.getBytes(ISO_8859_1))
-        Hpack.writeInt(out, 0x80, 7, n.length); out.write(n)
-        val v = Hpack.huffmanEncode(value.getBytes(ISO_8859_1))
-        Hpack.writeInt(out, 0x80, 7, v.length); out.write(v)
-        out.toByteArray
-      }
-      val block1 = Array[Byte](0x82.toByte, 0x86.toByte) ++ // :method GET, :scheme http
-        litIdx(":path", "/status") ++ litIdx(":authority", "127.0.0.1")
+      // second request addressing the inserted entries by dynamic index:
+      // 82 86 = :method GET, :scheme http; 40 = literal with incremental
+      // indexing, new name; 0x80|len = Huffman-coded string of len bytes
+      val block1 = hex("8286" +
+        "40 84 b958d33f 85 61091a6d47" +          // :path /status
+        "40 88 b83b5339ec327d7f 87 089d5c0b8170ff") // :authority 127.0.0.1
       val (s1, _, b1) = c.request(block1)
       assert(s1 === 200 && new String(b1, UTF_8) === "OK")
 
@@ -340,7 +291,7 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
         c.literalHeaders("POST", s"/v1/topic/$topic/messages?partitionKey=tk",
           Seq("content-type" -> "application/json")),
         """{"via":"trailers"}""".getBytes(UTF_8),
-        Hpack.Encoder.encode(Seq("x-checksum" -> "abc")))
+        c.encode(Seq("x-checksum" -> "abc")))
       assert(ps === 200, s"trailered produce must dispatch with its headers (got $ps)")
       val rows = graft.log.PolarLog.consume(spark,
         graft.log.TopicConfig(root, topic)).collect()
@@ -349,7 +300,7 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("malformed frames drop the connection without wedging the server") {
-    import H2cServer._
+    import H2cSpec._
     val bad = new H2Client(server.h2cPort)
     // empty PADDED HEADERS: pad-length byte missing — must be treated as a
     // connection error (socket closed), never an escaped AIOOBE that leaks
@@ -367,5 +318,32 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (s, _, _) = ok.request(ok.literalHeaders("GET", "/status"))
       assert(s === 200)
     } finally ok.close()
+  }
+}
+
+object H2cSpec {
+  val Preface: Array[Byte] = "PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n".getBytes(UTF_8)
+
+  val FrameData = 0x0
+  val FrameHeaders = 0x1
+  val FrameSettings = 0x4
+  val FramePing = 0x6
+  val FrameWindowUpdate = 0x8
+
+  val FlagEndStream = 0x1
+  val FlagAck = 0x1
+  val FlagEndHeaders = 0x4
+  val FlagPadded = 0x8
+
+  /** One HTTP/2 frame: the 9-byte header (length u24, type, flags,
+    * stream id u31) and its payload. */
+  def writeFrame(out: java.io.OutputStream, tpe: Int, flags: Int, sid: Int,
+      payload: Array[Byte]): Unit = {
+    val len = payload.length
+    out.write((len >>> 16) & 0xff); out.write((len >>> 8) & 0xff); out.write(len & 0xff)
+    out.write(tpe); out.write(flags)
+    out.write((sid >>> 24) & 0x7f); out.write((sid >>> 16) & 0xff)
+    out.write((sid >>> 8) & 0xff); out.write(sid & 0xff)
+    out.write(payload)
   }
 }

@@ -223,7 +223,7 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
             out.write(preface); out.flush()
             (0 until 1 + rnd.nextInt(4)).foreach { _ =>
               val payload = Array.fill(rnd.nextInt(64))(rnd.nextInt(256).toByte)
-              H2cServer.writeFrame(out, rnd.nextInt(16), rnd.nextInt(256),
+              H2cSpec.writeFrame(out, rnd.nextInt(16), rnd.nextInt(256),
                 rnd.nextInt(8), payload)
             }
             out.flush()
@@ -239,8 +239,8 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // round-trips and HTTP/1.1 still serves
     withSocket(server.h2cPort) { (in, out) =>
       out.write(preface)
-      H2cServer.writeFrame(out, 0x4, 0, 0, Array.emptyByteArray) // SETTINGS
-      H2cServer.writeFrame(out, 0x6, 0, 0, new Array[Byte](8))   // PING
+      H2cSpec.writeFrame(out, 0x4, 0, 0, Array.emptyByteArray) // SETTINGS
+      H2cSpec.writeFrame(out, 0x6, 0, 0, new Array[Byte](8))   // PING
       out.flush()
       // expect the server's SETTINGS, our SETTINGS ack, then the PING ack
       var sawPingAck = false
@@ -255,35 +255,6 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(sawPingAck, "a live h2c server must ack PING after the fuzz")
     }
     httpStillServes()
-  }
-
-  test("hpack: random header blocks and huffman bytes decode or refuse cleanly, bounded") {
-    val rnd = new scala.util.Random(0x48504b)
-    (0 until 3000).foreach { i =>
-      val block = Array.fill(rnd.nextInt(96))(rnd.nextInt(256).toByte)
-      val d = new Hpack.Decoder()
-      try {
-        val hs = d.decode(block)
-        // output is bounded by the input (no amplification): every decoded
-        // string came from a length-checked slice of the block
-        assert(hs.map { case (n, v) => n.length + v.length }.sum <= block.length * 2 + hs.size * 64,
-          s"iteration $i: suspicious amplification")
-      } catch {
-        // the two legal refusal shapes (both caught by the h2c handler's
-        // NonFatal): a diagnosed protocol error or a truncated-buffer read
-        case _: IllegalArgumentException => ()
-        case _: ArrayIndexOutOfBoundsException => ()
-      }
-    }
-    // huffman decode: random bytes either decode or refuse — never hang
-    (0 until 3000).foreach { _ =>
-      val raw = Array.fill(rnd.nextInt(64))(rnd.nextInt(256).toByte)
-      try Hpack.huffmanDecode(raw)
-      catch { case _: IllegalArgumentException => () }
-    }
-    // and well-formed blocks still round-trip after the fuzz (sanity)
-    val enc = Hpack.Encoder.encode(Seq(":status" -> "200", "x-k" -> "v"))
-    assert(new Hpack.Decoder().decode(enc) === Seq(":status" -> "200", "x-k" -> "v"))
   }
 
   test("http: random bodies and paths never take the server down") {
@@ -309,5 +280,34 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.net.http.HttpResponse.BodyHandlers.ofString())
     assert(resp.statusCode() === 200, resp.body()) // 200 = committed
     assert(PolarLog.consume(spark, cfg).count() >= 1L)
+  }
+
+  // ------------------------------------------------------------- shutdown
+
+  test("stop() closes the connections a server accepted") {
+    val stopRoot = Files.createTempDirectory("polar_stop").toString
+    val bin = new PolarBinaryServer(spark, stopRoot).start()
+    val http = new PolarHttpServer(spark, stopRoot, lingerMs = 5).start()
+    val binSock = new Socket("127.0.0.1", bin.boundPort)
+    val h2cSock = new Socket("127.0.0.1", http.h2cPort)
+    try {
+      Seq(binSock, h2cSock).foreach(_.setSoTimeout(5000))
+      val bIn = new DataInputStream(binSock.getInputStream)
+      startup(bIn, new DataOutputStream(binSock.getOutputStream))
+      val hOut = h2cSock.getOutputStream
+      hOut.write(H2cSpec.Preface)
+      H2cSpec.writeFrame(hOut, H2cSpec.FrameSettings, 0, 0, Array.emptyByteArray)
+      hOut.flush()
+      // both connections are past their handshakes and idle in a read
+      bin.stop()
+      http.stop()
+      // each socket drains whatever the server sent and then reaches EOF;
+      // a connection the server left open times out here instead
+      def drainsToEof(in: java.io.InputStream): Boolean =
+        try { while (in.read() != -1) (); true }
+        catch { case _: java.net.SocketTimeoutException => false }
+      assert(drainsToEof(bIn), "binary connection outlived stop()")
+      assert(drainsToEof(h2cSock.getInputStream), "h2c connection outlived stop()")
+    } finally { binSock.close(); h2cSock.close() }
   }
 }
