@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -9,83 +10,95 @@ import org.apache.spark.storage.StorageLevel
  * Ownership registry for operator-internal materializations.
  *
  * Operators materialize intermediates (fingerprints, unit vectors, vocab
- * tables, canonical edge sets) with `localCheckpoint` or `persist` so two
- * consumers don't recompute the producing pipeline. Each such block set
- * needs an OWNER: in a long-lived session (the driver's 156-query bench,
- * a notebook, a streaming job) unowned blocks accumulate in the
- * CacheManager / BlockManager for the life of the JVM — measured as a ~5×
- * session-level slowdown across the round-5 bench. Every operator
- * materialization goes through here, and the harness (`Bench`, `Verify`,
- * or any caller) invokes [[release]] once a query's output has been fully
- * consumed.
+ * tables, canonical edge sets, BSP round frames) with [[localCheckpoint]],
+ * [[checkpointCounted]] or [[persist]] so two consumers don't recompute the
+ * producing pipeline. Each such block set is OWNED by the thread that made
+ * it: the registrations live in a per-thread list, and [[release]] drops
+ * only the calling thread's blocks. A query that runs on one thread (a
+ * gate, a notebook cell, the server's compactor) therefore can never lose
+ * its blocks to a release on another thread — which matters because a
+ * `localCheckpoint` truncates lineage, so its blocks are unrecoverable once
+ * dropped. Unowned blocks would otherwise accumulate in the BlockManager
+ * for the life of the JVM (measured as a ~5× session-level slowdown across
+ * the round-5 bench).
  *
- * `release` is safe ONLY at a consumption boundary: dropping a persisted
- * dataset's blocks merely forces recompute, but a `localCheckpoint`
- * truncates lineage, so its blocks are unrecoverable once dropped — the
- * same contract as Spark's own `ContextCleaner`, made deterministic
- * instead of GC-timed.
+ * A caller runs [[release]] on the thread that ran the operator, once the
+ * result has been fully consumed (counted, written, collected) — the same
+ * contract as Spark's own `ContextCleaner`, made deterministic instead of
+ * GC-timed. [[sweep]] is for a harness that owns the whole session (Bench,
+ * Verify, the test suites): beyond the calling thread's release it stops
+ * every active stream and clears the session's SQL cache, which are
+ * session-wide and would break any other thread's running query.
+ *
+ * Checkpoints carry MEASURED statistics: the job that materializes the
+ * blocks also counts their rows and sums their bytes, and the resulting
+ * `LogicalRDD` reports exactly those. Catalyst's own join selection
+ * (`autoBroadcastJoinThreshold`) then decides broadcast vs shuffle for
+ * round frames from their real size, instead of from the origin plan's
+ * estimate (for a self-join origin, the product of its inputs' sizes).
  */
 object Materialize {
 
-  private val ownedDs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private val ownedRdds = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+  /** The calling thread's registrations; each entry drops one block set. */
+  private val owned =
+    ThreadLocal.withInitial[List[() => Unit]](() => Nil)
 
-  /** Persist with registry ownership. Lineage is KEPT: losing an executor
-    * recomputes blocks instead of failing, and an early [[release]] only
-    * costs recompute. */
+  private def own(dropBlocks: => Unit): Unit =
+    owned.set((() => try dropBlocks catch { case _: Throwable => () }) :: owned.get)
+
+  /** Persist, owned by the calling thread. Lineage is KEPT: losing an
+    * executor recomputes blocks instead of failing, and an early
+    * [[release]] only costs recompute. */
   def persist(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val p = df.persist(level)
-    ownedDs.add(p)
+    own(p.unpersist(blocking = false))
     p
   }
 
-  /** Eager localCheckpoint with registry ownership: the checkpointed
-    * internal RDD (the actual block holder — `Dataset.unpersist` never
-    * sees it) is captured for deterministic reclamation. */
-  def localCheckpoint(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr.rdd
-    }.foreach(ownedRdds.add)
-    cp
-  }
+  /** Eager localCheckpoint, owned by the calling thread: [[checkpointCounted]]
+    * with the count dropped. */
+  def localCheckpoint(df: DataFrame): DataFrame = checkpointCounted(df)._1
 
-  /** Eager localCheckpoint + count, registry-owned: the standard BSP
-    * round materialization (truncated plan — `persist` alone is NOT a
-    * substitute: it keeps the full logical tree, and an iterative
-    * operator's plan then embeds every prior round's tree, growing
-    * exponentially; measured as minutes of driver time stringifying/
-    * canonicalizing plans when tried). Callers use the count for
-    * convergence checks and for driver-side size-gated broadcast hints
-    * (the checkpointed LogicalRDD carries no stats, so the count IS the
-    * statistic the planner is missing).
+  /** Eager localCheckpoint + row count, owned by the calling thread: the
+    * standard BSP round materialization. The plan is truncated — `persist`
+    * alone is NOT a substitute: it keeps the full logical tree, and an
+    * iterative operator's plan then embeds every prior round's tree,
+    * growing exponentially (minutes of driver time stringifying and
+    * canonicalizing plans when tried).
     *
-    * The count is FUSED into the materialization job: one `runJob` over
-    * the checkpoint-marked internal RDD both caches every partition
-    * (local checkpointing persists on first compute) and tallies its
-    * rows. The previous shape — eager `Dataset.localCheckpoint` followed
-    * by `cp.count()` — paid a second job with two stages that re-read
-    * every materialized block; per BSP round × per gate that was pure
-    * scheduling overhead at bench scale and a full second pass over the
-    * round frame at 100 TB. Same `toRdd.map(_.copy())` + `fromDataset`
-    * construction as `Dataset.localCheckpoint` itself, so the resulting
-    * plan (partitioning, ordering, constraints) is identical. */
+    * One `runJob` over the checkpoint-marked internal RDD caches every
+    * partition (local checkpointing persists on first compute), counts its
+    * rows and sums their `UnsafeRow` bytes; the returned frame's
+    * `LogicalRDD` carries those as its statistics, with partitioning,
+    * ordering and constraints as `Dataset.localCheckpoint` builds them.
+    * The RDD is owned BEFORE the job runs, so the blocks a failed job
+    * already wrote are released too. */
   def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val spark = df.sparkSession
     val classicDs = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     val internal = classicDs.queryExecution.toRdd.map(_.copy())
     internal.localCheckpoint()
-    val counts = spark.sparkContext.runJob(internal,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        n
+    own(internal.unpersist(blocking = false))
+    // a non-UnsafeRow (rare: some leaf operators) is charged Catalyst's
+    // own per-row estimate for the schema
+    val otherRowBytes = 8L + df.schema.defaultSize
+    val parts = df.sparkSession.sparkContext.runJob(internal,
+      (it: Iterator[InternalRow]) => {
+        var rows = 0L
+        var bytes = 0L
+        while (it.hasNext) {
+          bytes += (it.next() match {
+            case u: UnsafeRow => u.getSizeInBytes.toLong
+            case _ => otherRowBytes
+          })
+          rows += 1
+        }
+        (rows, bytes)
       })
-    ownedRdds.add(internal)
+    val rows = parts.map(_._1).sum
     val cp = org.apache.spark.sql.graftshims.GraftShims
-      .checkpointedFrom(df, internal)
-    (cp, counts.sum)
+      .checkpointedFrom(df, internal, sizeInBytes = parts.map(_._2).sum, rowCount = rows)
+    (cp, rows)
   }
 
   /** Size-gated pin for multi-consumer intermediates: `localCheckpoint`
@@ -118,27 +131,24 @@ object Materialize {
     try df.unpersist(blocking = false) catch { case _: Throwable => () }
   }
 
-  /** Drop every owned block. Call once per query, after its result has
-    * been fully consumed (counted, written, collected). */
+  /** Drop every block the calling thread owns. Call once per query, on the
+    * thread that ran it, after its result has been fully consumed. Other
+    * threads' registrations are untouched. */
   def release(): Unit = {
-    var ds = ownedDs.poll()
-    while (ds != null) {
-      try ds.unpersist(blocking = false) catch { case _: Throwable => () }
-      ds = ownedDs.poll()
-    }
-    var r = ownedRdds.poll()
-    while (r != null) {
-      try r.unpersist(blocking = false) catch { case _: Throwable => () }
-      r = ownedRdds.poll()
-    }
+    val mine = owned.get
+    owned.remove()
+    mine.foreach(_())
   }
 
-  /** Outstanding owned materializations (spec hook). */
-  def ownedCount: Int = ownedDs.size() + ownedRdds.size()
+  /** The calling thread's outstanding registrations (spec hook). */
+  def ownedCount: Int = owned.get.size
 
-  /** Harness-side session sweep: owned blocks, stray SQL-cache entries,
+  /** Harness-side session sweep: the calling thread's owned blocks, plus
+    * the session-wide state a harness owns — stray SQL-cache entries,
     * finished memory-sink tables, and lingering streams. One call per
-    * query keeps a multi-hundred-query session at fresh-JVM speed. */
+    * query keeps a multi-hundred-query session at fresh-JVM speed. Not
+    * for library callers: it stops other threads' streams and cached
+    * frames; they call [[release]]. */
   def sweep(spark: SparkSession): Unit = {
     release()
     try spark.streams.active.foreach(_.stop()) catch { case _: Throwable => () }

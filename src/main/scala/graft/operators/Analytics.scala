@@ -458,36 +458,6 @@ object Analytics {
    * self-loop-free, and deduplicated — [[kCoreGate]]-style callers build it
    * with one DISTINCT over canonical pairs then a union of both directions.
    */
-  /** The checkpointed round frames carry NO statistics (a LogicalRDD
-    * plans as unknown-huge), so every BSP round's join used to get a
-    * sort-merge initial plan whose probe-side edge shuffle AQE could
-    * only downgrade to a local read, never remove — and the broadcast
-    * build it substituted at runtime was built per join. But the DRIVER
-    * knows each round frame's exact row count (the convergence check
-    * already pays for it): when an upper bound on the build side's
-    * hashed size fits the session's broadcast threshold, hint broadcast
-    * at plan time (guide §3.1 — "use an explicit hint when you know a
-    * side is small"). The gate scales with the session threshold and
-    * the measured counts, not a local constant: a 100 TB frame fails
-    * the bound and keeps the sort-merge + AQE path unchanged. */
-  def hintBroadcastIfSmall(df: DataFrame, rowBound: Long): DataFrame = {
-    val threshold = org.apache.spark.sql.internal.SQLConf.get
-      .autoBroadcastJoinThreshold
-    // 64 bytes/row of hashed-relation footprint: the hinted frames are
-    // 1-2 long columns, and LongHashedRelation's per-row overhead
-    // (key array slot + row object + padding) lands in the 40-80 B
-    // range — 32 B underestimated it and let frames near the gate
-    // exceed the threshold severalfold. The hint is also capped at
-    // 128 MB independent of the session threshold: broadcast() is
-    // unconditional once applied, and a user-raised threshold (e.g.
-    // 1 GB) must not scale a "small-side" hint into real driver
-    // memory pressure.
-    val cap = math.min(threshold, 128L << 20)
-    if (threshold > 0 && rowBound >= 0 && rowBound * 64 < cap)
-      broadcast(df)
-    else df
-  }
-
   def kCore(
       edges: DataFrame, // (src, dst), symmetrized
       k: Int,
@@ -498,14 +468,11 @@ object Analytics {
     var round = 0
     var converged = false
     while (round < maxRounds && !converged && n > 0) {
-      // alive ⊆ distinct src ⊆ the 2n directed rows — the free row bound
-      // for the broadcast gate; both semi-joins probe the SAME alive
-      // frame keyed the same way (no per-side rename), so the planner
-      // builds one broadcast relation and reuses it for the second join
-      val alive = hintBroadcastIfSmall(
-        e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("src").as("node")),
-        rowBound = 2 * n)
+      // both semi-joins probe the SAME alive frame keyed the same way (no
+      // per-side rename), so a broadcast build is planned once and reused
+      // for the second join
+      val alive = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select(col("src").as("node"))
       val (next, nextRows) = graft.Materialize.checkpointCounted(
         e.join(alive, e("src") === alive("node"), "left_semi")
           .join(alive, e("dst") === alive("node"), "left_semi")
@@ -544,42 +511,30 @@ object Analytics {
     // frames (disjoint by construction) instead of being re-materialized
     // whole every round: the old checkpoint-the-union shape rewrote
     // O(rounds·|V|) settled rows across the run and spent two extra jobs
-    // per round (isEmpty probe + union re-checkpoint). Each hop's exact
-    // row count (paid for by the convergence check) drives driver-side
-    // broadcast hints for the frontier expansion and the settled
-    // anti-join — plan-time broadcast for small frontiers, unchanged
-    // sort-merge + AQE for 100 TB ones. Memory across the run is the
-    // settled set ONCE (the parts are disjoint), strictly less than the
-    // old shape's settled-plus-next transient. The union is flat (one
-    // node per hop), so the plan grows linearly in hops, not
+    // per round (isEmpty probe + union re-checkpoint). Memory across the
+    // run is the settled set ONCE (the parts are disjoint), strictly less
+    // than the old shape's settled-plus-next transient. The union is flat
+    // (one node per hop), so the plan grows linearly in hops, not
     // exponentially.
     val e = graft.Materialize.localCheckpoint(
       edges.select(col("src").cast("long"), col("dst").cast("long")))
-    val (seed0, nSeeds) = graft.Materialize.checkpointCounted(
+    val seed0 = graft.Materialize.localCheckpoint(
       seeds.select(col("node").cast("long")).distinct()
         .withColumn("dist", lit(0L)))
     var settled: DataFrame = seed0
-    var nSettled = nSeeds
     var frontier: DataFrame = seed0.select(col("node"))
-    var nFrontier = nSeeds
     var hop = 1L
     var done = false
     while (hop <= maxHops && !done) {
-      val cand = e.join(
-          hintBroadcastIfSmall(frontier.withColumnRenamed("node", "src"),
-            rowBound = nFrontier),
-          Seq("src"))
+      val cand = e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node")).distinct()
       val (fresh, nFresh) = graft.Materialize.checkpointCounted(
-        cand.join(hintBroadcastIfSmall(settled, rowBound = nSettled),
-            Seq("node"), "left_anti")
+        cand.join(settled, Seq("node"), "left_anti")
           .withColumn("dist", lit(hop)))
       done = nFresh == 0L
       if (!done) {
         settled = settled.unionAll(fresh)
-        nSettled += nFresh
         frontier = fresh.select(col("node"))
-        nFrontier = nFresh
       }
       hop += 1
     }
@@ -618,16 +573,8 @@ object Analytics {
     // round 1 degenerates: neighbor labels are the (distinct) neighbor ids,
     // every count is 1, so "most frequent, ties to smallest" = min(dst) —
     // one aggregate instead of seed-checkpoint + join + two aggregates
-    // the label table holds one row per node in EVERY round, so the first
-    // checkpoint's count bounds the build side of every later step — the
-    // driver-side broadcast gate (hintBroadcastIfSmall) turns each
-    // round's edge⨝labels join into a plan-time broadcast at gate scale
-    // (no per-round probe shuffle of the edge frame) while a 100 TB
-    // label table fails the bound and keeps sort-merge + AQE unchanged
-    var nNodes = -1L
     def step(prev: DataFrame): DataFrame =
-      e.join(hintBroadcastIfSmall(
-          prev.withColumnRenamed("node", "dst"), rowBound = nNodes), Seq("dst"))
+      e.join(prev.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("src").as("node"))
@@ -641,8 +588,7 @@ object Analytics {
     var owned: Option[DataFrame] = None
     var r = 1
     while (r < rounds) {
-      val (cp, nl) = graft.Materialize.checkpointCounted(labels)
-      nNodes = nl
+      val cp = graft.Materialize.localCheckpoint(labels)
       owned.foreach(graft.Materialize.drop) // predecessor, now safe
       owned = Some(cp)
       labels = step(cp)
@@ -668,31 +614,23 @@ object Analytics {
   def hits(edges: DataFrame, iterations: Int = 2): DataFrame = {
     val Q = 1L << 20
     // materialize the canonical edge set once (it anchors FOUR join
-    // subtrees across the iterations) and use its exact row count to
-    // gate plan-time broadcast of the score tables: hub/auth hold one
-    // row per src/dst node ⊆ e's rows, so eRows bounds both build
-    // sides. Small graphs get BroadcastHashJoin in the initial plan (no
-    // probe-side shuffle of e per half-iteration); a 100 TB edge set
-    // fails the bound and keeps the sort-merge + AQE path unchanged.
+    // subtrees across the iterations).
     //
     // Each half-iteration's score frame is CHECKPOINTED (the kCore/
     // labelProp round discipline): without it every half-iteration's tree
     // embedded the prior one TWICE (once under the crossJoined max, once
     // under the raw aggregate), so the plan doubled per half-iteration —
-    // 316 k chars / 224 join nodes at 2 iterations before the r16 hints,
-    // still 155 k / 88 after. With per-half-iteration truncation the plan
+    // 316 k chars / 224 join nodes at 2 iterations before r16, still
+    // 155 k / 88 after it. With per-half-iteration truncation the plan
     // is constant-size per round and the returned frame is two selects
-    // over the last two checkpoints. The checkpoint count is exact, so
-    // the broadcast gate runs on the true score-table size instead of the
-    // eRows upper bound; predecessor frames are dropped as soon as their
-    // successor materializes (only the two returned frames stay owned).
-    val (e, eRows) = graft.Materialize.checkpointCounted(
+    // over the last two checkpoints; predecessor frames are dropped as
+    // soon as their successor materializes (only the two returned frames
+    // stay owned).
+    val e = graft.Materialize.localCheckpoint(
       edges.select(col("src"), col("dst")).distinct())
     // iteration 1's hub table (every src node at weight Q) stays lazy —
     // it is read exactly once, by araw's join below
-    var hub = hintBroadcastIfSmall(
-      e.select(col("src").as("node")).distinct().withColumn("h", lit(Q)),
-      rowBound = eRows)
+    var hub = e.select(col("src").as("node")).distinct().withColumn("h", lit(Q))
     var auth: DataFrame = null
     var prevAuth: Option[DataFrame] = None
     var prevHub: Option[DataFrame] = None
@@ -704,23 +642,21 @@ object Analytics {
       val araw = e.join(hub, e("src") === hub("node"))
         .groupBy(col("dst")).agg(sum(col("h")).as("raw"))
       val amax = araw.agg(max(col("raw")).as("mx"))
-      val (authCp, aRows) = graft.Materialize.checkpointCounted(
+      auth = graft.Materialize.localCheckpoint(
         araw.crossJoin(broadcast(amax))
           .select(col("dst").as("node"),
             expr(s"CAST(CAST(raw AS DECIMAL(38,0)) * $Q div mx AS BIGINT)").as("a")))
       prevAuth.foreach(graft.Materialize.drop)
-      prevAuth = Some(authCp)
-      auth = hintBroadcastIfSmall(authCp, aRows)
+      prevAuth = Some(auth)
       val hraw = e.join(auth, e("dst") === auth("node"))
         .groupBy(col("src")).agg(sum(col("a")).as("raw"))
       val hmax = hraw.agg(max(col("raw")).as("mx"))
-      val (hubCp, hRows) = graft.Materialize.checkpointCounted(
+      hub = graft.Materialize.localCheckpoint(
         hraw.crossJoin(broadcast(hmax))
           .select(col("src").as("node"),
             expr(s"CAST(CAST(raw AS DECIMAL(38,0)) * $Q div mx AS BIGINT)").as("h")))
       prevHub.foreach(graft.Materialize.drop)
-      prevHub = Some(hubCp)
-      hub = hintBroadcastIfSmall(hubCp, hRows)
+      prevHub = Some(hub)
     }
     auth.select(lit("auth").as("side"), col("node"), col("a").as("score"))
       .unionAll(hub.select(lit("hub").as("side"), col("node"), col("h").as("score")))

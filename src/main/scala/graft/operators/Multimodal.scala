@@ -70,8 +70,16 @@ object Multimodal {
     // plan re-runs from the logical plan). An exchange-free plan's RDD is
     // pure lineage — the probe costs planning only, never a job. And an
     // input that already has an exchange has already had its parallelism
-    // decided by that exchange; the floor has nothing to add.
-    val exchangeFree = !ds.queryExecution.sparkPlan.exists {
+    // decided by that exchange; the floor has nothing to add. The check
+    // reads the plan AFTER EnsureRequirements (AQE's initial plan, or the
+    // executed plan without AQE): the planner's `sparkPlan` has no
+    // exchanges yet, so an aggregate or join input would pass it.
+    val planned = ds.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case p => p
+    }
+    val exchangeFree = !planned.exists {
       case _: org.apache.spark.sql.execution.exchange.Exchange => true
       case _ => false
     }

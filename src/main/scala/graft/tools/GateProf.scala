@@ -5,9 +5,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Fresh-JVM single-gate profiler: `runMain graft.tools.GateProf <name> [reps]`
-  * against `SPARK_GRAFT_SF_DIR`. Beyond GateTime's wall clock it reports,
-  * per rep: Spark job count, stage count, task count, summed task time,
-  * summed shuffle read/write bytes, and summed GC time — enough to decide
+  * against `SPARK_GRAFT_SF_DIR`. It reports, per rep: wall time, Spark job
+  * count, stage count, task count, summed task time, summed shuffle
+  * read/write bytes, and summed GC time — enough to decide
   * whether a gate's wall time is scheduling overhead (many tiny jobs/
   * stages), shuffle volume, or real compute (guide §1/§7 empirical loop).
   */

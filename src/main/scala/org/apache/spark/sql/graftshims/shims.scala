@@ -59,21 +59,25 @@ object GraftShims {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** A DataFrame over an already-materialized internal RDD, carrying the
-    * origin frame's schema, partitioning, ordering and constraints — the
-    * exact construction `Dataset.localCheckpoint` performs
-    * (`LogicalRDD.fromDataset`), exposed so a caller can materialize the
-    * RDD itself (e.g. fusing a row count into the checkpointing job)
-    * instead of paying a separate count pass over the blocks. */
+  /** A DataFrame over an already-materialized internal RDD, with the
+    * partitioning, ordering and constraints `Dataset.localCheckpoint`
+    * gives it (`LogicalRDD.fromDataset`) but the statistics the caller
+    * MEASURED while materializing it. `fromDataset` copies the origin
+    * plan's optimizer estimate, which for a join origin is the product of
+    * its inputs' sizes — so the measured bytes are what lets Catalyst
+    * pick broadcast for a small checkpointed frame. */
   def checkpointedFrom(
       origin: org.apache.spark.sql.DataFrame,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
-      : org.apache.spark.sql.DataFrame = {
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      sizeInBytes: Long,
+      rowCount: Long): org.apache.spark.sql.DataFrame = {
     val classic = origin.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      classic.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD
-        .fromDataset(rdd, classic, isStreaming = false))
+    val lr = org.apache.spark.sql.execution.LogicalRDD
+      .fromDataset(rdd, classic, isStreaming = false)
+    val measured = org.apache.spark.sql.catalyst.plans.logical
+      .Statistics(sizeInBytes, rowCount = Some(rowCount))
+    org.apache.spark.sql.classic.Dataset.ofRows(classic.sparkSession,
+      lr.copy()(classic.sparkSession, Some(measured), Some(lr.constraints)))
   }
 
   /** Drain the async listener bus: block until every queued event has been

@@ -21,6 +21,30 @@ class MediaCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  test("parallelismFloor starts no job for an input that already shuffles") {
+    import org.apache.spark.sql.functions.col
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val agg = spark.range(0, 100, 1, 4).groupBy((col("id") % 3).as("g")).count()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.graftshims.GraftShims.waitListenerBusEmpty(spark, 10000)
+      jobs.set(0)
+      val out = Multimodal.parallelismFloor(agg)
+      org.apache.spark.sql.graftshims.GraftShims.waitListenerBusEmpty(spark, 10000)
+      assert(jobs.get == 0)
+      assert(out eq agg)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a scan-shaped single-partition input still gets the floor
+    assert(Multimodal.parallelismFloor(spark.range(0, 100, 1, 1))
+      .rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+  }
+
   test("sniff identifies containers from magic bytes") {
     val png = MediaCodec.encodeGrayPng(Array.fill(64)(7), 8, 8)
     assert(MediaCodec.sniff(png) == "png")

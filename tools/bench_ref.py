@@ -12,7 +12,7 @@ regression-aware:
 
 - computes the elementwise MIN across the window files' `queries` maps
   (and `control` maps), substituting any --retime overrides (fresh-JVM
-  GateTime evidence);
+  GateProf evidence);
 - compares the result against PRIOR_REF (the PRIOR round's committed
   map): every gate whose new best-of exceeds 2x the prior value (and by
   more than 1s, the Bench retimer's own noise floor) is printed as a
@@ -83,7 +83,7 @@ def main(argv):
         for k, p, v in regressions:
             ratio = f"{v / p:.1f}x" if p > 0 else "inf"
             print(f"REGRESSION  {k}: prior {p:.3f}s -> best-of {v:.3f}s "
-                  f"({ratio}). Fresh-JVM retime (GateTime) and pass "
+                  f"({ratio}). Fresh-JVM retime (GateProf) and pass "
                   f"--retime {k}=<sec>, or justify in PLANS and pass --accept {k}")
         print(f"\n{len(regressions)} unexplained regression(s) vs the prior "
               f"committed map — reference NOT written.")
