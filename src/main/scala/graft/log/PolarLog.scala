@@ -57,6 +57,21 @@ final case class PolarRecord(
     value: Array[Byte],
     part: Int)
 
+/** A record refused by its topic's policy (`max.message.bytes`, the
+  * KIP-937 timestamp bounds) at the append. It is thrown before any commit,
+  * so the refused produce registered nothing and may be retried without
+  * the refused records. Spark wraps it; [[RecordRejectedException.in]]
+  * finds it on the cause chain. */
+final class RecordRejectedException(message: String)
+  extends IllegalArgumentException(message)
+
+object RecordRejectedException {
+  def in(t: Throwable): Option[RecordRejectedException] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case r: RecordRejectedException => r
+    }
+}
+
 object PolarLog {
 
   val ValueSchema: StructType = StructType(Seq(
@@ -89,20 +104,9 @@ object PolarLog {
     * fail the produce like the reference's 400 response. */
   val DefaultMaxMessageSize: Int = 1 << 20
 
-  /** The produce-path record size cap for a topic: its `max.message.bytes`
-    * prop when configured (topic config is authoritative, Kafka semantics),
-    * else the caller's server-level value. Malformed persisted values
-    * degrade to the fallback — a bad config must never brick produces. */
-  private def effectiveMaxMessageSize(
-      props: Map[String, String], fallback: Int): Int =
-    props.get(TopicProps.MaxMessageBytes)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(fallback)
-
   /** The segment roll size for a topic: its `segment.bytes` prop when
-    * configured, else the caller's value — same authority rule as
-    * [[effectiveMaxMessageSize]]. */
+    * configured (topic config is authoritative, Kafka semantics), else the
+    * caller's value. Malformed persisted values degrade to the fallback. */
   private[graft] def effectiveMaxFileBytes(
       props: Map[String, String], fallback: Long): Long =
     props.get(TopicProps.SegmentBytes)
@@ -110,23 +114,13 @@ object PolarLog {
       .filter(_ > 0L)
       .getOrElse(fallback)
 
-  /** Kafka's `message.timestamp.type=LogAppendTime`: the topic forces the
-    * stored timestamp to the APPEND wall-clock, discarding any
-    * producer-supplied event time — so ts-seek, time-window reads and
-    * watermarks key on broker time. Default (absent / `CreateTime`) keeps
-    * the producer's timestamp, the reference's only behavior
-    * (`/root/reference/internal/producing/server.go:178-183`). */
-  private[graft] def logAppendTime(props: Map[String, String]): Boolean =
-    props.get(TopicProps.MessageTimestampType)
-      .exists(_.trim == "LogAppendTime")
-
   /** Effective (beforeMaxMs, afterMaxMs) CreateTime validation bounds —
     * KIP-937's directional pair, with Kafka 3.6's compatibility rule: the
     * legacy symmetric `message.timestamp.difference.max.ms` fills
     * whichever directional bound is not explicitly set. Long.MaxValue =
-    * unbounded (the default). Callers skip the check entirely under
-    * LogAppendTime, matching the broker (it stamps its own clock, so
-    * producer timestamps are discarded, not validated). */
+    * unbounded (the default). [[graft.sources.RecordPolicy]] skips the
+    * check entirely under LogAppendTime, matching the broker (it stamps
+    * its own clock, so producer timestamps are discarded, not validated). */
   private[graft] def timestampBounds(
       props: Map[String, String]): (Long, Long) = {
     def ms(key: String): Option[Long] = props.get(key)
@@ -137,14 +131,6 @@ object PolarLog {
      ms(TopicProps.MessageTimestampAfterMaxMs).orElse(legacy)
        .getOrElse(Long.MaxValue))
   }
-
-  /** No timestamp bounds configured — the hot-path fast exit. */
-  private[graft] val UnboundedTs: (Long, Long) = (Long.MaxValue, Long.MaxValue)
-
-  /** Bounds at or above this many ms clamp to unbounded: larger than the
-    * span of every representable timestamp (±~9.3e15 ms of epoch), yet
-    * small enough that `broker_clock ± bound` can never overflow Long. */
-  private[graft] val MaxTsBoundMs: Long = 100_000_000_000_000_000L // 1e17
 
   /** The topic's `file.delete.delay.ms`: 0 (absent/malformed/non-positive)
     * = eager physical deletion, the engine's pre-existing behavior. */
@@ -175,48 +161,21 @@ object PolarLog {
     }
   }
 
-  /**
-   * Append records to a topic. Input needs a `value` column (binary or
-   * string); `partitionKey` (string) and `timestamp` are optional.
-   *
-   * Routes through the DSv2 sink ([[graft.sources.PolarWrite]]): the plan
-   * is cluster-by-part + local sort; executors stream per-partition files
-   * with write-time dense offsets; visibility is a single metadata CAS at
-   * commit (files land first but are unregistered until then, so readers
-   * never see a torn produce).
-   */
-  /** The producer-schema → envelope projection shared by [[produce]] and
-    * [[produceStream]]: default key/timestamp columns, the oversize-value
-    * rejection, token + placement, and the arrival order materialized as
-    * `__oN` columns (the DSv2 write requires a LOCAL sort on (part, __o*):
-    * spillable, no window buffer). Pure column ops — valid on batch and
-    * streaming frames alike. */
+  /** The producer-schema → envelope projection shared by every produce
+    * entry point: default key/timestamp columns, the destination `topic`
+    * (a literal for a single-topic produce, the frame's column for a
+    * routed one), token + placement, and the arrival order materialized
+    * as `__oN` columns (the DSv2 write requires a LOCAL sort on
+    * (topic, part, __o*): spillable, no window buffer). Pure column ops —
+    * valid on batch and streaming frames alike. Record policy (size cap,
+    * timestamp type and bounds) is not applied here: the writer applies
+    * each topic's policy at the append. */
   private def envelope(
       df: DataFrame,
-      cfg: TopicConfig,
-      orderBy: Seq[Column],
-      maxMessageSize: Int,
-      appendTime: Boolean,
-      tsBounds: (Long, Long)): DataFrame =
-    envelope(df, cfg.clusterSize, cfg.rangesPerToken, orderBy, maxMessageSize,
-      keepTopic = false, appendTime = appendTime, tsBounds = tsBounds)
-
-  private def envelope(
-      df: DataFrame,
+      topic: Column,
       clusterSize: Int,
       rangesPerToken: Int,
-      orderBy: Seq[Column],
-      maxMessageSize: Int,
-      // row-routed produce: keep the per-row `topic` column in the
-      // envelope (the routed write clusters and commits by it)
-      keepTopic: Boolean,
-      // message.timestamp.type=LogAppendTime: override any producer
-      // timestamp with the append wall-clock (query-constant, like the
-      // broker stamping one batch)
-      appendTime: Boolean = false,
-      // KIP-937 CreateTime bounds (beforeMaxMs, afterMaxMs) vs the broker
-      // clock; Long.MaxValue = unbounded. Ignored when appendTime.
-      tsBounds: (Long, Long) = UnboundedTs): DataFrame = {
+      orderBy: Seq[Column]): DataFrame = {
     // resolver-consistent intake: `withColumn` below REPLACES an existing
     // column case-insensitively (Spark's default resolver), so a frame
     // carrying PARTITIONKEY/TIMESTAMP would otherwise pass the exact-case
@@ -244,75 +203,33 @@ object PolarLog {
       if (canonical.columns.contains("partitionKey")) canonical
       else canonical.withColumn("partitionKey", lit(null).cast(StringType))
     val withTs =
-      if (appendTime) withKey.withColumn("timestamp", current_timestamp())
-      else if (withKey.columns.contains("timestamp")) withKey
+      if (withKey.columns.contains("timestamp")) withKey
       else withKey.withColumn("timestamp", current_timestamp())
-    // KIP-937 CreateTime validation: reject records whose event time is
-    // too far behind/ahead of the broker (append) clock. Inline in the
-    // projection like the size cap — codegen'd, zero cost unless violated.
-    // The broker clock is `current_timestamp()` (query-constant, the same
-    // one-stamp-per-batch rule as LogAppendTime; in a streaming produce it
-    // is each epoch's batch timestamp). Null timestamps pass (Kafka's
-    // NO_TIMESTAMP sentinel is never validated); each side is applied only
-    // when finite so the unbounded default adds nothing to the plan.
-    // Comparison is in MILLIS — the configs' own unit — and bounds beyond
-    // MaxTsBoundMs clamp to unbounded: every representable timestamp is
-    // within ±9.3e15 ms of epoch, so a ≥1e17 ms window can never exclude
-    // one, and the clamp keeps `now ± bound` inside Long (ANSI mode would
-    // otherwise turn an absurd-but-valid config into an overflow error).
-    def clampUnbounded(ms: Long): Long =
-      if (ms >= MaxTsBoundMs) Long.MaxValue else ms
-    val (beforeMaxMs, afterMaxMs) =
-      if (appendTime) UnboundedTs
-      else (clampUnbounded(tsBounds._1), clampUnbounded(tsBounds._2))
-    val bounded =
-      if (beforeMaxMs == Long.MaxValue && afterMaxMs == Long.MaxValue) withTs
-      else {
-        val ts = col("timestamp").cast(TimestampType)
-        val nowMs = unix_millis(current_timestamp())
-        var ok: Column = lit(true)
-        if (beforeMaxMs != Long.MaxValue)
-          ok = ok && unix_millis(ts) >= nowMs - lit(beforeMaxMs)
-        if (afterMaxMs != Long.MaxValue)
-          ok = ok && unix_millis(ts) <= nowMs + lit(afterMaxMs)
-        withTs.withColumn("timestamp",
-          when(ts.isNull || ok, ts)
-            .otherwise(raise_error(concat(
-              lit("record timestamp "), ts.cast(StringType),
-              lit(" out of range vs broker time (message.timestamp." +
-                s"before.max.ms=$beforeMaxMs, after.max.ms=$afterMaxMs)")))
-              .cast(TimestampType)))
-      }
-    // oversize-value rejection inline in the projection (codegen'd, zero
-    // cost unless violated — the produce-path 400 of the reference,
-    // `internal/producing/server.go:146-151`)
-    // null values pass: they are legal records (and the compacted view's
-    // tombstones); length(NULL) <= max is NULL, which would otherwise fall
-    // through to the error branch
-    val sized =
-      if (maxMessageSize == Int.MaxValue)
-        // routed produce: per-destination caps are enforced at the append
-        // (a topic prop may be wider than any single inline bound)
-        bounded.withColumn("value", col("value").cast(BinaryType))
-      else bounded.withColumn("value",
-        when(col("value").isNull ||
-            length(col("value").cast(BinaryType)) <= maxMessageSize,
-          col("value").cast(BinaryType))
-          .otherwise(raise_error(concat(
-            lit(s"record value exceeds maxMessageSize=$maxMessageSize bytes: "),
-            length(col("value").cast(BinaryType)).cast(StringType)))
-            .cast(BinaryType)))
     val order = if (orderBy.nonEmpty) orderBy
       else Seq(col("timestamp"), xxhash64(col("value")))
     val orderCols = order.zipWithIndex.map { case (c, i) => c.as(s"__o$i") }
-    sized
+    withTs
+      .withColumn("value", col("value").cast(BinaryType))
       .withColumn("token", murmur3_h1(col("partitionKey")))
       .withColumn("part", placementExpr(clusterSize, rangesPerToken))
-      .select((if (keepTopic) Seq(col("topic").cast(StringType)) else Nil) ++
-        Seq(col("partitionKey"), col("token"), col("part"),
-          col("timestamp"), col("value")) ++ orderCols: _*)
+      .select(Seq(topic.cast(StringType).as("topic"), col("partitionKey"),
+        col("token"), col("part"), col("timestamp"), col("value")) ++
+        orderCols: _*)
   }
 
+  /**
+   * Append records to a topic. Input needs a `value` column (binary or
+   * string); `partitionKey` (string) and `timestamp` are optional.
+   *
+   * A routed produce of one declared topic through the DSv2 sink
+   * ([[graft.sources.PolarRoutedWrite]]): the plan is cluster-by-part +
+   * local sort; executors check each record against the topic's policy
+   * and stream per-partition files with write-time dense offsets;
+   * visibility is a single metadata CAS at commit (files land first but
+   * are unregistered until then, so readers never see a torn produce).
+   * A topic's `max.message.bytes` overrides `maxMessageSize`, and its
+   * `segment.bytes` overrides `maxFileBytes`.
+   */
   def produce(
       df: DataFrame,
       cfg: TopicConfig,
@@ -339,23 +256,15 @@ object PolarLog {
       m
     }
 
-    // Kafka's `max.message.bytes`: the topic's own cap, when configured,
-    // overrides the server-level default the caller passed — the topic
-    // config is authoritative at the broker, exactly kafka-configs;
-    // `message.timestamp.type=LogAppendTime` likewise forces broker time
-    val enveloped = envelope(df, cfg, orderBy,
-      effectiveMaxMessageSize(meta0.props, maxMessageSize),
-      appendTime = logAppendTime(meta0.props),
-      tsBounds = timestampBounds(meta0.props))
-
-    var writer = enveloped.write
+    var writer = envelope(df, lit(cfg.topic), cfg.clusterSize,
+        cfg.rangesPerToken, orderBy).write
       .format("polar")
       .option("root", cfg.root)
       .option("topic", cfg.topic)
       .option("clusterSize", cfg.clusterSize.toString)
       .option("rangesPerToken", cfg.rangesPerToken.toString)
-      .option("maxFileBytes",
-        effectiveMaxFileBytes(meta0.props, maxFileBytes).toString)
+      .option("maxMessageSize", maxMessageSize.toString)
+      .option("maxFileBytes", maxFileBytes.toString)
     txn.foreach { case (sinkId, batchId) =>
       writer = writer.option("txnSinkId", sinkId)
         .option("txnBatchId", batchId.toString)
@@ -480,12 +389,8 @@ object PolarLog {
     graft.GraftSession.ensureFunctions(spark)
     require(df.columns.contains("topic"),
       "row-routed produce requires a 'topic' column")
-    // destinations are data-dependent, so the record-size cap CANNOT be
-    // baked into the envelope (a topic prop may be wider OR narrower than
-    // the server default) — the routed writer enforces it per destination
-    // at the append; Int.MaxValue disables the envelope-level check
-    envelope(df, template.clusterSize, template.rangesPerToken, orderBy,
-      Int.MaxValue, keepTopic = true)
+    envelope(df, col("topic"), template.clusterSize, template.rangesPerToken,
+      orderBy)
       .write
       .format("polar")
       .option("root", template.root)
@@ -509,9 +414,8 @@ object PolarLog {
     graft.GraftSession.ensureFunctions(df.sparkSession)
     require(df.columns.contains("topic"),
       "row-routed produce requires a 'topic' column")
-    // per-destination caps enforced at the append (see produceRouted)
-    envelope(df, template.clusterSize, template.rangesPerToken, orderBy,
-      Int.MaxValue, keepTopic = true)
+    envelope(df, col("topic"), template.clusterSize, template.rangesPerToken,
+      orderBy)
       .writeStream
       .format("polar")
       .option("root", template.root)
@@ -540,28 +444,16 @@ object PolarLog {
       maxFileBytes: Long = graft.sources.PolarWrite.DefaultMaxFileBytes)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     graft.GraftSession.ensureFunctions(df.sparkSession)
-    // per-topic max.message.bytes / segment.bytes resolved once at
-    // stream-build time (the size check is compiled into the plan); a
-    // later config change takes effect on query restart, same as a Kafka
-    // producer's metadata refresh. A topic never produced to has no doc —
-    // empty props is CORRECT there; a read failure on an EXISTING doc
-    // throws (after read()'s retries) instead of silently degrading the
-    // topic's configured semantics (a swallowed error here would stream
-    // CreateTime timestamps onto a LogAppendTime topic for the query's
-    // whole lifetime)
-    val props = LogMetadata.readIfExists(cfg).map(_.props)
-      .getOrElse(Map.empty[String, String])
-    envelope(df, cfg, orderBy, effectiveMaxMessageSize(props, maxMessageSize),
-      appendTime = logAppendTime(props),
-      tsBounds = timestampBounds(props))
+    // the topic's props are read once per epoch, as the sink plans it
+    envelope(df, lit(cfg.topic), cfg.clusterSize, cfg.rangesPerToken, orderBy)
       .writeStream
       .format("polar")
       .option("root", cfg.root)
       .option("topic", cfg.topic)
       .option("clusterSize", cfg.clusterSize.toString)
       .option("rangesPerToken", cfg.rangesPerToken.toString)
-      .option("maxFileBytes",
-        effectiveMaxFileBytes(props, maxFileBytes).toString)
+      .option("maxMessageSize", maxMessageSize.toString)
+      .option("maxFileBytes", maxFileBytes.toString)
       .outputMode("append")
   }
 

@@ -751,9 +751,11 @@ class PolarHttpServer(
           case f: graft.log.WriterLease.FencedWriterException =>
             throw HttpError(409, s"Fenced: ${f.getMessage}")
           case cause =>
+            // a record refused by its topic's policy is the client's 400
+            graft.log.RecordRejectedException.in(cause)
+              .foreach(r => throw HttpError(400, r.getMessage))
             val msg = Option(cause).map(_.getMessage).getOrElse(e.getMessage)
-            if (msg != null && msg.contains("maxMessageSize")) throw HttpError(400, msg)
-            else throw HttpError(500, s"Produce failed: $msg")
+            throw HttpError(500, s"Produce failed: $msg")
         }
     }
   }

@@ -1,6 +1,6 @@
 package graft.serving
 
-import graft.log.{PolarLog, TopicConfig}
+import graft.log.{PolarLog, RecordRejectedException, TopicConfig}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
@@ -108,30 +108,22 @@ class ProduceCoalescer(
                 produceBatch(topic, items)
                 items.foreach(_.done.complete(()))
               } catch {
-                // a PER-RECORD validation failure (size cap, KIP-937
-                // timestamp bounds — the envelope's raise_error messages)
-                // must not fail the whole linger window: the innocent
-                // neighbors would get the guilty request's 400, not
-                // retry, and silently lose their never-persisted records.
-                // Re-produce item-by-item so only the guilty ones fail —
-                // failure-path-only cost, bounded by the batch size.
-                // match the EXACT envelope raise_error texts ("exceeds
-                // maxMessageSize", "out of range vs broker time") — a looser
-                // substring like "timestamp" also matches plan/schema text
-                // embedded in unrelated Spark failures (the envelope has a
-                // `timestamp` column), and re-producing after a failure that
-                // landed its metadata CAS would duplicate the whole window
+                // a record refused by its topic's policy must not fail the
+                // whole linger window: the innocent neighbours would get the
+                // guilty request's 400 and lose records they never had
+                // persisted. The refusal is thrown at the append, before any
+                // commit, so nothing of the window was registered and
+                // re-producing item by item cannot duplicate — only the
+                // guilty requests fail. Failure-path-only cost, bounded by
+                // the batch size.
                 case e: Exception if items.size > 1 &&
-                    e.getMessage != null &&
-                    (e.getMessage.contains("exceeds maxMessageSize") ||
-                      e.getMessage.contains("out of range vs broker time")) =>
+                    RecordRejectedException.in(e).isDefined =>
                   items.foreach { i =>
                     try { produceBatch(topic, Vector(i)); i.done.complete(()) }
-                    catch {
-                      case e2: Exception => i.done.completeExceptionally(e2)
-                    }
+                    catch { case e2: Exception => i.done.completeExceptionally(rejectionOr(e2)) }
                   }
-                case e: Exception => items.foreach(_.done.completeExceptionally(e))
+                case e: Exception =>
+                  items.foreach(_.done.completeExceptionally(rejectionOr(e)))
               }
             }
             flushCount += 1
@@ -185,6 +177,11 @@ class ProduceCoalescer(
 }
 
 object ProduceCoalescer {
+  /** A request refused by its topic's record policy fails with the
+    * refusal itself, not Spark's wrapping of it. */
+  private def rejectionOr(e: Exception): Throwable =
+    RecordRejectedException.in(e).getOrElse(e)
+
   val NdjsonContentType = "application/x-ndjson"
   val FramesContentType = "application/vnd.polar.producer.frames"
   /** The binary transport's payload framing is the same `{u32-BE len}{bytes}`

@@ -4,87 +4,126 @@ import graft.log.{FileEntry, LogMetadata, RingTemplate, TopicConfig}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder => VSortOrder}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortDirection, SortOrder => VSortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
 /**
- * Per-row `topic` routing for the sink (SURVEY §2 A1/A8) — the Kafka
- * writer contract: when no `topic` option is set and the frame carries a
- * `topic` column, each row is produced to ITS topic, in one pass over the
- * data. The reference's produce path is per-record-topic the same way
- * (`/root/reference/internal/producing/server.go:126-132` — the topic is
- * an URL parameter per request, and one producer fans out across topics).
+ * The sink's one produce path (SURVEY §7.4): commit-time offset assignment
+ * with no window sort, for one declared topic or for rows that each name
+ * their topic. The reference's produce path takes the topic per request
+ * the same way (reference `internal/producing/server.go:126-132`),
+ * so one producer fans out across topics.
  *
- * Shape (the routed twin of [[PolarWrite]]):
+ * Shape, mirroring the reference coalescer's counter semantics
+ * (reference `internal/producing/coalescer.go:24-27,166-167` — a
+ * single writer per partition assigns dense offsets by counter increment
+ * in arrival order):
  *
- *  1. CLUSTERED by `(topic, part)` + locally SORTED by `(topic, part,
- *     __o*)` — every (topic, partition) pair lands wholly in one task, so
- *     the single-writer-per-partition offset assignment holds per topic
- *     exactly as it does for a single-topic produce.
- *  2. Each task opens one [[PolarDataWriter]] per topic it encounters,
- *     reading that topic's offset bases from its root doc ON FIRST
- *     ENCOUNTER (executor-side, one GET per topic per task — the topic
- *     set is data-dependent, so there is nothing for the driver to read
- *     up front). Offsets baked from a stale base are absorbed by the
- *     commit-time rebase, the same mechanism that already covers
- *     streaming epochs and concurrent producers.
- *  3. The driver groups commit messages BY TOPIC and commits each topic
- *     through its own [[PolarBatchWrite]] CAS — per-topic atomicity, the
- *     multi-topic produce being a sequence of independent topic commits
- *     (the reference has no cross-topic transaction either). An abort
- *     after a partial commit reclaims only the UNCOMMITTED topics' files;
- *     committed topics stay (their CAS landed — they are the log now).
+ *  1. The `Write` declares `RequiresDistributionAndOrdering`: CLUSTERED by
+ *     `(topic, part)` and locally SORTED by `(topic, part, __o0, __o1, …)`
+ *     — for a declared topic, by `part` and `(part, __o*)`. Spark's
+ *     exchange is the leader router: every (topic, partition) lands wholly
+ *     in one task, the single-writer invariant. The sort is spillable and
+ *     per task, not a window buffer.
+ *  2. Each task opens one [[PolarDataWriter]] per topic. A DECLARED topic
+ *     (the `topic` option, which overrides any `topic` column) has its
+ *     metadata read once on the driver — at plan time for a batch, once
+ *     per epoch for a stream — and its offset bases and [[RecordPolicy]]
+ *     ride the factory, so tasks read none. A row-routed topic is read on
+ *     first encounter in the task (one GET per topic per task: the topic
+ *     set is data-dependent). The writer checks each record against its
+ *     topic's policy, assigns `offset = base(part) + n++`, and streams
+ *     per-partition parquet files. Files get their final names but stay
+ *     INVISIBLE until registered: readers only see the metadata registry.
+ *  3. Commit messages carry exact per-file stats `(part, name, minOffset,
+ *     maxOffset, count, bytes)`. The driver groups them by topic and
+ *     commits each topic through its own [[PolarBatchWrite]]: one
+ *     compare-and-set of the topic metadata registers the files and
+ *     advances the tails. A lost CAS rebases this produce's own files onto
+ *     the new tails and retries. A declared topic commits even when no row
+ *     reached it, so an empty overwrite still replaces and an empty epoch
+ *     still records its txn; overwrite, `transactional.id` and `txnSinkId`
+ *     need a declared topic. A multi-topic commit is a sequence of
+ *     independent topic commits (the reference has no cross-topic
+ *     transaction either), journaled first so the retention sweep can
+ *     drive a crashed one to all-or-none ([[PolarRoutedWrite.recoverJournals]]).
+ *     An abort after a partial commit reclaims only the UNCOMMITTED
+ *     topics' files.
  *
  * Streaming epochs commit with the (queryId, epochId) txn per topic, so a
- * replayed epoch is idempotent PER TOPIC: topics that committed before a
- * crash drop the replay, topics that did not register it now.
+ * replayed epoch is dropped per topic at each CAS authority —
+ * exactly-once visibility across failure and replay.
  *
- * At 100 TB: one exchange routes rows to (topic, partition) owners — the
- * same shuffle a single-topic produce pays — and metadata I/O is
- * O(topics), not O(rows) or O(tasks × partitions).
+ * At 100 TB: zero listing, zero footer reads, zero renames (the
+ * Delta/Iceberg metadata-log pattern); the only data movement is the
+ * routing exchange itself, and metadata I/O is O(topics), not O(rows) or
+ * O(tasks × partitions).
  */
 class PolarRoutedWrite(
     template: RingTemplate,
     schema: StructType,
     maxFileBytes: Long,
-    // server-level record-size cap, the fallback where a destination has
-    // no max.message.bytes prop — enforced at the append (the routed
-    // envelope cannot bake a per-destination cap: topics are data-dependent)
+    // server-level record-size cap, for topics without max.message.bytes
     defaultMaxMessageSize: Int = graft.log.PolarLog.DefaultMaxMessageSize,
     queryId: String = "",
-    txnRetentionMs: Long = PolarWrite.DefaultTxnRetentionMs)
+    txnRetentionMs: Long = PolarWrite.DefaultTxnRetentionMs,
+    declared: Option[String] = None,
+    txn: Option[(String, Long)] = None,
+    // INSERT OVERWRITE: the declared topic's commit replaces its segments
+    replaceAll: Boolean = false,
+    // producer transaction (transactional.id, fencing epoch): this batch's
+    // entries register MARKED; Transactions.commit makes them stable
+    producerTxn: Option[(String, Long)] = None)
     extends Write with RequiresDistributionAndOrdering {
 
-  override def requiredDistribution(): Distribution =
-    Distributions.clustered(Array(
-      Expressions.identity("topic"), Expressions.identity("part")))
+  // a declared topic takes every row, so `part` alone places them
+  private val keys = (if (declared.isEmpty) Seq("topic") else Nil) :+ "part"
 
+  override def requiredDistribution(): Distribution =
+    Distributions.clustered(keys.map(k => Expressions.identity(k): Expression).toArray)
+
+  /** The clustering keys, then the caller's materialized `__oN` order
+    * columns — ascending, index order. */
   override def requiredOrdering(): Array[VSortOrder] = {
     val orderCols = schema.fieldNames.filter(_.startsWith("__o"))
       .sortBy(_.stripPrefix("__o").toInt)
-    ("topic" +: "part" +: orderCols.toSeq)
+    (keys ++ orderCols)
       .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
       .toArray
   }
 
   override def toBatch: BatchWrite =
     new PolarRoutedBatchWrite(template, schema, maxFileBytes,
-      defaultMaxMessageSize, None, txnRetentionMs)
+      defaultMaxMessageSize, txn, txnRetentionMs, declared, replaceAll,
+      producerTxn)
 
-  override def toStreaming: StreamingWrite =
+  /** `writeStream.format("polar")` (micro-batch): Spark applies the same
+    * distribution and local sort per epoch. The stable queryId survives
+    * restarts (it is the checkpointed stream id), so an epoch replayed
+    * after recovery is dropped at the CAS authority. */
+  override def toStreaming: StreamingWrite = {
+    require(!replaceAll,
+      "a stream appends to the log; overwrite is a batch INSERT OVERWRITE")
+    require(producerTxn.isEmpty,
+      "transactional.id is a batch-produce option; streaming epochs get " +
+        "exactly-once visibility from their own (queryId, epochId) txn")
     new PolarRoutedStreamingWrite(template, schema, maxFileBytes,
       defaultMaxMessageSize, if (queryId == null) "" else queryId,
-      txnRetentionMs)
+      txnRetentionMs, declared)
+  }
 
+  /** SQL-UI observability for produces: segments sealed and records
+    * written per task — the write twin of the scan's planned-files/rows
+    * metrics. */
   override def supportedCustomMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new PolarSegmentsWrittenMetric, new PolarRecordsWrittenMetric)
 }
 
-/** Commit message of a routed task: that task's sealed segments, grouped
-  * by the topic they belong to. */
+/** Commit message of a task: its sealed segments, grouped by the topic
+  * they belong to. */
 final case class PolarRoutedCommitMessage(topicFiles: Map[String, Seq[FileEntry]])
   extends WriterCommitMessage
 
@@ -94,8 +133,16 @@ class PolarRoutedBatchWrite(
     maxFileBytes: Long,
     defaultMaxMessageSize: Int,
     txn: Option[(String, Long)],
-    txnRetentionMs: Long) extends BatchWrite {
+    txnRetentionMs: Long,
+    declared: Option[String] = None,
+    replaceAll: Boolean = false,
+    producerTxn: Option[(String, Long)] = None) extends BatchWrite {
 
+  // the declared topic's plan-time read: its bases and policy ride the
+  // factory, its version is the commit's CAS expectation
+  private val declaredWrite = declared.map(t =>
+    new PolarBatchWrite(template.topicConfig(t), schema, maxFileBytes, txn,
+      txnRetentionMs, replaceAll, producerTxn, defaultMaxMessageSize))
   // topics whose CAS landed — an abort after a partial multi-topic commit
   // must not reclaim THEIR files (they are registered log segments now)
   private val committedTopics = scala.collection.mutable.Set.empty[String]
@@ -105,14 +152,17 @@ class PolarRoutedBatchWrite(
   private var journal: Option[String] = None
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new PolarRoutedWriterFactory(template, schema, maxFileBytes,
-      defaultMaxMessageSize)
+    declaredWrite.fold[DataWriterFactory](new PolarRoutedWriterFactory(
+      template, schema, maxFileBytes, defaultMaxMessageSize))(
+      _.createBatchWriterFactory(info))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val byTopic: Map[String, Array[FileEntry]] = messages.flatMap {
+    val routed: Map[String, Array[FileEntry]] = messages.flatMap {
       case PolarRoutedCommitMessage(m) => m.toSeq
       case other => throw new IllegalStateException(s"unexpected commit message $other")
     }.groupBy(_._1).map { case (t, vs) => t -> vs.flatMap(_._2) }
+    val byTopic = declared.fold(routed)(t =>
+      Map(t -> routed.getOrElse(t, Array.empty[FileEntry])))
     // a MULTI-topic fan-out writes the intent journal first: a kill
     // between the per-topic CASes below leaves the journal for the sweep's
     // recovery pass to drive to all-or-none ([[TxnJournal]]); a
@@ -131,14 +181,14 @@ class PolarRoutedBatchWrite(
       journal = Some(graft.log.TxnJournal.write(template.root,
         byTopic.map { case (t, fs) => t -> fs.toSeq }, effTxn))
     // deterministic commit order; each topic is one independent CAS with
-    // the full rebase/retry/idempotence machinery of a single-topic
-    // produce. The heartbeat before each CAS keeps recovery's grace
-    // window measured from last PROGRESS, so a long multi-topic commit is
-    // not rolled back underneath itself.
+    // the full rebase/retry/idempotence machinery. The heartbeat before
+    // each CAS keeps recovery's grace window measured from last PROGRESS,
+    // so a long multi-topic commit is not rolled back underneath itself.
     byTopic.toSeq.sortBy(_._1).foreach { case (t, files) =>
       journal.foreach(graft.log.TxnJournal.heartbeat)
-      new PolarBatchWrite(template.topicConfig(t), schema, maxFileBytes,
-        effTxn, txnRetentionMs).commit(Array(PolarCommitMessage(files.toSeq)))
+      declaredWrite.getOrElse(new PolarBatchWrite(template.topicConfig(t),
+        schema, maxFileBytes, effTxn, txnRetentionMs))
+        .commit(Array(PolarCommitMessage(files.toSeq)))
       committedTopics += t
     }
     journal.foreach(graft.log.TxnJournal.delete)
@@ -150,8 +200,8 @@ class PolarRoutedBatchWrite(
       case PolarRoutedCommitMessage(m) =>
         m.foreach { case (t, files) =>
           if (!committedTopics.contains(t))
-            graft.log.PolarLog.quietDelete(files.map(f =>
-              s"${template.topicConfig(t).dir}/part=${f.part}/${f.name}"))
+            graft.log.PolarLog.quietDelete(files.map(
+              _.path(template.topicConfig(t))))
         }
       case _ => ()
     }
@@ -275,16 +325,16 @@ object PolarRoutedWrite {
   }
 }
 
-/** Streaming twin: each epoch commits per topic with the (queryId,
-  * epochId) txn, so replays are dropped per topic at each CAS authority —
-  * exactly-once visibility per topic across failure/replay. */
+/** The streaming face: each epoch commits per topic with the (queryId,
+  * epochId) txn, so replays are dropped per topic at each CAS authority. */
 class PolarRoutedStreamingWrite(
     template: RingTemplate,
     schema: StructType,
     maxFileBytes: Long,
     defaultMaxMessageSize: Int,
     queryId: String,
-    txnRetentionMs: Long) extends StreamingWrite {
+    txnRetentionMs: Long,
+    declared: Option[String] = None) extends StreamingWrite {
 
   // ONE delegate per epoch, shared by commit and abort: after a partially
   // failed multi-topic commit (topic a's CAS landed, topic b threw) the
@@ -295,12 +345,21 @@ class PolarRoutedStreamingWrite(
   private def delegate(epochId: Long): PolarRoutedBatchWrite =
     delegates.getOrElseUpdate(epochId, new PolarRoutedBatchWrite(
       template, schema, maxFileBytes, defaultMaxMessageSize,
-      Some((queryId, epochId)), txnRetentionMs))
+      Some((queryId, epochId)), txnRetentionMs, declared))
 
+  // Spark calls this once per micro-batch, so a declared topic's doc is
+  // read ONCE PER EPOCH on the driver and its bases and policy ride the
+  // serialized factory to every task: at 1,000 partitions × 1 s triggers
+  // that is 1 GET/s instead of 1,000/s, and a prop change takes effect at
+  // the next epoch. Epochs are serial, so the bases are current as of the
+  // previous epoch's commit; an external producer landing mid-epoch is
+  // absorbed by the commit-time rebase.
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new PolarRoutedWriterFactory(template, schema, maxFileBytes,
-      defaultMaxMessageSize)
+      defaultMaxMessageSize, declared.map(t => Destination.of(t,
+        LogMetadata.read(template.topicConfig(t)), defaultMaxMessageSize,
+        maxFileBytes)))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     // a throw skips the removal, so the delegate (with its committedTopics)
@@ -319,63 +378,50 @@ class PolarRoutedWriterFactory(
     template: RingTemplate,
     schema: StructType,
     maxFileBytes: Long,
-    defaultMaxMessageSize: Int)
+    defaultMaxMessageSize: Int,
+    declared: Option[Destination] = None)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new PolarRoutedDataWriter(template, schema, taskId, maxFileBytes,
-      defaultMaxMessageSize)
+      defaultMaxMessageSize, declared)
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new PolarRoutedDataWriter(template, schema, taskId, maxFileBytes,
-      defaultMaxMessageSize)
+    createWriter(partitionId, taskId)
 }
 
-/** One [[PolarDataWriter]] per topic this task encounters; bases read from
-  * each topic's root doc on first encounter (a new topic reads as empty —
-  * bases all 0 — and is created by the commit). */
+/** One [[PolarDataWriter]] per topic this task writes. A declared topic's
+  * writer opens with the task and takes every row; otherwise each row's
+  * `topic` names its writer, opened on first encounter from that topic's
+  * root doc (a new topic reads as empty — bases all 0 — and is created by
+  * the commit). */
 class PolarRoutedDataWriter(
     template: RingTemplate,
     schema: StructType,
     taskId: Long,
     maxFileBytes: Long,
-    defaultMaxMessageSize: Int = graft.log.PolarLog.DefaultMaxMessageSize)
+    defaultMaxMessageSize: Int = graft.log.PolarLog.DefaultMaxMessageSize,
+    declared: Option[Destination] = None)
     extends DataWriter[InternalRow] {
 
-  private val topicIdx = schema.fieldIndex("topic")
-  private val valueIdx = schema.fieldIndex("value")
-  private val tsIdx = schema.fieldIndex("timestamp")
-  // LogAppendTime destinations stamp every record with THIS task's append
-  // wall-clock — one stamp per writer, like the broker stamping a batch
-  private val appendMicros = System.currentTimeMillis() * 1000L
-  // one entry per destination: (writer, record-size cap, appendTime). The
-  // cap is the topic's max.message.bytes prop when set, else the
-  // server-level default — resolved from the same root-doc read that
-  // supplies the offset bases. The routed path cannot bake a
-  // per-destination cap into the envelope like a single-topic produce
-  // (destinations are data-dependent), so this is the broker-side append
-  // check, per Kafka — and a topic cap WIDER than the server default is
-  // honored here too, matching the single-topic authority rule.
-  // message.timestamp.type resolves the same way: per destination, at the
-  // append — and so do the KIP-937 CreateTime timestamp bounds (checked
-  // against THIS task's append clock, the same stamp LogAppendTime uses).
-  private case class Dest(w: PolarDataWriter, cap: Int, appendTime: Boolean,
-      beforeMaxMs: Long, afterMaxMs: Long)
   private val writers =
-    scala.collection.mutable.LinkedHashMap.empty[String, Dest]
+    scala.collection.mutable.LinkedHashMap.empty[String, PolarDataWriter]
 
-  // same clamp as the envelope path: a bound at/above MaxTsBoundMs is
-  // unbounded (wider than any representable timestamp) and keeps the
-  // `append_clock ± bound` arithmetic inside Long
-  private def msBound(ms: Long): Long =
-    if (ms >= graft.log.PolarLog.MaxTsBoundMs) Long.MaxValue else ms
+  private def open(d: Destination): PolarDataWriter =
+    writers.getOrElseUpdate(d.policy.topic, new PolarDataWriter(
+      template.topicConfig(d.policy.topic).dir, schema, d.bases, taskId, d.policy))
 
-  override def write(row: InternalRow): Unit = {
+  private val only: Option[PolarDataWriter] = declared.map(open)
+  private lazy val topicIdx = schema.fieldIndex("topic")
+
+  override def write(row: InternalRow): Unit =
+    only.getOrElse(routed(row)).write(row)
+
+  private def routed(row: InternalRow): PolarDataWriter = {
     if (row.isNullAt(topicIdx)) throw new IllegalArgumentException(
       "row-routed produce: the 'topic' column must not be null " +
         "(set a 'topic' write option for a single-topic default)")
     val t = row.getUTF8String(topicIdx).toString
-    val Dest(w, cap, appendTime, beforeMaxMs, afterMaxMs) =
-      writers.getOrElseUpdate(t, {
+    writers.getOrElse(t, {
       if (!TopicConfig.validTopicName(t)) throw new IllegalArgumentException(
         s"Invalid topic name in 'topic' column: '$t'")
       val cfg = template.topicConfig(t)
@@ -383,7 +429,7 @@ class PolarRoutedDataWriter(
       // 248-byte creation cap. Existence is the ROOT DOC's (readIfExists),
       // not version == 0: a CREATE TABLE'd never-produced topic sits at
       // version 0 with a doc on disk — a grandfathered long-named one must
-      // stay writable, exactly like the HTTP produce surface (review-found)
+      // stay writable, exactly like the HTTP produce surface
       val metaOpt = LogMetadata.readIfExists(cfg)
       if (metaOpt.isEmpty && !TopicConfig.validNewTopicName(t))
         throw new IllegalArgumentException(
@@ -392,56 +438,22 @@ class PolarRoutedDataWriter(
       require(meta.clusterSize == cfg.clusterSize &&
           meta.rangesPerToken == cfg.rangesPerToken,
         s"topic $t exists with different ring layout")
-      // per-topic segment.bytes governs this destination's roll size;
-      // compression.type its storage codec
-      val (beforeMs, afterMs) = graft.log.PolarLog.timestampBounds(meta.props)
-      Dest(new PolarDataWriter(cfg.dir, schema, meta.producerOffsets.toArray,
-        taskId, graft.log.PolarLog.effectiveMaxFileBytes(meta.props, maxFileBytes),
-        PolarWrite.effectiveCodec(meta.props)),
-        meta.props.get(graft.log.TopicProps.MaxMessageBytes)
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-          .filter(_ > 0).getOrElse(defaultMaxMessageSize),
-        graft.log.PolarLog.logAppendTime(meta.props),
-        msBound(beforeMs), msBound(afterMs))
+      open(Destination.of(t, meta, defaultMaxMessageSize, maxFileBytes))
     })
-    if (!row.isNullAt(valueIdx) && row.getBinary(valueIdx).length > cap)
-      throw new IllegalArgumentException(
-        s"record value exceeds topic '$t' max.message.bytes=$cap")
-    // KIP-937: CreateTime destinations validate the event time against the
-    // append clock; LogAppendTime destinations skip it (the producer's
-    // timestamp is about to be discarded anyway, per Kafka)
-    if (!appendTime && !row.isNullAt(tsIdx) &&
-        (beforeMaxMs != Long.MaxValue || afterMaxMs != Long.MaxValue)) {
-      // ms granularity, the configs' own unit (micros remainder ignored —
-      // a sub-ms sliver can never decide a clock-skew window)
-      val tsMs = row.getLong(tsIdx) / 1000L
-      val appendMs = appendMicros / 1000L
-      val tooOld = beforeMaxMs != Long.MaxValue && tsMs < appendMs - beforeMaxMs
-      val tooNew = afterMaxMs != Long.MaxValue && tsMs > appendMs + afterMaxMs
-      if (tooOld || tooNew) throw new IllegalArgumentException(
-        s"record timestamp ${tsMs}ms out of range vs broker time for topic " +
-          s"'$t' (message.timestamp.before.max.ms/after.max.ms)")
-    }
-    if (appendTime) row match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-        u.setNotNullAt(tsIdx); u.setLong(tsIdx, appendMicros)
-      case r => r.update(tsIdx, appendMicros)
-    }
-    w.write(row)
   }
 
   override def commit(): WriterCommitMessage =
-    PolarRoutedCommitMessage(writers.map { case (t, d) =>
-      t -> d.w.commit().asInstanceOf[PolarCommitMessage].files
+    PolarRoutedCommitMessage(writers.map { case (t, w) =>
+      t -> w.commit().asInstanceOf[PolarCommitMessage].files
     }.toMap)
 
-  override def abort(): Unit = writers.values.foreach(_.w.abort())
+  override def abort(): Unit = writers.values.foreach(_.abort())
 
-  override def close(): Unit = writers.values.foreach(_.w.close())
+  override def close(): Unit = writers.values.foreach(_.close())
 
   override def currentMetricsValues():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val per = writers.values.map(_.w.currentMetricsValues())
+    val per = writers.values.map(_.currentMetricsValues())
     def sum(n: String) = per.iterator.flatten.filter(_.name() == n).map(_.value()).sum
     def m(n: String, v: Long) =
       new org.apache.spark.sql.connector.metric.CustomTaskMetric {

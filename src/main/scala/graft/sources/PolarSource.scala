@@ -228,9 +228,9 @@ final case class PolarSourceConfig(
     maxTriggerDelayMs: Long = 15L * 60 * 1000,
     maxBytesPerTrigger: Option[Long] = None,
     maxFileBytes: Long = PolarWrite.DefaultMaxFileBytes,
-    // write option: the server-level record-size cap a routed write falls
-    // back to for topics without a max.message.bytes prop (single-topic
-    // produces bake the cap into the envelope instead)
+    // write option: the server-level record-size cap every write falls
+    // back to for topics without a max.message.bytes prop; the writer
+    // enforces it at the append
     maxMessageSize: Int = graft.log.PolarLog.DefaultMaxMessageSize,
     txn: Option[(String, Long)] = None,
     txnRetentionMs: Long = PolarWrite.DefaultTxnRetentionMs,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.log.{FileEntry, LogMetadata, PolarLog, TopicConfig}
+import graft.log.{FileEntry, LogMetadata, PolarLog, RecordRejectedException, RingTemplate, TopicConfig, TopicProps}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
@@ -8,43 +8,17 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder => VSortOrder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/**
- * The real DSv2 batch produce path (SURVEY §7.4): commit-time offset
- * assignment with no window sort.
- *
- * Shape, mirroring the reference's coalescer counter semantics
- * (`/root/reference/internal/producing/coalescer.go:24-27,166-167` — a
- * single writer per partition assigns dense offsets by counter increment in
- * arrival order):
- *
- *  1. The `Write` declares `RequiresDistributionAndOrdering`: CLUSTERED by
- *     `part` (Spark's exchange is the leader router — every log partition
- *     lands wholly in one task, the single-writer invariant) and locally
- *     SORTED by `(part, __o0, __o1, …)` — a spillable per-task sort, not a
- *     window buffer, so task memory is O(sort spill), not O(partition).
- *  2. Each [[PolarDataWriter]] streams rows to per-partition parquet files
- *     in arrival (= sorted) order, assigning `offset = base(part) + n++`
- *     from the plan-time metadata snapshot. Files are written with their
- *     final names but are INVISIBLE until registered: readers only see the
- *     metadata file registry.
- *  3. Commit messages carry exact per-file stats `(part, name, minOffset,
- *     maxOffset, count, bytes)`; the driver registers them and advances the
- *     producer tails in ONE compare-and-set of the topic metadata — the
- *     generation-consensus commit point. A failed CAS (concurrent producer)
- *     or task abort leaves only unregistered orphans, never torn reads.
- *
- * At 100 TB: zero listing, zero footer reads, zero renames (object-store
- * friendly — the Delta/Iceberg metadata-log pattern); the only data movement
- * is the routing exchange itself.
- */
+/** Builds the sink's one [[PolarRoutedWrite]] (its doc describes the
+  * write path). A `topic` option DECLARES the destination and overrides
+  * any `topic` column; without it every row names its topic. A frame with
+  * only the producer columns (value[/partitionKey/timestamp/topic]) goes
+  * through [[PolarLog.produce]] / [[PolarLog.produceRouted]], which build
+  * the envelope (token, part, order columns) and re-enter here. */
 class PolarWriteBuilder(cfg: PolarSourceConfig, info: LogicalWriteInfo)
     extends WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
@@ -57,12 +31,12 @@ class PolarWriteBuilder(cfg: PolarSourceConfig, info: LogicalWriteInfo)
   override def build(): Write = {
     val schema = info.schema()
     val replace = truncateAll || cfg.replaceAll
-    // row-routed writes: no 'topic' option — each row names its topic
-    // (Kafka writer parity). The envelope path is the one-pass routed
-    // BatchWrite; producer schemas route through PolarLog.produceRouted,
-    // which builds the envelope (keeping `topic`) and re-enters here.
-    if (cfg.topics.isEmpty) {
-      val tpl = cfg.routedTemplate.get
+    val declared = cfg.topics.headOption
+    val template = cfg.routedTemplate.getOrElse {
+      val t = cfg.topic
+      RingTemplate(t.root, t.clusterSize, t.rangesPerToken)
+    }
+    if (declared.isEmpty) {
       if (!schema.fieldNames.contains("topic"))
         throw new IllegalArgumentException(
           "polar write needs a target: set the 'topic' option, or carry a " +
@@ -76,151 +50,32 @@ class PolarWriteBuilder(cfg: PolarSourceConfig, info: LogicalWriteInfo)
       require(cfg.producerTxn.isEmpty,
         "transactional.id produces target one explicit topic; row-routed " +
           "fan-out already has its own atomicity (the routed-commit journal)")
-      if (schema.fieldNames.contains("part"))
-        return new PolarRoutedWrite(tpl, schema, cfg.maxFileBytes,
-          defaultMaxMessageSize = cfg.maxMessageSize,
-          queryId = info.queryId(), txnRetentionMs = cfg.txnRetentionMs)
-      return new V1Write {
-        override def toInsertableRelation
-            : org.apache.spark.sql.sources.InsertableRelation =
-          (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) => {
-            require(!overwrite,
-              "INSERT OVERWRITE requires an explicit 'topic' option")
-            PolarLog.produceRouted(data, tpl,
-              maxFileBytes = cfg.maxFileBytes): Unit
-          }
-      }
     }
     if (schema.fieldNames.contains("part"))
-      new PolarWrite(cfg.topic, schema, cfg.maxFileBytes, cfg.txn,
-        queryId = info.queryId(), txnRetentionMs = cfg.txnRetentionMs,
-        replaceAll = replace, producerTxn = cfg.producerTxn)
-    else
-      // producer-schema sugar (`df.write.format("polar")` with only
-      // value[/partitionKey/timestamp]): route through PolarLog.produce,
-      // which computes the envelope (token/part/order columns) and re-enters
-      // this builder with the full envelope schema — the write machinery is
-      // always the BatchWrite above, never a window
-      new V1Write {
-        override def toInsertableRelation
-            : org.apache.spark.sql.sources.InsertableRelation =
-          (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) => {
-            PolarLog.produce(data, cfg.topic,
-              maxFileBytes = cfg.maxFileBytes, txn = cfg.txn,
-              replaceAll = overwrite || replace,
-              producerTxn = cfg.producerTxn.map { case (id, e) =>
-                graft.log.Transactions.TxnHandle(cfg.topic.root, id, e) }): Unit
+      new PolarRoutedWrite(template, schema, cfg.maxFileBytes,
+        cfg.maxMessageSize, info.queryId(), cfg.txnRetentionMs,
+        declared.map(_.topic), cfg.txn, replace, cfg.producerTxn)
+    else new V1Write {
+      override def toInsertableRelation
+          : org.apache.spark.sql.sources.InsertableRelation =
+        (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) =>
+          declared match {
+            case None =>
+              require(!overwrite,
+                "INSERT OVERWRITE requires an explicit 'topic' option")
+              PolarLog.produceRouted(data, template,
+                maxMessageSize = cfg.maxMessageSize,
+                maxFileBytes = cfg.maxFileBytes): Unit
+            case Some(t) =>
+              PolarLog.produce(data, t,
+                maxMessageSize = cfg.maxMessageSize,
+                maxFileBytes = cfg.maxFileBytes, txn = cfg.txn,
+                replaceAll = overwrite || replace,
+                producerTxn = cfg.producerTxn.map { case (id, e) =>
+                  graft.log.Transactions.TxnHandle(t.root, id, e) }): Unit
           }
-      }
+    }
   }
-}
-
-class PolarWrite(
-    cfg: TopicConfig,
-    schema: StructType,
-    maxFileBytes: Long = PolarWrite.DefaultMaxFileBytes,
-    txn: Option[(String, Long)] = None,
-    queryId: String = "",
-    txnRetentionMs: Long = PolarWrite.DefaultTxnRetentionMs,
-    replaceAll: Boolean = false,
-    // producer transaction (transactional.id, fencing epoch): this batch's
-    // entries register MARKED; Transactions.commit makes them stable
-    producerTxn: Option[(String, Long)] = None)
-    extends Write with RequiresDistributionAndOrdering {
-
-  override def requiredDistribution(): Distribution =
-    Distributions.clustered(Array(Expressions.identity("part")))
-
-  /** part first, then the caller's materialized `__oN` order columns —
-    * ascending, index order. */
-  override def requiredOrdering(): Array[VSortOrder] = {
-    val orderCols = schema.fieldNames.filter(_.startsWith("__o"))
-      .sortBy(_.stripPrefix("__o").toInt)
-    ("part" +: orderCols.toSeq)
-      .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
-      .toArray
-  }
-
-  override def toBatch: BatchWrite =
-    new PolarBatchWrite(cfg, schema, maxFileBytes, txn, txnRetentionMs,
-      replaceAll, producerTxn)
-
-  /** SQL-UI observability for produces: segments sealed and records
-    * written per task — the write twin of the scan's planned-files/rows
-    * metrics (an operator confirms the size-bounded roll produced sane
-    * segment counts without listing anything). */
-  override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new PolarSegmentsWrittenMetric, new PolarRecordsWrittenMetric)
-
-  /** `writeStream.format("polar")` (micro-batch). Spark applies the same
-    * clustered-by-part distribution + local (part, __o*) sort per batch, so
-    * epoch writes reuse the batch writer machinery unchanged; the commit is
-    * idempotent on (streaming queryId, epochId) via `sinkCommits` — the
-    * Delta txn-version pattern — giving exactly-once visibility across
-    * failure/replay. The stable queryId survives restarts (it is the
-    * checkpointed stream id), so a replayed epoch after recovery is dropped
-    * at the CAS authority, not re-registered. */
-  override def toStreaming: StreamingWrite = {
-    require(!replaceAll,
-      "a stream appends to the log; overwrite is a batch INSERT OVERWRITE")
-    require(producerTxn.isEmpty,
-      "transactional.id is a batch-produce option; streaming epochs get " +
-        "exactly-once visibility from their own (queryId, epochId) txn")
-    new PolarStreamingWrite(cfg, schema, maxFileBytes,
-      if (queryId == null) "" else queryId, txnRetentionMs)
-  }
-}
-
-class PolarStreamingWrite(
-    cfg: TopicConfig,
-    schema: StructType,
-    maxFileBytes: Long,
-    queryId: String,
-    txnRetentionMs: Long = PolarWrite.DefaultTxnRetentionMs)
-    extends StreamingWrite {
-
-  // ONE metadata read per EPOCH, on the driver: Spark calls this factory
-  // hook once per micro-batch (MicroBatchWrite.createBatchWriterFactory),
-  // so the offset bases ride the serialized factory to every task — at
-  // 1,000 partitions × 1 s triggers this is 1 object-store GET/s instead
-  // of 1,000/s of the same document. Epochs are serial, so the bases are
-  // current as of the previous epoch's commit; an external producer
-  // landing mid-epoch is absorbed by the commit-time rebase, exactly as
-  // before.
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val m = LogMetadata.read(cfg)
-    new PolarStreamingWriterFactory(cfg, schema, maxFileBytes,
-      m.producerOffsets.toArray, PolarWrite.effectiveCodec(m.props))
-  }
-
-  // micro-batch epochs are serial: by commit time the previous epoch's CAS
-  // has landed, so a fresh PolarBatchWrite's plan-time snapshot IS the
-  // current tails; a concurrent external producer is absorbed by the same
-  // rebase-and-retry as any batch produce
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    new PolarBatchWrite(cfg, schema, maxFileBytes, Some((queryId, epochId)),
-      txnRetentionMs).commit(messages)
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    new PolarBatchWrite(cfg, schema, maxFileBytes, Some((queryId, epochId)))
-      .abort(messages)
-}
-
-/** Per-epoch writer factory carrying the epoch's offset bases (read once
-  * on the driver by [[PolarStreamingWrite.createStreamingWriterFactory]]);
-  * tasks open writers with zero metadata I/O. */
-class PolarStreamingWriterFactory(
-    cfg: TopicConfig,
-    schema: StructType,
-    maxFileBytes: Long,
-    bases: Array[Long],
-    codec: CompressionCodecName = CompressionCodecName.ZSTD)
-    extends StreamingDataWriterFactory {
-  override def createWriter(
-      partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new PolarDataWriter(cfg.dir, schema, bases, taskId, maxFileBytes, codec)
 }
 
 object PolarWrite {
@@ -250,6 +105,82 @@ object PolarWrite {
     * next txn commit expires it (Delta's txn-version retention role) —
     * far beyond any live stream's replay horizon at 7 days. */
   val DefaultTxnRetentionMs: Long = 7L * 24 * 60 * 60 * 1000
+}
+
+/** A topic's record policy: what [[PolarDataWriter]] checks and stamps as
+  * it appends each record, and how it stores the segments. Resolved from
+  * the topic's props by [[RecordPolicy.of]], the one place that reads
+  * them for a produce. */
+final case class RecordPolicy(
+    topic: String,
+    // Kafka's `max.message.bytes`: the largest value a record may carry
+    maxMessageBytes: Int,
+    // `message.timestamp.type=LogAppendTime`: every record takes the
+    // writer's append clock in place of the producer's timestamp
+    logAppendTime: Boolean,
+    // KIP-937 CreateTime bounds vs the append clock, in ms;
+    // Long.MaxValue = unbounded
+    beforeMaxMs: Long,
+    afterMaxMs: Long,
+    codec: CompressionCodecName,
+    rollBytes: Long) {
+
+  /** The produce-path 400 of the reference
+    * (reference `internal/producing/server.go:146-151`). */
+  def checkValue(bytes: Int): Unit =
+    if (bytes > maxMessageBytes) throw new RecordRejectedException(
+      s"record value of $bytes bytes exceeds topic '$topic' " +
+        s"max.message.bytes (maxMessageSize=$maxMessageBytes bytes)")
+
+  /** KIP-937: a CreateTime timestamp (micros) more than `beforeMaxMs`
+    * behind or `afterMaxMs` ahead of the append clock is refused. The
+    * comparison is in ms, the configs' own unit. */
+  def checkTimestamp(tsMicros: Long, clockMs: Long): Unit =
+    if (beforeMaxMs != Long.MaxValue || afterMaxMs != Long.MaxValue) {
+      val tsMs = Math.floorDiv(tsMicros, 1000L)
+      if ((beforeMaxMs != Long.MaxValue && tsMs < clockMs - beforeMaxMs) ||
+          (afterMaxMs != Long.MaxValue && tsMs > clockMs + afterMaxMs))
+        throw new RecordRejectedException(
+          s"record timestamp ${tsMs}ms out of range vs broker time " +
+            s"${clockMs}ms for topic '$topic' (message.timestamp." +
+            s"before.max.ms=$beforeMaxMs, after.max.ms=$afterMaxMs)")
+    }
+}
+
+object RecordPolicy {
+  /** Bounds at or above this many ms are unbounded: wider than the span
+    * of every representable timestamp (±~9.3e15 ms of epoch), and small
+    * enough that `clock ± bound` never overflows a Long. */
+  private val MaxTsBoundMs: Long = 100_000_000_000_000_000L // 1e17
+
+  /** The topic's props win over the caller's server-level values
+    * (`maxMessageSize`, `maxFileBytes`), as topic config does at a Kafka
+    * broker. Malformed persisted values fall back to the caller's value
+    * or the default: a bad config must never brick produces. */
+  def of(topic: String, props: Map[String, String], maxMessageSize: Int,
+      maxFileBytes: Long): RecordPolicy = {
+    def bound(ms: Long): Long = if (ms >= MaxTsBoundMs) Long.MaxValue else ms
+    val (beforeMs, afterMs) = PolarLog.timestampBounds(props)
+    RecordPolicy(topic,
+      props.get(TopicProps.MaxMessageBytes)
+        .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
+        .filter(_ > 0).getOrElse(maxMessageSize),
+      props.get(TopicProps.MessageTimestampType).exists(_.trim == "LogAppendTime"),
+      bound(beforeMs), bound(afterMs),
+      PolarWrite.effectiveCodec(props),
+      PolarLog.effectiveMaxFileBytes(props, maxFileBytes))
+  }
+}
+
+/** What a task needs to append to one topic: the offset bases its writer
+  * counts from and the topic's record policy. */
+final case class Destination(bases: Array[Long], policy: RecordPolicy)
+
+object Destination {
+  def of(topic: String, meta: LogMetadata, maxMessageSize: Int,
+      maxFileBytes: Long): Destination =
+    Destination(meta.producerOffsets.toArray,
+      RecordPolicy.of(topic, meta.props, maxMessageSize, maxFileBytes))
 }
 
 object PolarBatchWrite {
@@ -352,14 +283,17 @@ class PolarBatchWrite(
     replaceAll: Boolean = false,
     // producer transaction: entries register marked with this id; the mark
     // resolves at Transactions.commit/abort. Epoch is the fencing guard.
-    producerTxn: Option[(String, Long)] = None) extends BatchWrite {
+    producerTxn: Option[(String, Long)] = None,
+    // the server-level record-size cap, for a topic without max.message.bytes
+    maxMessageSize: Int = PolarLog.DefaultMaxMessageSize) extends BatchWrite {
 
   require(producerTxn.isEmpty || (!replaceAll && txn.isEmpty),
     "transactional.id composes with plain appends only: INSERT OVERWRITE " +
       "and streaming-sink txns have their own atomicity")
 
-  // plan-time snapshot: offset bases ship to the writers; the version is the
-  // CAS expectation at commit (concurrent-producer guard)
+  // plan-time snapshot: offset bases and record policy ship to the
+  // writers; the version is the CAS expectation at commit
+  // (concurrent-producer guard)
   private val meta0 = {
     // first produce CREATES the topic: new names obey the stricter
     // 248-byte cap (derived journal file names); existing topics are
@@ -378,14 +312,20 @@ class PolarBatchWrite(
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new PolarWriterFactory(cfg.dir, schema, meta0.producerOffsets.toArray,
-      maxFileBytes, PolarWrite.effectiveCodec(meta0.props))
+    new PolarRoutedWriterFactory(
+      RingTemplate(cfg.root, cfg.clusterSize, cfg.rangesPerToken), schema,
+      maxFileBytes, maxMessageSize,
+      Some(Destination.of(cfg.topic, meta0, maxMessageSize, maxFileBytes)))
+
+  /** This topic's files in a commit message of either shape. */
+  private def filesOf(m: WriterCommitMessage): Seq[FileEntry] = m match {
+    case PolarCommitMessage(files) => files
+    case PolarRoutedCommitMessage(byTopic) => byTopic.getOrElse(cfg.topic, Nil)
+    case other => throw new IllegalStateException(s"unexpected commit message $other")
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    var entries: Array[FileEntry] = messages.flatMap {
-      case PolarCommitMessage(files) => files
-      case other => throw new IllegalStateException(s"unexpected commit message $other")
-    }
+    var entries: Array[FileEntry] = messages.flatMap(filesOf)
     // idempotent sink (exactly-once visibility for streaming replays): a
     // (sinkId, batchId) already recorded in the metadata means this batch
     // committed before a crash — drop the replayed files, register nothing.
@@ -417,14 +357,15 @@ class PolarBatchWrite(
     // per-partition coalescer serializes arrivals; here the metadata CAS is
     // the serialization point and arrival interleaving is batch-granular.
     var expected = meta0
-    // streaming epochs bake offsets from EXECUTOR-side base reads taken at
-    // writer open; an external producer landing between that read and this
+    // streaming epochs and row-routed topics bake offsets from base reads
+    // taken before this snapshot (the epoch's factory, the task's first
+    // encounter); an external producer landing between that read and this
     // commit leaves the entries behind the snapshot's tails while the CAS
     // expectation is already current — the CAS would SUCCEED and the
     // density require abort the query instead of retrying. Rebase onto the
-    // snapshot up front (no-op whenever bases match, i.e. every batch
-    // produce); the retry loop below then only handles races newer than
-    // `expected`.
+    // snapshot up front (no-op whenever bases match, i.e. every declared
+    // batch produce); the retry loop below then only handles races newer
+    // than `expected`.
     // Rebase rewrites produce rb*-prefixed replacement files and DELETE the
     // originals — so if this commit ultimately fails, Spark's abort (which
     // receives the ORIGINAL commit messages) cannot reclaim them. Track the
@@ -594,27 +535,10 @@ class PolarBatchWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     // best-effort orphan cleanup; unregistered files are invisible anyway
-    val conf = graft.log.HadoopConf.shared
-    messages.foreach {
-      case PolarCommitMessage(files) => files.foreach { f =>
-        val p = new Path(s"${cfg.dir}/part=${f.part}/${f.name}")
-        try { val fs = p.getFileSystem(conf); if (fs.exists(p)) fs.delete(p, false) }
-        catch { case _: java.io.IOException => () }
-      }
-      case _ => ()
-    }
+    // (a task that failed before its commit leaves a null message)
+    PolarLog.quietDelete(
+      messages.toSeq.filter(_ != null).flatMap(filesOf).map(_.path(cfg)))
   }
-}
-
-class PolarWriterFactory(
-    dir: String,
-    schema: StructType,
-    bases: Array[Long],
-    maxFileBytes: Long,
-    codec: CompressionCodecName = CompressionCodecName.ZSTD)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new PolarDataWriter(dir, schema, bases, taskId, maxFileBytes, codec)
 }
 
 object PolarDataWriter {
@@ -659,18 +583,21 @@ object PolarDataWriter {
       .build()
 }
 
-/** Streams the task's rows (pre-clustered by `part`, pre-sorted) into
-  * size-bounded zstd parquet segments per log partition, assigning dense
-  * offsets by counter increment — the coalescer, with `MaxSegmentSize`
-  * rolling: once a segment's written+buffered size passes `maxFileBytes`
-  * it is sealed and a new one continues the offset chain. */
+/** Streams one topic's rows of a task (pre-clustered by `part`,
+  * pre-sorted) into size-bounded parquet segments per log partition,
+  * assigning dense offsets by counter increment — the coalescer, with
+  * `MaxSegmentSize` rolling: once a segment's written+buffered size passes
+  * the policy's roll size it is sealed and a new one continues the offset
+  * chain. Each record passes the topic's [[RecordPolicy]] first; a refused
+  * record throws [[RecordRejectedException]] and fails the task, so the
+  * produce commits nothing. */
 class PolarDataWriter(
     dir: String,
     schema: StructType,
     bases: Array[Long],
     taskId: Long,
-    maxFileBytes: Long = PolarWrite.DefaultMaxFileBytes,
-    codec: CompressionCodecName = CompressionCodecName.ZSTD)
+    policy: RecordPolicy = RecordPolicy.of("", Map.empty,
+      PolarLog.DefaultMaxMessageSize, PolarWrite.DefaultMaxFileBytes))
     extends DataWriter[InternalRow] {
 
   private val conf = PolarDataWriter.writeConf()
@@ -683,7 +610,7 @@ class PolarDataWriter(
   private final class Segment(val part: Int, val base: Long) {
     val name = f"w$taskId%05d-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
     val path = new Path(s"$dir/part=$part/$name")
-    val writer = PolarDataWriter.open(path, conf, codec)
+    val writer = PolarDataWriter.open(path, conf, policy.codec)
     var count: Long = 0L
     // self-tracked UNCOMPRESSED size: the parquet writer's own estimate
     // only refreshes at its internal mem-check cadence, far too coarse to
@@ -720,19 +647,28 @@ class PolarDataWriter(
   // ParquetWriteSupport consumes field values eagerly — one mutable row
   // buffer serves every write
   private val buf = new GenericInternalRow(5)
+  // the append clock: one stamp per writer, like the broker stamping a
+  // batch. LogAppendTime records take it; CreateTime bounds compare to it.
+  private val appendMicros = System.currentTimeMillis() * 1000L
 
   override def write(row: InternalRow): Unit = {
+    val value = if (row.isNullAt(valueIdx)) null else row.getBinary(valueIdx)
+    if (value != null) policy.checkValue(value.length)
+    val hasTs = policy.logAppendTime || !row.isNullAt(tsIdx)
+    val ts = if (policy.logAppendTime) appendMicros
+      else if (hasTs) row.getLong(tsIdx) else 0L
+    // a null timestamp is Kafka's NO_TIMESTAMP, never bounded
+    if (hasTs && !policy.logAppendTime)
+      policy.checkTimestamp(ts, appendMicros / 1000L)
     val p = row.getInt(partIdx)
     val st = states.getOrElseUpdate(p, new PartState(p))
     val seg = st.segment
     val key = if (row.isNullAt(keyIdx)) null else row.getUTF8String(keyIdx)
-    val value = if (row.isNullAt(valueIdx)) null else row.getBinary(valueIdx)
     buf.update(0, key)
     buf.update(1, if (row.isNullAt(tokenIdx)) null else row.getLong(tokenIdx))
     buf.update(2, seg.base + seg.count)
-    if (row.isNullAt(tsIdx)) { seg.tsNulls += 1; buf.update(3, null) }
+    if (!hasTs) { seg.tsNulls += 1; buf.update(3, null) }
     else {
-      val ts = row.getLong(tsIdx)
       if (ts < seg.tsMin) seg.tsMin = ts
       if (ts > seg.tsMax) seg.tsMax = ts
       buf.update(3, ts)
@@ -743,7 +679,7 @@ class PolarDataWriter(
     seg.approxBytes += 24L + // token + offset + timestamp
       (if (key == null) 0 else key.numBytes()) +
       (if (value == null) 0 else value.length)
-    if (seg.approxBytes >= maxFileBytes) st.roll()
+    if (seg.approxBytes >= policy.rollBytes) st.roll()
   }
 
   override def currentMetricsValues():

@@ -131,7 +131,7 @@ object PolarStream {
       cfg: TopicConfig,
       checkpointLocation: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    // native DSv2 streaming sink ([[graft.sources.PolarStreamingWrite]]):
+    // native DSv2 streaming sink ([[graft.sources.PolarRoutedStreamingWrite]]):
     // per-epoch clustered write + idempotent (queryId, epochId) CAS commit —
     // exactly-once without a driver-side foreachBatch detour
     PolarLog.produceStream(df, cfg)

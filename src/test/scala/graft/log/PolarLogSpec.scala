@@ -270,6 +270,17 @@ class PolarLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(PolarLog.consume(spark, cfg).count() === 5)
   }
 
+  test("a single-topic produce reads the topic's root doc a bounded number of times") {
+    val cfg = TopicConfig(root, "t_root_reads")
+    val df = spark.createDataFrame(Seq(("k1", "a"), ("k2", "b")))
+      .toDF("partitionKey", "value")
+    PolarLog.produce(df, cfg) // the topic exists from here on, like a flush target
+    val before = LogMetadata.rootReads.get()
+    PolarLog.produce(df, cfg)
+    val reads = LogMetadata.rootReads.get() - before
+    assert(reads <= 4L, s"$reads root-doc reads for one produce")
+  }
+
   test("per-topic max.message.bytes caps the produce path (topic config wins)") {
     val cfg = TopicConfig(root, "t_maxmsg")
     val df = spark.createDataFrame(Seq(("k1", "0123456789")))

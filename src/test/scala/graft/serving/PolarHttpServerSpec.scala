@@ -624,6 +624,49 @@ class PolarHttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally co.stop()
   }
 
+  test("a produce refused by the KIP-937 timestamp bounds is a 400 and registers nothing") {
+    val topic = "tsbound400"
+    assert(post(s"/v1/topic/$topic/messages?partitionKey=k", "fresh".getBytes(UTF_8))
+      .statusCode() === 200)
+    assert(post(s"/v1/admin/topics/config?topic=$topic" +
+      "&key=message.timestamp.before.max.ms&value=60000",
+      Array.emptyByteArray).statusCode() === 200)
+    val dayOldMicros = (System.currentTimeMillis() - 24L * 3600 * 1000) * 1000L
+    val r = post(s"/v1/topic/$topic/messages?partitionKey=k&timestamp=$dayOldMicros",
+      "stale".getBytes(UTF_8))
+    assert(r.statusCode() === 400, r.body())
+    assert(r.body().contains("out of range"), r.body())
+    assert(PolarLog.consume(spark, TopicConfig(root, topic)).count() === 1)
+  }
+
+  test("one stale-timestamp record fails only its own request, not the shared linger window") {
+    val topic = "iso_ts"
+    val cfg = TopicConfig(root, topic)
+    PolarLog.produce(spark.createDataFrame(Seq(("seed", "s")))
+      .toDF("partitionKey", "value"), cfg)
+    LogMetadata.updateProps(cfg)(
+      _ + (graft.log.TopicProps.MessageTimestampBeforeMaxMs -> "60000"))
+    val co = new ProduceCoalescer(spark, root, lingerMs = 50)
+    try {
+      val staleMicros = (System.currentTimeMillis() - 3600L * 1000) * 1000L
+      // both land in the same linger window and the same per-topic batch
+      val fStale = co.append(topic, Some("ks"), Some(staleMicros),
+        "application/json", "stale".getBytes(UTF_8))
+      val fOk = co.append(topic, Some("ko"), None,
+        "application/json", "fresh".getBytes(UTF_8))
+      val err = intercept[java.util.concurrent.ExecutionException] {
+        fStale.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(err.getCause.isInstanceOf[graft.log.RecordRejectedException], err.getCause)
+      assert(err.getCause.getMessage.contains("out of range"), err.getCause.getMessage)
+      // the fresh neighbour commits and its record is durable
+      fOk.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      val values = PolarLog.consume(spark, cfg).selectExpr("CAST(value AS STRING)")
+        .collect().map(_.getString(0)).sorted
+      assert(values.toSeq === Seq("fresh", "s"))
+    } finally co.stop()
+  }
+
   test("metrics endpoint exposes serving counters") {
     val m = get("/metrics")
     assert(m.statusCode() === 200)

@@ -82,8 +82,9 @@ class PolarStreamSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val schema = PolarLog.ValueSchema
       .add(org.apache.spark.sql.types.StructField("part",
         org.apache.spark.sql.types.IntegerType, nullable = false))
-    val w = new PolarStreamingWrite(dst, schema,
-      PolarWrite.DefaultMaxFileBytes, "qid-meta")
+    val w = new PolarRoutedStreamingWrite(graft.log.RingTemplate(dst.root), schema,
+      PolarWrite.DefaultMaxFileBytes, PolarLog.DefaultMaxMessageSize, "qid-meta",
+      PolarWrite.DefaultTxnRetentionMs, declared = Some(dst.topic))
     val info = new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
       override def numPartitions(): Int = 8
     }

@@ -237,8 +237,9 @@ class PolarWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.types._
     val root = Files.createTempDirectory("polar_write_metrics").toString
     val cfg = TopicConfig(root, "wm")
-    val w = new PolarWrite(cfg, PolarLog.ValueSchema
-      .add(StructField("part", IntegerType, nullable = false)))
+    val w = new PolarRoutedWrite(graft.log.RingTemplate(root), PolarLog.ValueSchema
+      .add(StructField("part", IntegerType, nullable = false)),
+      PolarWrite.DefaultMaxFileBytes, declared = Some(cfg.topic))
     assert(w.supportedCustomMetrics().map(_.name()).toSet ===
       Set("polarSegmentsWritten", "polarRecordsWritten"))
     val writer = new PolarDataWriter(cfg.dir, PolarLog.ValueSchema
@@ -258,6 +259,25 @@ class PolarWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m("polarRecordsWritten") === 7L)
     assert(m("polarSegmentsWritten") === 3L) // three live parts, one open seg each
     writer.commit()
+  }
+
+  test("an empty producer frame written with overwrite empties the topic; offsets continue") {
+    val root = Files.createTempDirectory("polar_write_empty_ovw").toString
+    val cfg = TopicConfig(root, "w")
+    PolarLog.produce(records.limit(40), cfg)
+    val preTails = PolarLog.tails(cfg)
+    assert(preTails.values.sum === 40L)
+    records.limit(0).write.format("polar").option("root", root).option("topic", "w")
+      .mode("overwrite").save()
+    assert(PolarLog.consume(spark, cfg).count() === 0)
+    assert(graft.log.LogMetadata.read(cfg).files.isEmpty)
+    val s = spark
+    import s.implicits._
+    val r = PolarLog.produce(Seq(("u-next", "v")).toDF("partitionKey", "value"), cfg)
+    assert(r.recordsWritten === 1L)
+    val row = PolarLog.consume(spark, cfg).select(col("part"), col("offset")).first()
+    assert(row.getLong(1) === preTails(row.getInt(0)),
+      "the produce after an empty overwrite did not continue the offsets")
   }
 
   test("append twice extends offsets; overwrite replaces atomically, offsets continue") {
