@@ -30,7 +30,13 @@ object ConsumerGroups {
   case object Earliest extends ResetPolicy
   case object Latest extends ResetPolicy
 
-  final case class Poll(records: DataFrame, nextOffsets: Map[Int, Long])
+  /** A poll's window: the position it started from, the position to commit
+    * once its records are processed, and the records themselves, planned on
+    * first use (a caller that finds the window empty plans no scan). */
+  final case class Poll(startOffsets: Map[Int, Long], nextOffsets: Map[Int, Long])(
+      scan: => DataFrame) {
+    lazy val records: DataFrame = scan
+  }
 
   /** Group names become file names under `{topic}/_groups/` — the same
     * path-safety rule as topics (no separators, no traversal), minus the
@@ -143,15 +149,6 @@ object ConsumerGroups {
     committed(cfg, group).getOrElse(
       register(cfg, group, policy, readView(cfg, isolation)))
 
-  /** [[startingOffsets]] against an ALREADY-RESOLVED registry view — the
-    * serving façade's poll path shares the library polls' one-view-per-
-    * round discipline (registration pin, tails, admission and scan all
-    * answer from the same read, first poll included). */
-  private[graft] def startingOffsetsIn(
-      cfg: TopicConfig, group: String, policy: ResetPolicy,
-      meta: LogMetadata): Map[Int, Long] =
-    committed(cfg, group).getOrElse(register(cfg, group, policy, meta))
-
   /** The registration write behind [[startingOffsets]], against an
     * ALREADY-RESOLVED view — what the poll paths use so one poll round
     * resolves the registry + isolation exactly once, first poll included
@@ -185,36 +182,47 @@ object ConsumerGroups {
       policy: ResetPolicy = Latest,
       maxBytes: Option[Long] = None,
       // Kafka's CONSUMER isolation.level: read_committed polls resolve
-      // producer-transaction marks and stop at the LSO — ONE registry
-      // view (resolved once, first poll included) drives the registration
-      // pin, tails, admission AND the scan, so they always agree
+      // producer-transaction marks and stop at the LSO
       isolation: String = "read_uncommitted",
       // record-count admission cap (the library face of the serving
       // path's u16 budget) — applied after the byte cap when both are set
-      maxRecords: Option[Long] = None): Poll = {
+      maxRecords: Option[Long] = None): Poll =
+    window(spark, cfg, group, policy, isolation, _ => true, maxBytes, maxRecords)
+
+  /** The one poll window behind [[poll]] and [[pollAs]]. ONE
+    * isolation-resolved registry view (resolved once, first poll included)
+    * drives the registration pin, tails, admission AND the scan, so a txn
+    * committing mid-round can never make them disagree. Assigned
+    * partitions get `[start, tail)`; every other partition gets the empty
+    * `[start, start)`, which plans none of its files. The byte cap, then
+    * the record cap, bound the window. It never rewinds: a group whose
+    * committed position sits ABOVE the current LSO (committed under
+    * read_uncommitted, polled under read_committed) gets an empty window,
+    * not backward nextOffsets that a commit would regress the group with.
+    * `nextOffsets` covers only the assigned partitions. */
+  private def window(
+      spark: SparkSession,
+      cfg: TopicConfig,
+      group: String,
+      policy: ResetPolicy,
+      isolation: String,
+      assigned: Int => Boolean,
+      maxBytes: Option[Long],
+      maxRecords: Option[Long]): Poll = {
     val meta = readView(cfg, isolation)
-    val start = startingOffsetsIn(cfg, group, policy, meta)
-    val tails = PolarLog.tailsOf(meta)
-    val endB = maxBytes match {
-      case Some(cap) => byteCapEnd(meta, start, tails, cap)
-      case None => tails
+    val start = committed(cfg, group).getOrElse(register(cfg, group, policy, meta))
+    val tails = PolarLog.tailsOf(meta).map { case (p, t) =>
+      p -> (if (assigned(p)) t else start.getOrElse(p, 0L))
     }
-    val end0 = maxRecords match {
-      case Some(cap) => recordCapEnd(meta, start, endB, cap)
-      case None => endB
-    }
-    // never rewind: a group whose committed position sits ABOVE the
-    // current LSO (committed under read_uncommitted, polled under
-    // read_committed) gets an empty window, not backward nextOffsets
-    // that a commit would regress the group with
-    val end = end0.map { case (p, e) => p -> math.max(e, start.getOrElse(p, 0L)) }
-    val records = PolarLog.consumeAt(spark, cfg, meta,
-      startOffsets = start, endOffsets = end)
-    Poll(records, end)
+    val endB = maxBytes.fold(tails)(byteCapEnd(meta, start, tails, _))
+    val endR = maxRecords.fold(endB)(recordCapEnd(meta, start, endB, _))
+    val end = endR.map { case (p, e) => p -> math.max(e, start.getOrElse(p, 0L)) }
+    Poll(start, end.filter { case (p, _) => assigned(p) })(
+      PolarLog.consumeAt(spark, cfg, meta, startOffsets = start, endOffsets = end))
   }
 
   /** The isolation-resolved registry view one poll round plans against. */
-  private[graft] def readView(cfg: TopicConfig, isolation: String): LogMetadata = {
+  private def readView(cfg: TopicConfig, isolation: String): LogMetadata = {
     require(isolation == "read_uncommitted" || isolation == "read_committed",
       s"isolation must be 'read_uncommitted' or 'read_committed', got '$isolation'")
     val meta = LogMetadata.read(cfg)
@@ -405,7 +413,8 @@ object ConsumerGroups {
   }
 
   /** One consume round for ONE member of a shared group: only the member's
-    * assigned partitions are served; `nextOffsets` covers only those, so a
+    * assigned partitions are planned and served, under the same byte and
+    * record caps as [[poll]]; `nextOffsets` covers only those, so a
     * [[commitPartial]] never clobbers the other members' progress. */
   def pollAs(
       spark: SparkSession,
@@ -414,21 +423,12 @@ object ConsumerGroups {
       memberId: String,
       memberIds: Seq[String],
       policy: ResetPolicy = Latest,
-      isolation: String = "read_uncommitted"): Poll = {
+      isolation: String = "read_uncommitted",
+      maxBytes: Option[Long] = None,
+      maxRecords: Option[Long] = None): Poll = {
     val mine = assignment(cfg, memberIds).getOrElse(memberId,
       throw new IllegalArgumentException(s"$memberId not in member list")).toSet
-    // same one-view discipline as [[poll]]: registration pin + tails +
-    // scan all come from a single isolation-resolved read
-    val meta = readView(cfg, isolation)
-    val start = startingOffsetsIn(cfg, group, policy, meta)
-    val end = PolarLog.tailsOf(meta)
-      .filter { case (p, _) => mine.contains(p) }
-      .map { case (p, e) => p -> math.max(e, start.getOrElse(p, 0L)) }
-    val records = PolarLog.consumeAt(spark, cfg, meta,
-        startOffsets = start, endOffsets = end)
-      .filter(org.apache.spark.sql.functions.col("part")
-        .isInCollection(mine.toSeq.map(Integer.valueOf)))
-    Poll(records, end)
+    window(spark, cfg, group, policy, isolation, mine, maxBytes, maxRecords)
   }
 
   /** Registered consumer groups of a topic — one directory listing of the

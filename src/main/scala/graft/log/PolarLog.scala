@@ -540,10 +540,12 @@ object PolarLog {
       endOffsets: Map[Int, Long] = Map.empty): DataFrame = {
     if (meta.filesEmpty) return emptyLog(spark, cfg)
     // prune files by the requested offset windows before Spark ever sees
-    // them — registry stats replace footer reads
+    // them — registry stats replace footer reads; an empty window plans
+    // none of its partition's files
     val wanted = meta.files.filter { f =>
-      f.maxOffset >= startOffsets.getOrElse(f.part, 0L) &&
-        f.minOffset < endOffsets.getOrElse(f.part, Long.MaxValue)
+      val s = startOffsets.getOrElse(f.part, 0L)
+      val e = endOffsets.getOrElse(f.part, Long.MaxValue)
+      s < e && f.maxOffset >= s && f.minOffset < e
     }
     if (wanted.isEmpty) return emptyLog(spark, cfg)
 

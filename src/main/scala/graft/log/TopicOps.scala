@@ -1,14 +1,20 @@
 package graft.log
 
 import graft.functions.GraftFunctions.polar_frames
-import graft.functions.TokenMath
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.functions.{JsonText, TokenMath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 
 /**
  * Topic-level operations beyond plain produce/consume: framed ingestion,
- * the JSON poll response shape, and elastic ring resizing with offset
- * projection — the Spark renditions of SURVEY §2 A5, A19, A22/A29/A30.
+ * the JSON and binary poll response items, and elastic ring resizing with
+ * offset projection — the Spark renditions of SURVEY §2 A5, A18/A19,
+ * A22/A29/A30. The poll renderers take a poll's records, collect them in
+ * one scan job and build each partition's item on the driver in offset
+ * order.
  */
 object TopicOps {
 
@@ -26,54 +32,29 @@ object TopicOps {
   }
 
   /**
-   * JSON poll response (A19): records of one poll serialized in the
-   * reference's consumer JSON shape — one item per partition chunk with
-   * int64s as strings and decompressed values inline
+   * JSON poll response items (A19): one poll's records in the reference's
+   * consumer JSON shape — one item per partition chunk with int64s as
+   * strings and decompressed values inline
    * (`/root/reference/internal/consuming/models.go:136-199`,
    * `docs/rest_api/README.md:136-172`). `version` is the log epoch (fixed 1
    * in the single-epoch engine).
    */
-  def pollJson(
-      spark: SparkSession,
-      cfg: TopicConfig,
-      startOffsets: Map[Int, Long] = Map.empty,
-      endOffsets: Map[Int, Long] = Map.empty,
-      // the isolation-resolved registry view the POLL planned against:
-      // passing it through keeps one view driving tails + admission + scan
-      // (and spares the second root read per topic per poll)
-      view: Option[graft.log.LogMetadata] = None): Dataset[String] = {
-    import spark.implicits._
-    val ranges = cfg.rangesPerToken
-    val brokerTokens = (0 until cfg.clusterSize)
-      .map(i => TokenMath.tokenAtIndex(cfg.clusterSize, i))
-    val tokenOf = udfFreeTokenMap(brokerTokens, ranges)
-    view.map(m => PolarLog.consumeAt(spark, cfg, m, startOffsets, endOffsets))
-      .getOrElse(PolarLog.consume(spark, cfg, startOffsets, endOffsets))
-      .groupBy(col("part"))
-      .agg(min(col("offset")).as("startOffset"),
-        sort_array(collect_list(struct(col("offset"),
-          col("value").cast("string").as("v")))).as("recs"))
-      .select(to_json(struct(
-        lit(cfg.topic).as("topic"),
-        element_at(tokenOf, floor(col("part") / ranges).cast("int") + 1).as("token"),
-        (col("part") % ranges).as("rangeIndex"),
-        lit(1).as("version"),
-        col("startOffset").cast("string").as("startOffset"),
-        transform(col("recs"), r => r.getField("v")).as("values"))))
-      .as[String]
-  }
-
-  /** Broker tokens as a literal array of strings (int64-as-string, the
-    * reference's JSON convention). */
-  private def udfFreeTokenMap(tokens: Seq[Long], ranges: Int) =
-    array(tokens.map(t => lit(t.toString)): _*)
+  def pollJson(cfg: TopicConfig, records: DataFrame): Seq[String] =
+    chunks(records).map { case (p, rows) =>
+      val values = rows.map(r =>
+        if (r.isNullAt(3)) "null"
+        else JsonText.quote(new String(r.getAs[Array[Byte]](3), UTF_8)))
+      s"""{"topic":${JsonText.quote(cfg.topic)},"token":"${tokenOf(cfg, p)}",""" +
+        s""""rangeIndex":${p % cfg.rangesPerToken},"version":1,""" +
+        s""""startOffset":"${rows.head.getLong(1)}","values":""" +
+        values.mkString("[", ",", "]}")
+    }
 
   /**
-   * Binary poll response items (A18): each partition chunk serialized in
-   * the reference's wire item layout
+   * Binary poll response items (A18): each partition chunk in the
+   * reference's wire item layout
    * (`/root/reference/internal/consuming/models.go:106-134`,
-   * `docs/developer/NETWORK_FORMATS.md:5-32`), emitted as a HEX string —
-   * big-endian throughout:
+   * `docs/developer/NETWORK_FORMATS.md:5-32`), big-endian throughout:
    *
    * {{{
    * token i64 | rangeIndex u8 | version u32 | topicLen u8 | topic bytes
@@ -81,49 +62,46 @@ object TopicOps {
    * }}}
    *
    * where the payload is the chunk's record block — per record
-   * `timestamp-µs i64 | length u32 | body` (`models.go:216-219`). The
-   * reference stores/ships the block zstd-compressed (A7); this rendition
-   * emits the pre-compression block: compression here is a storage-layer
-   * property (the log's parquet pages are zstd), and the uncompressed block
-   * is what makes the layout independently verifiable byte-for-byte.
-   *
-   * Pure column expressions end-to-end (hex arithmetic, no UDFs): one
-   * shuffle to group each partition's records, everything else codegen.
+   * `timestamp-µs i64 | length u32 | body` (`models.go:216-219`); a
+   * null-valued record (tombstone) has no body and is left out of the
+   * block. The reference stores/ships the block zstd-compressed (A7); this
+   * rendition emits the pre-compression block: compression here is a
+   * storage-layer property (the log's parquet pages are zstd), and the
+   * uncompressed block is what makes the layout independently verifiable
+   * byte-for-byte.
    */
-  def pollBinary(
-      spark: SparkSession,
-      cfg: TopicConfig,
-      startOffsets: Map[Int, Long] = Map.empty,
-      endOffsets: Map[Int, Long] = Map.empty,
-      view: Option[graft.log.LogMetadata] = None): Dataset[String] = {
-    import spark.implicits._
-    val ranges = cfg.rangesPerToken
-    val tokenHex = array((0 until cfg.clusterSize).map(i =>
-      lit(f"${TokenMath.tokenAtIndex(cfg.clusterSize, i)}%016X")): _*)
-    val hexI64 = (c: org.apache.spark.sql.Column) => lpad(hex(c), 16, "0")
-    val recHex = concat(
-      hexI64(unix_micros(col("timestamp"))),
-      lpad(hex(length(col("value"))), 8, "0"),
-      hex(col("value")))
-    view.map(m => PolarLog.consumeAt(spark, cfg, m, startOffsets, endOffsets))
-      .getOrElse(PolarLog.consume(spark, cfg, startOffsets, endOffsets))
-      .withColumn("__rec", struct(col("offset"), recHex.as("h"),
-        (length(col("value")) + 12L).as("bytes")))
-      .groupBy(col("part"))
-      .agg(min(col("offset")).as("startOffset"),
-        sum(col("__rec.bytes")).as("payloadBytes"),
-        sort_array(collect_list(col("__rec"))).as("recs"))
-      .select(concat(
-        element_at(tokenHex, floor(col("part") / ranges).cast("int") + 1),
-        lpad(hex(col("part") % ranges), 2, "0"),
-        lit("00000001"), // version u32 (single-epoch engine)
-        lpad(hex(length(lit(cfg.topic))), 2, "0"),
-        hex(lit(cfg.topic)),
-        hexI64(col("startOffset")),
-        lpad(hex(col("payloadBytes")), 8, "0"),
-        array_join(transform(col("recs"), r => r.getField("h")), "")).as("item"))
-      .as[String]
+  def pollBinary(cfg: TopicConfig, records: DataFrame): Seq[Array[Byte]] = {
+    val topic = cfg.topic.getBytes(UTF_8)
+    chunks(records).map { case (p, rows) =>
+      val recs = rows.filterNot(_.isNullAt(3))
+      val payload = recs.iterator.map(r => 12 + r.getAs[Array[Byte]](3).length).sum
+      val buf = ByteBuffer.allocate(8 + 1 + 4 + 1 + topic.length + 8 + 4 + payload)
+        .putLong(tokenOf(cfg, p))
+        .put((p % cfg.rangesPerToken).toByte)
+        .putInt(1) // version (single-epoch engine)
+        .put(topic.length.toByte).put(topic)
+        .putLong(rows.head.getLong(1))
+        .putInt(payload)
+      recs.foreach { r =>
+        val v = r.getAs[Array[Byte]](3)
+        buf.putLong(r.getLong(2)).putInt(v.length).put(v)
+      }
+      buf.array
+    }
   }
+
+  /** A poll's `(part, offset, timestamp-µs, value)` rows collected in one
+    * scan job with no exchange — the chunk is byte-capped and served from
+    * the driver anyway — then grouped per partition in offset order. */
+  private def chunks(records: DataFrame): Seq[(Int, Array[Row])] =
+    records
+      .select(col("part"), col("offset"), unix_micros(col("timestamp")), col("value"))
+      .collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (p, rows) => p -> rows.sortBy(_.getLong(1)) }
+
+  private def tokenOf(cfg: TopicConfig, part: Int): Long =
+    TokenMath.tokenAtIndex(cfg.clusterSize, part / cfg.rangesPerToken)
 
   final case class RepartitionResult(
       newCfg: TopicConfig,

@@ -3671,10 +3671,10 @@ object PipelineQueries extends QueryRegistry {
       "text_bpe_count",
       // REAL BPE tokenizer through the gate: piece counts under a fixed
       // 32-merge table (trained once on this corpus by TextAnalysis.bpeTrain
-      // — deterministic, see R5BpeProbe). The native bpe_count expression
-      // applies merges in rank order with a left-to-right scan; the oracle
-      // replays the identical semantics as a per-merge global replace over
-      // a double-space-separated symbol string.
+      // — deterministic, pinned by R5OperatorsSpec). The native bpe_count
+      // expression applies merges in rank order with a left-to-right scan;
+      // the oracle replays the identical semantics as a per-merge global
+      // replace over a double-space-separated symbol string.
       (s, dir) => Tables.documents(s, dir)
         .select(col("doc_id"),
           TextAnalysis.bpeCount(GateBpeMerges)(col("text")).as("n_bpe")),
@@ -4311,7 +4311,8 @@ object PipelineQueries extends QueryRegistry {
 
   /** The gate's fixed BPE merge table: TextAnalysis.bpeTrain(documents,
     * numMerges=32) on sf0.01 (deterministic — ordered word table,
-    * lexicographic tie-breaks; regenerate with tools.R5BpeProbe). Static so
+    * lexicographic tie-breaks; R5OperatorsSpec pins it to the trainer's
+    * output, so regenerate it from that spec's `bpeTrain` call). Static so
     * the Spark query and the DuckDB oracle share one artifact. */
   private[graft] val GateBpeMerges: Seq[(String, String)] = Seq(
     ("e", "r"), ("i", "n"), ("o", "w"), ("o", "r"), ("s", "t"), ("m", "er"),

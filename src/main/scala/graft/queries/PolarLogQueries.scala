@@ -599,7 +599,8 @@ object PolarLogQueries extends QueryRegistry {
       "polar_poll_json",
       (s, dir) => {
         val (cfg, _) = SharedTopics.eventsProps(s, dir)
-        graft.log.TopicOps.pollJson(s, cfg).toDF("item")
+        s.createDataFrame(graft.log.TopicOps.pollJson(cfg, PolarLog.consume(s, cfg))
+          .map(Tuple1(_))).toDF("item")
       },
       // the poll items are fully reconstructible: murmur3 placement (SQL
       // mirror), offsets = (timestamp, value) rank within partition (the
@@ -637,10 +638,11 @@ object PolarLogQueries extends QueryRegistry {
       (s, dir) => {
         // A18: the reference's binary poll item layout (big-endian
         // token/rangeIndex/version/topic/startOffset/payload with per-record
-        // ts/len headers), emitted as hex and reconstructed byte-for-byte
+        // ts/len headers), compared as hex and reconstructed byte-for-byte
         // by DuckDB string arithmetic over the placement kernel
         val (cfg, _) = SharedTopics.eventsProps(s, dir)
-        graft.log.TopicOps.pollBinary(s, cfg).toDF("item")
+        s.createDataFrame(graft.log.TopicOps.pollBinary(cfg, PolarLog.consume(s, cfg))
+          .map(Tuple1(_))).select(hex(col("_1")).as("item"))
       },
       Some {
         val tokens = (0 until 3).map(i =>

@@ -75,6 +75,12 @@ import scala.jdk.CollectionConverters._
  * Concurrent producers therefore share metadata CAS rounds instead of
  * racing them.
  *
+ * Poll path: per registered topic, one `ConsumerGroups.pollAs` — the
+ * library's own window (one registry view, the member's partitions, the
+ * byte cap, then the u16 record budget) — and one `TopicOps` renderer,
+ * whose item bytes the server writes as they are. A served poll is one
+ * scan job with no shuffle.
+ *
  * Scale posture: the façade is a protocol adapter, not a data path — every
  * byte served flows through the same planned scans as the library API
  * (metadata-planned, vectorized, partition-pruned). A poll materializes only
@@ -1034,45 +1040,31 @@ class PolarHttpServer(
     // admits across all topics (the remainder auto-commits forward on
     // later polls, same as the byte cap)
     var countBudget = if (json) Long.MaxValue else 0xFFFFL
-    val itemsPerTopic = r.topics.map { topic =>
+    val items = r.topics.flatMap { topic =>
       val cfg = cfgOf(topic)
-      val mine = ConsumerGroups.assignment(cfg, members)(r.consumerId).toSet
-      // ONE isolation-resolved registry view per topic per poll — the
-      // registration pin (first poll of an unregistered group), tails,
-      // admission and the scan all answer from it, so a txn committing
-      // mid-round can never make the Latest pin and the admission disagree
-      val meta = ConsumerGroups.readView(cfg, r.isolation)
-      val start = ConsumerGroups.startingOffsetsIn(cfg, r.group, r.policy, meta)
-      val tails = PolarLog.tailsOf(meta)
-      // non-assigned partitions get an empty [start, start) window
-      val end0 = tails.map { case (p, t) =>
-        p -> (if (mine.contains(p)) t else start.getOrElse(p, 0L))
-      }
-      // byte-bounded chunk per poll — the reference's ConsumerReadThreshold
-      // (2 MiB, `internal/conf/config.go:278-280`); the rest is served by
-      // subsequent polls after auto-commit
-      val end1 =
-        if (maxPollBytes > 0)
-          ConsumerGroups.byteCapEnd(meta, start, end0, maxPollBytes)
-        else end0
-      val end =
-        if (countBudget == Long.MaxValue) end1
-        else if (countBudget <= 0L) start // budget spent: next poll's turn
-        else ConsumerGroups.recordCapEnd(meta, start, end1, countBudget)
-      val servedEnd = end.filter { case (p, e) => e > start.getOrElse(p, 0L) }
-      if (servedEnd.isEmpty) topic -> Seq.empty[String]
+      if (countBudget <= 0L) Seq.empty // budget spent: next poll's turn
       else {
-        servedPending += topic -> servedEnd
-        val items =
-          if (json) TopicOps.pollJson(spark, cfg, start, end, Some(meta))
-            .collect().toSeq
-          else TopicOps.pollBinary(spark, cfg, start, end, Some(meta))
-            .collect().toSeq
-        if (countBudget != Long.MaxValue) countBudget -= items.size
-        topic -> items
+        // byte-bounded chunk per poll — the reference's
+        // ConsumerReadThreshold (2 MiB, `internal/conf/config.go:278-280`);
+        // the rest is served by subsequent polls after auto-commit
+        val poll = ConsumerGroups.pollAs(spark, cfg, r.group, r.consumerId,
+          members, r.policy, r.isolation,
+          maxBytes = Some(maxPollBytes).filter(_ > 0),
+          maxRecords = Some(countBudget).filter(_ != Long.MaxValue))
+        val served = poll.nextOffsets.filter { case (p, e) =>
+          e > poll.startOffsets.getOrElse(p, 0L)
+        }
+        if (served.isEmpty) Seq.empty
+        else {
+          servedPending += topic -> served
+          val rendered =
+            if (json) TopicOps.pollJson(cfg, poll.records).map(_.getBytes(UTF_8))
+            else TopicOps.pollBinary(cfg, poll.records)
+          if (countBudget != Long.MaxValue) countBudget -= rendered.size
+          rendered
+        }
       }
     }
-    val items = itemsPerTopic.flatMap(_._2)
     if (items.isEmpty) { respond(ex, 204, "") }
     else {
       pollsServed.incrementAndGet()
@@ -1080,12 +1072,18 @@ class PolarHttpServer(
       // not resurrect as an unevictable ghost — the served-but-uncommitted
       // chunk is simply re-served after re-registration (at-least-once)
       consumers.replace(r.consumerId, r.copy(pending = servedPending)): Unit
-      if (json)
-        respond(ex, 200, items.mkString("[", ",", "]"), "application/json")
-      else {
-        val out = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ByteArrayOutputStream()
+      if (json) {
+        out.write('[')
+        items.zipWithIndex.foreach { case (item, i) =>
+          if (i > 0) out.write(',')
+          out.write(item)
+        }
+        out.write(']')
+        respondBytes(ex, 200, out.toByteArray, "application/json")
+      } else {
         out.write((items.size >> 8) & 0xFF); out.write(items.size & 0xFF)
-        items.foreach(h => out.write(ByteBufUtil.decodeHexDump(h)))
+        items.foreach(out.write)
         respondBytes(ex, 200, out.toByteArray, "application/octet-stream")
       }
     }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
-import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CompletableFuture, CountDownLatch, LinkedBlockingQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /**
  * The serving-side micro-batcher (SURVEY §2 A6,
@@ -27,8 +28,7 @@ class ProduceCoalescer(
 
   import ProduceCoalescer._
 
-  private val queue = new ConcurrentLinkedQueue[Pending]()
-  private val queued = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val queue = new LinkedBlockingQueue[Pending]()
   @volatile private var running = true
   private val done = new CountDownLatch(1)
 
@@ -57,12 +57,14 @@ class ProduceCoalescer(
   private def failRemaining(why: String): Unit = {
     var p = queue.poll()
     while (p != null) {
-      queued.decrementAndGet()
-      p.done.completeExceptionally(new IllegalStateException(
-        s"produce not flushed: $why")): Unit
+      fail(p, why)
       p = queue.poll()
     }
   }
+
+  private def fail(p: Pending, why: String): Unit =
+    p.done.completeExceptionally(new IllegalStateException(
+      s"produce not flushed: $why")): Unit
 
   /** Enqueue one produce request; the future completes when its batch's
     * metadata commit makes the records visible. */
@@ -75,59 +77,58 @@ class ProduceCoalescer(
     val p = Pending(topic, partitionKey, tsMicros, contentType, body,
       new CompletableFuture[Unit]())
     queue.add(p)
-    queued.incrementAndGet()
     // enqueue-then-check closes the append-vs-stop race BOTH ways: an
     // append that lost to stop() (the flusher may already have observed
-    // queued==0 and exited) must not leave its caller blocked forever on
-    // an ack no thread will ever complete. Fail ONLY this request — the
-    // flusher's final drain (loop condition `running || queued > 0`) is
+    // an empty queue and exited) must not leave its caller blocked forever
+    // on an ack no thread will ever complete. Fail ONLY this request — the
+    // flusher's final drain (loop condition `running || !queue.isEmpty`) is
     // still flushing everything queued before the stop, and failing the
     // whole queue here would spuriously reject other producers' requests
     // it was about to land durably. remove(p) == false means the flusher
     // already took this one too — its batch decides the ack.
-    if (!running && queue.remove(p)) {
-      queued.decrementAndGet()
-      p.done.completeExceptionally(new IllegalStateException(
-        "produce not flushed: coalescer stopped")): Unit
-    }
+    if (!running && queue.remove(p)) fail(p, "coalescer stopped")
     p.done
   }
 
+  // Blocks on the queue while idle; the first request to arrive opens ONE
+  // linger window, after which everything queued is one batch.
   private def flushLoop(): Unit = {
+    // the batch in hand is out of the queue: an escape must fail it too
+    var batch = Vector.empty[Pending]
     try {
-      while (running || queued.get() > 0) {
-        if (queued.get() == 0) Thread.sleep(lingerMs)
-        else {
+      while (running || !queue.isEmpty) {
+        val first = queue.poll(lingerMs, TimeUnit.MILLISECONDS)
+        if (first != null) {
+          batch = Vector(first)
           Thread.sleep(lingerMs) // linger: let concurrent requests pile in
-          val batch = Iterator.continually(queue.poll())
-            .takeWhile(_ != null).toVector
-          queued.addAndGet(-batch.size)
-          if (batch.nonEmpty) {
-            batch.groupBy(_.topic).foreach { case (topic, items) =>
-              try {
-                produceBatch(topic, items)
-                items.foreach(_.done.complete(()))
-              } catch {
-                // a record refused by its topic's policy must not fail the
-                // whole linger window: the innocent neighbours would get the
-                // guilty request's 400 and lose records they never had
-                // persisted. The refusal is thrown at the append, before any
-                // commit, so nothing of the window was registered and
-                // re-producing item by item cannot duplicate — only the
-                // guilty requests fail. Failure-path-only cost, bounded by
-                // the batch size.
-                case e: Exception if items.size > 1 &&
-                    RecordRejectedException.in(e).isDefined =>
-                  items.foreach { i =>
-                    try { produceBatch(topic, Vector(i)); i.done.complete(()) }
-                    catch { case e2: Exception => i.done.completeExceptionally(rejectionOr(e2)) }
-                  }
-                case e: Exception =>
-                  items.foreach(_.done.completeExceptionally(rejectionOr(e)))
-              }
+          val rest = new java.util.ArrayList[Pending]()
+          queue.drainTo(rest)
+          batch ++= rest.asScala
+          batch.groupBy(_.topic).foreach { case (topic, items) =>
+            try {
+              produceBatch(topic, items)
+              items.foreach(_.done.complete(()))
+            } catch {
+              // a record refused by its topic's policy must not fail the
+              // whole linger window: the innocent neighbours would get the
+              // guilty request's 400 and lose records they never had
+              // persisted. The refusal is thrown at the append, before any
+              // commit, so nothing of the window was registered and
+              // re-producing item by item cannot duplicate — only the
+              // guilty requests fail. Failure-path-only cost, bounded by
+              // the batch size.
+              case e: Exception if items.size > 1 &&
+                  RecordRejectedException.in(e).isDefined =>
+                items.foreach { i =>
+                  try { produceBatch(topic, Vector(i)); i.done.complete(()) }
+                  catch { case e2: Exception => i.done.completeExceptionally(rejectionOr(e2)) }
+                }
+              case e: Exception =>
+                items.foreach(_.done.completeExceptionally(rejectionOr(e)))
             }
-            flushCount += 1
           }
+          flushCount += 1
+          batch = Vector.empty
         }
       }
     } catch {
@@ -139,6 +140,7 @@ class ProduceCoalescer(
         running = false
         System.err.println(s"[polar] coalescer flush loop died: ${e.getMessage}")
     } finally {
+      batch.foreach(fail(_, "coalescer flush loop exited"))
       failRemaining("coalescer flush loop exited")
       done.countDown()
     }

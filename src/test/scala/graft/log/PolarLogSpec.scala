@@ -249,6 +249,32 @@ class PolarLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       p2.records.count())
   }
 
+  test("pollAs plans only the member's files") {
+    val cfg = TopicConfig(root, "t_rebal_files")
+    val members = Seq("c1", "c2")
+    val mine = ConsumerGroups.assignment(cfg, members)("c1").toSet
+    def planned(p: ConsumerGroups.Poll): Set[String] =
+      p.records.inputFiles.map(f => new org.apache.hadoop.fs.Path(f))
+        .map(f => s"${f.getParent.getName}/${f.getName}").toSet
+    def registered(keep: FileEntry => Boolean): Set[String] =
+      LogMetadata.read(cfg).files.filter(keep).map(f => s"part=${f.part}/${f.name}").toSet
+    PolarLog.produce(eventsAsRecords.drop("event_id"), cfg)
+    PolarLog.produce(eventsAsRecords.drop("event_id"), cfg)
+    // a new group: every file of the member's partitions, none of the others'
+    val first = ConsumerGroups.pollAs(spark, cfg, "g", "c1", members, ConsumerGroups.Earliest)
+    assert(planned(first) === registered(f => mine(f.part)))
+    // a committed position: the other member's empty windows start
+    // mid-log, and still plan none of its files
+    val tails = PolarLog.tails(cfg)
+    ConsumerGroups.commit(cfg, "g", tails)
+    PolarLog.produce(eventsAsRecords.drop("event_id"), cfg)
+    val next = ConsumerGroups.pollAs(spark, cfg, "g", "c1", members)
+    assert(planned(next) ===
+      registered(f => mine(f.part) && f.maxOffset >= tails.getOrElse(f.part, 0L)))
+    assert(next.records.count() === PolarLog.consume(spark, cfg,
+      startOffsets = tails).filter(col("part").isin(mine.toSeq: _*)).count())
+  }
+
   test("concurrent producer is rejected by metadata CAS") {
     val cfg = TopicConfig(root, "t_cas")
     PolarLog.produce(eventsAsRecords.drop("event_id").limit(10), cfg)

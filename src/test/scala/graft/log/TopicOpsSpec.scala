@@ -1,6 +1,7 @@
 package graft.log
 
 import graft.GraftSession
+import graft.functions.TokenMath
 import graft.streaming.GraftMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -64,7 +65,7 @@ class TopicOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("user_id").cast("string").as("partitionKey"),
         col("ts").as("timestamp"), col("props").as("value"))
     PolarLog.produce(recs, cfg)
-    val items = TopicOps.pollJson(spark, cfg).collect()
+    val items = TopicOps.pollJson(cfg, PolarLog.consume(spark, cfg))
     assert(items.nonEmpty)
     items.foreach { json =>
       assert(json.contains("\"topic\":\"t_json\""))
@@ -149,13 +150,12 @@ class TopicOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("user_id").cast("string").as("partitionKey"),
         col("ts").as("timestamp"), col("props").as("value"))
     PolarLog.produce(recs, cfg)
-    val items = TopicOps.pollBinary(spark, cfg).collect()
+    val items = TopicOps.pollBinary(cfg, PolarLog.consume(spark, cfg))
     assert(items.nonEmpty)
 
     var decodedRecords = 0L
     var decodedBytes = 0L
-    items.foreach { hexStr =>
-      val bytes = hexStr.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    items.foreach { bytes =>
       val buf = java.nio.ByteBuffer.wrap(bytes) // big-endian by default
       buf.getLong // token
       val rangeIndex = buf.get() & 0xff
@@ -182,6 +182,75 @@ class TopicOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(decodedRecords === log.count())
     assert(decodedBytes ===
       log.agg(sum(length(col("value")))).head.getLong(0))
+  }
+
+  test("poll renderers match the column-expression rendering on awkward values") {
+    val awkward: Seq[Array[Byte]] = Seq(
+      "plain", "q\"uote", "back\\slash", "line\nbreak", "cr\rlf\n", "tab\tbed",
+      "bs\bx", "ff\fx", "ctl\u0001x", "esc\u001bx", "héllo ✓ 日本", "",
+      "{\"json\":[1,\"two\"]}").map(_.getBytes("UTF-8")) ++
+      Seq(Array(0xC3, 0x28).map(_.toByte), Array(0xFF, 0x41, 0xE2, 0x82).map(_.toByte))
+    val cfg = TopicConfig(root, "t_render")
+    // plus one tombstone: JSON renders it null, the binary block leaves it out
+    val rows = (awkward :+ (null: Array[Byte])).zipWithIndex.map { case (v, i) =>
+      (s"k${i % 5}", new java.sql.Timestamp(1700000000000L + i * 1000L), v) }
+    PolarLog.produce(spark.createDataFrame(rows)
+      .toDF("partitionKey", "timestamp", "value"), cfg)
+    val records = PolarLog.consume(spark, cfg)
+    val ranges = cfg.rangesPerToken
+    val tokens = (0 until cfg.clusterSize).map(TokenMath.tokenAtIndex(cfg.clusterSize, _))
+
+    // the reference: the column expressions the renderers replaced
+    def refJson(records: org.apache.spark.sql.DataFrame) = records.groupBy(col("part"))
+      .agg(min(col("offset")).as("startOffset"),
+        sort_array(collect_list(struct(col("offset"),
+          col("value").cast("string").as("v")))).as("recs"))
+      .select(col("part"), to_json(struct(
+        lit(cfg.topic).as("topic"),
+        element_at(array(tokens.map(t => lit(t.toString)): _*),
+          floor(col("part") / ranges).cast("int") + 1).as("token"),
+        (col("part") % ranges).as("rangeIndex"),
+        lit(1).as("version"),
+        col("startOffset").cast("string").as("startOffset"),
+        transform(col("recs"), r => r.getField("v")).as("values"))))
+      .collect().map(r => r.getInt(0) -> r.getString(1)).sortBy(_._1).map(_._2).toSeq
+    val hexI64 = (c: org.apache.spark.sql.Column) => lpad(hex(c), 16, "0")
+    def refBinary(records: org.apache.spark.sql.DataFrame) = records
+      .withColumn("__rec", struct(col("offset"),
+        concat(hexI64(unix_micros(col("timestamp"))),
+          lpad(hex(length(col("value"))), 8, "0"), hex(col("value"))).as("h"),
+        (length(col("value")) + 12L).as("bytes")))
+      .groupBy(col("part"))
+      .agg(min(col("offset")).as("startOffset"),
+        sum(col("__rec.bytes")).as("payloadBytes"),
+        sort_array(collect_list(col("__rec"))).as("recs"))
+      .select(col("part"), concat(
+        element_at(array(tokens.map(t => lit(f"$t%016X")): _*),
+          floor(col("part") / ranges).cast("int") + 1),
+        lpad(hex(col("part") % ranges), 2, "0"),
+        lit("00000001"),
+        lpad(hex(length(lit(cfg.topic))), 2, "0"),
+        hex(lit(cfg.topic)),
+        hexI64(col("startOffset")),
+        lpad(hex(col("payloadBytes")), 8, "0"),
+        array_join(transform(col("recs"), r => r.getField("h")), "")))
+      .collect().map(r => r.getInt(0) -> r.getString(1)).sortBy(_._1)
+      .map(_._2.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray).toSeq
+
+    val binary = TopicOps.pollBinary(cfg, records)
+    val want = refBinary(records)
+    assert(binary.size > 1)
+    assert(binary.size === want.size)
+    binary.zip(want).foreach { case (got, w) => assert(got.sameElements(w)) }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(TopicOps.pollJson(cfg, records).map(mapper.readTree) ===
+      refJson(records).map(mapper.readTree))
+    // byte-equal where the escapes agree: no control character other than
+    // \n, \r and \t (Jackson spells \b, \f and \u00XX its own way)
+    val plain = records.filter(
+      !col("value").cast("string").rlike("[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]"))
+    assert(plain.count() === awkward.size - 4)
+    assert(TopicOps.pollJson(cfg, plain) === refJson(plain))
   }
 
   test("mid-stream committed offsets project exactly on scale-up (A22)") {

@@ -94,6 +94,14 @@ class R5OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(packed.except(again).count() === 0L)
   }
 
+  test("the text_bpe_count gate's merge table is bpeTrain on sf0.01 documents") {
+    // GateBpeMerges is hard-coded so the gate and its DuckDB oracle share
+    // one static table; a trainer change that moves it fails here
+    val sf001 = graft.Tables.documents(spark, "/root/testdata/sf0.01")
+    assert(TextAnalysis.bpeTrain(sf001, "text", 32) ===
+      graft.queries.PipelineQueries.GateBpeMerges)
+  }
+
   // ------------------------------------------------------------ domain cap
 
   test("domainCap keeps at most N per domain, best-first, and prunes below the exchange") {

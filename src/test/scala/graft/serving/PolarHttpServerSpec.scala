@@ -445,6 +445,91 @@ class PolarHttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new String(b, UTF_8).contains("payload"))
   }
 
+  test("a served poll runs one Spark job with zero shuffle bytes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // its own server on its own root, so only the poll's scan plans read
+    // it: the shared server's background sweeps read `root`
+    val costRoot = Files.createTempDirectory("polar_http_cost").toString
+    val cost = new PolarHttpServer(spark, costRoot, lingerMs = 5,
+      retentionSweepMs = 3600000L).start()
+    val marker = "poll-cost-marker"
+    val listener = new SparkListener {
+      val reads = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+      val markers = new java.util.concurrent.atomic.AtomicInteger
+      private val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      @volatile var counting = false
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains(costRoot) => reads.add(x.executionId)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == marker)) markerJobs.add(e.jobId)
+        else if (counting && props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .exists(id => reads.contains(id.toLong))) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead +
+            e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markers.incrementAndGet()
+    }
+    // a marker job's end proves every earlier event was delivered
+    def drain(): Unit = {
+      val seen = listener.markers.get
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (listener.markers.get == seen && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(listener.markers.get > seen, "listener bus did not drain")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val costBase = s"http://127.0.0.1:${cost.boundPort}"
+      (0 until 30).foreach { i =>
+        val r = client.send(HttpRequest.newBuilder(
+            URI.create(s"$costBase/v1/topic/pollcost/messages?partitionKey=u$i"))
+          .POST(BodyPublishers.ofByteArray(s"""{"u":$i}""".getBytes(UTF_8))).build(),
+          BodyHandlers.ofString())
+        assert(r.statusCode() === 200, r.body())
+      }
+      Seq("application/json", "application/octet-stream").foreach { accept =>
+        val id = s"cost-${accept.length}"
+        assert(client.send(HttpRequest.newBuilder(URI.create(s"$costBase/v1/consumer/" +
+            s"register?consumerId=$id&group=$id&topic=pollcost&onNewGroup=startFromEarliest"))
+          .PUT(BodyPublishers.noBody()).build(), BodyHandlers.ofString())
+          .statusCode() === 200)
+        drain()
+        listener.jobs.set(0); listener.shuffleBytes.set(0L); listener.counting = true
+        val r = client.send(HttpRequest.newBuilder(
+            URI.create(s"$costBase/v1/consumer/poll?consumerId=$id"))
+          .POST(BodyPublishers.noBody()).header("Accept", accept).build(),
+          BodyHandlers.ofByteArray())
+        drain()
+        listener.counting = false
+        assert(r.statusCode() === 200)
+        assert(new String(r.body(), UTF_8).contains("""{"u":29}""") ||
+          new String(r.body(), UTF_8).contains("""{\"u\":29}"""))
+        assert(listener.jobs.get === 1, s"$accept poll jobs")
+        assert(listener.shuffleBytes.get === 0L, s"$accept poll shuffle bytes")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      cost.stop()
+    }
+  }
+
   test("accept negotiation: wildcard and absent Accept get JSON; the binary count is record-capped") {
     val topic = "acc"
     post(s"/v1/topic/$topic/messages?partitionKey=ka", "v".getBytes(UTF_8))

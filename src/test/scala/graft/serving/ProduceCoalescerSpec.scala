@@ -61,6 +61,30 @@ class ProduceCoalescerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getCause.getMessage.contains("not flushed"), e.getCause.getMessage)
   }
 
+  test("a request reaching an idle flusher waits one linger, not two") {
+    def ackMs(c: ProduceCoalescer, i: Int): Long = {
+      val t0 = System.nanoTime()
+      c.append("co_linger", Some("k"), None, "application/json",
+        s"""{"i":$i}""".getBytes(UTF_8)).get(60, TimeUnit.SECONDS)
+      (System.nanoTime() - t0) / 1000000L
+    }
+    // one warm flush, timed through a coalescer that barely lingers
+    val quick = new ProduceCoalescer(spark, root, clusterSize = 1, rangesPerToken = 2,
+      lingerMs = 1)
+    val flushMs = try { ackMs(quick, 0); ackMs(quick, 1) } finally quick.stop()
+    val linger = 3000L
+    val c = new ProduceCoalescer(spark, root, clusterSize = 1, rangesPerToken = 2,
+      lingerMs = linger)
+    try {
+      ackMs(c, 2)
+      // appended right after an ack, while the flusher idles: one linger
+      // plus one flush, where a sleep-then-linger flusher takes two lingers
+      val second = ackMs(c, 3)
+      assert(second < linger + flushMs + 1000L,
+        s"second ack took $second ms; one linger + one flush is ${linger + flushMs} ms")
+    } finally c.stop()
+  }
+
   test("a torn group document fails loudly instead of silently rewinding to 0") {
     val cfg = TopicConfig(root, "co_torn", 1, 2)
     PolarLog.produce(spark.range(4).selectExpr(
