@@ -102,6 +102,10 @@ object Bench {
       // cost, not query cost.
       queries.SharedTopics.eventsProps(spark, sfDir): Unit
       queries.SharedTopics.segmentedEvents(spark, sfDir): Unit
+      // Materialize.sweep (here and below) is session-wide: it stops every
+      // active stream and clears the whole SQL cache. Harness-only — Bench
+      // owns its session and runs one query at a time; library code calls
+      // Materialize.release instead.
       Materialize.sweep(spark)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")

@@ -47,7 +47,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // same session hygiene as Bench: the full sequential battery in one
-      // JVM must not accumulate operator materializations or sink tables
+      // JVM must not accumulate operator materializations or sink tables.
+      // The sweep is session-wide (stops every active stream, clears the
+      // whole SQL cache): harness-only, safe because Verify owns the
+      // session and runs one query at a time
       Materialize.sweep(spark)
       sinceGc += 1
       if (sinceGc >= 10) { System.gc(); sinceGc = 0 }

@@ -1,8 +1,11 @@
 package graft.log
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.functions.JsonText
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /**
  * Consumer-group offset state for the batch consume path — the Spark
@@ -50,41 +53,33 @@ object ConsumerGroups {
     new Path(s"${cfg.groupsDir}/$group.json")
   }
 
-  // the strict persisted shape [[render]] writes — torn/truncated docs
-  // (a crashed rename on an exotic store) must fail LOUDLY here, not parse
-  // to a partial map that silently rewinds absent partitions to 0. The
-  // optional writerEpoch stamp (r16) is the lease holder's fencing mark.
-  private val GroupDocRe =
-    """^\{"offsets":\{("\d+":\d+(,"\d+":\d+)*)?\}(,"writerEpoch":\d+)?\}$""".r
-  private val GroupEpochRe = """"writerEpoch"\s*:\s*(\d+)""".r
-
   def committed(cfg: TopicConfig, group: String): Option[Map[Int, Long]] =
     readDoc(cfg, group).map(_._1)
 
   // the raw doc: (offsets, writerEpoch stamp). Stamp 0 = written by an
   // unleased driver (or a pre-r16 binary) — checkStamp treats it as
-  // unguarded, exactly like an unstamped root doc.
+  // unguarded, exactly like an unstamped root doc. Only the shape
+  // [[render]] writes is adopted: a torn, truncated or overflowing doc (a
+  // crashed rename on an exotic store) fails LOUDLY here, never parses to
+  // a partial map that silently rewinds absent partitions to 0.
   private def readDoc(
       cfg: TopicConfig, group: String): Option[(Map[Int, Long], Long)] = {
     val path = groupPath(cfg, group)
     val fc = FileContext.getFileContext(path.toUri, HadoopConf.shared)
     if (!fc.util().exists(path)) return None
-    val in = fc.open(path)
-    val text = try {
-      val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      new String(bytes, StandardCharsets.UTF_8)
-    } finally in.close()
-    def corrupt() = throw new IllegalStateException(
-      s"group document for '$group' on ${cfg.topic} is corrupt " +
-        s"(${text.take(64)}…); refusing to adopt a partial position — " +
-        "restore it or delete the doc to re-register from the reset policy")
-    if (GroupDocRe.findFirstIn(text.trim).isEmpty) corrupt()
-    // the shape regex admits any digit run; values too long for Int/Long
-    // are corruption too — same LOUD refusal, never a bare
-    // NumberFormatException (and never a partial adoption)
-    try Some((parseOffsets(text),
-      GroupEpochRe.findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(0L)))
-    catch { case _: NumberFormatException => corrupt() }
+    val text = FsIO.readString(fc, path)
+    try {
+      val doc = JsonText.parseObject(text)
+      val (offsets, epoch) = (parseOffsets(doc), JsonText.longField(doc, "writerEpoch"))
+      require(doc.size == 1 + epoch.size &&
+        (offsets.values ++ epoch).forall(_ >= 0L), "not the shape render writes")
+      Some((offsets, epoch.getOrElse(0L)))
+    } catch {
+      case e: IllegalArgumentException => throw new IllegalStateException(
+        s"group document for '$group' on ${cfg.topic} is corrupt " +
+          s"(${text.take(64)}…); refusing to adopt a partial position — " +
+          "restore it or delete the doc to re-register from the reset policy", e)
+    }
   }
 
   def commit(cfg: TopicConfig, group: String, nextOffsets: Map[Int, Long]): Unit =
@@ -184,8 +179,8 @@ object ConsumerGroups {
       // Kafka's CONSUMER isolation.level: read_committed polls resolve
       // producer-transaction marks and stop at the LSO
       isolation: String = "read_uncommitted",
-      // record-count admission cap (the library face of the serving
-      // path's u16 budget) — applied after the byte cap when both are set
+      // record-count admission cap for library callers that bound a
+      // batch by records — applied after the byte cap when both are set
       maxRecords: Option[Long] = None): Poll =
     window(spark, cfg, group, policy, isolation, _ => true, maxBytes, maxRecords)
 
@@ -603,7 +598,27 @@ object ConsumerGroups {
     if (writerEpoch > 0L) s"""$body,"writerEpoch":$writerEpoch}""" else s"$body}"
   }
 
+  /** The `offsets` map of a group doc [[render]] wrote. */
   private[graft] def parseOffsets(s: String): Map[Int, Long] =
-    """"(\d+)"\s*:\s*(\d+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
+    parseOffsets(JsonText.parseObject(s))
+
+  private[log] def parseOffsets(doc: JsonNode): Map[Int, Long] =
+    offsetsOf(doc.path("offsets"))
+
+  /** A bare `{"<partition>": offset, ...}` map, as the SQL procedures and
+    * the HTTP txn endpoint take it. */
+  private[graft] def parseOffsetMap(s: String): Map[Int, Long] =
+    offsetsOf(JsonText.parseObject(s))
+
+  // every key a partition number, every value an integer — anything else
+  // refuses
+  private def offsetsOf(n: JsonNode): Map[Int, Long] = {
+    require(n.isObject, s"expected a {\"partition\": offset} object, got $n")
+    n.properties.asScala.map { e =>
+      val p = e.getKey
+      require(p.nonEmpty && p.length <= 9 && p.forall(c => c >= '0' && c <= '9'),
+        s"partition '$p' is not a partition number")
+      p.toInt -> JsonText.long(e.getValue)
+    }.toMap
+  }
 }

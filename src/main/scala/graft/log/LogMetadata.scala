@@ -2,8 +2,10 @@ package graft.log
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.databind.JsonNode
+import graft.functions.JsonText
+import scala.jdk.CollectionConverters._
 
 /**
  * Topic configuration: where the log lives and how the token space is carved.
@@ -518,7 +520,7 @@ object LogMetadata {
     val cached = segmentCache.get(mPath)
     if (cached != null) cached
     else {
-      val doc = parseManifestDoc(readText(fc, new Path(mPath)))
+      val doc = parseManifestDoc(FsIO.readString(fc, new Path(mPath)))
       cacheSegment(mPath, doc)
       doc
     }
@@ -554,17 +556,6 @@ object LogMetadata {
         .flatMap(_.parent).foreach(walk)
     meta.manifestNames.values.foreach(walk)
     live.toSet
-  }
-
-  private def readText(fc: FileContext, path: Path): String = {
-    val in = fc.open(path)
-    try {
-      val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-      val sb = new StringBuilder
-      var line = reader.readLine()
-      while (line != null) { sb.append(line); line = reader.readLine() }
-      sb.toString()
-    } finally in.close()
   }
 
   /** Lock-free readers can catch a commit mid-rename: on filesystems whose
@@ -645,7 +636,7 @@ object LogMetadata {
           if (!fc.util().exists(path)) {
             val hasData = fc.util().exists(new Path(cfg.dir))
             if (!hasData || attempt >= MaxReadRetries) Some(empty(cfg)) else None
-          } else Some(resolveManifests(cfg, fc, parse(readText(fc, path))))
+          } else Some(resolveManifests(cfg, fc, parse(FsIO.readString(fc, path))))
         } catch {
           case e: java.io.IOException =>
             if (attempt >= MaxReadRetries) throw e else None
@@ -826,7 +817,7 @@ object LogMetadata {
     // topic re-creation at the same path can leave same-version snapshots:
     // the newest one belongs to the current topic incarnation
     val snap = candidates.maxBy(_.getModificationTime).getPath
-    resolveManifests(cfg, fc, parse(readText(fc, snap)))
+    resolveManifests(cfg, fc, parse(FsIO.readString(fc, snap)))
   }
 
   /** The newest retained commit version whose commit time is at or before
@@ -865,7 +856,7 @@ object LogMetadata {
       if (hit != null) hit
       else {
         val st = byVersion(i)._2
-        val ms = try parse(readText(fc, st.getPath)).commitMs
+        val ms = try parse(FsIO.readString(fc, st.getPath)).commitMs
           catch { case scala.util.control.NonFatal(_) => 0L }
         val r = ((if (ms > 0) ms else st.getModificationTime) * 1000L, ms == 0L)
         cache.put(i, r)
@@ -928,12 +919,14 @@ object LogMetadata {
       })
     snaps.groupBy(_._1).toSeq
       .map { case (_, fs) => fs.maxBy(_._2.getModificationTime)._2 }
-      .flatMap(st => scala.util.Try(parse(readText(fc, st.getPath))).toOption)
+      .flatMap(st => scala.util.Try(parse(FsIO.readString(fc, st.getPath))).toOption)
       .sortBy(_.version)
   }
 
-  // -- tiny hand-rolled JSON (flat schema; avoids depending on jackson API
-  //    stability across Spark versions) ------------------------------------
+  // -- doc serde: renders are hand-rolled so every doc stays byte-stable
+  //    under its format stamp; parses read through JsonText's strict
+  //    Jackson parse, so a torn or trailing-garbage doc refuses instead of
+  //    reading as a partial view ----------------------------------------
 
   private[log] def render(m: LogMetadata): String = {
     val manifests = m.manifestNames.toSeq.sorted.map { case (p, n) =>
@@ -1059,49 +1052,49 @@ object LogMetadata {
   private[log] val SparseFormat = 3
   private[log] val DenseFormat = 2
 
-  private def checkFormat(s: String, what: String): Unit = {
-    """"format"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      .filter(_ > CurrentFormat)
-      .foreach { v =>
-        throw new IllegalStateException(
-          s"$what uses metadata format $v; this reader supports <= " +
-            s"$CurrentFormat. Upgrade the reader before consuming this topic.")
-      }
-  }
+  private def checkFormat(doc: JsonNode, what: String): Unit =
+    JsonText.longField(doc, "format").filter(_ > CurrentFormat).foreach { v =>
+      throw new IllegalStateException(
+        s"$what uses metadata format $v; this reader supports <= " +
+          s"$CurrentFormat. Upgrade the reader before consuming this topic.")
+    }
 
   private[log] def parseManifestDoc(s: String): ManifestDoc = {
-    checkFormat(s, "manifest doc")
-    val parent = """"parent"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-    val depth = """"depth"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toInt).getOrElse(0)
+    val doc = JsonText.parseObject(s)
+    checkFormat(doc, "manifest doc")
     // segment entry order is the append order — do NOT sort here; the
     // chain resolver sorts the concatenated result once
-    ManifestDoc(parent, depth, FileEntryRe.findAllMatchIn(s).map(entryOf).toVector)
+    ManifestDoc(Option(doc.get("parent")).map(JsonText.text),
+      JsonText.longField(doc, "depth").fold(0)(intOf),
+      arrayOf(doc, "files").map(entryOf).toVector)
   }
 
-  private def entryOf(m: scala.util.matching.Regex.Match): FileEntry =
-    FileEntry(m.group(1).toInt, m.group(2), m.group(3).toLong,
-      m.group(4).toLong, m.group(5).toLong, m.group(6).toLong,
-      m.group(7).toLong,
+  // a file tuple: [part,"name",min,max,count,bytes,createdMs] plus the
+  // optional suffix tsMin,tsMax,tsNulls,cleanedMs,"txnHex",txnEpoch
+  private def entryOf(t: JsonNode): FileEntry = {
+    require(t.isArray && t.size >= 7 && t.size <= 13, s"malformed file entry $t")
+    def at(i: Int, absent: Long): Long =
+      if (i < t.size) JsonText.long(t.get(i)) else absent
+    FileEntry(intOf(at(0, 0L)), JsonText.text(t.get(1)), at(2, 0L),
+      at(3, 0L), at(4, 0L), at(5, 0L), at(6, 0L),
       // ts stats are a round-4 addition: absent in older manifests →
       // full-range sentinel (never prune); the null count is round-9 —
       // absent → -1 (unknown: min/max pruning stays sound, order-based
       // pruning refuses)
-      if (m.group(8) == null) Long.MinValue else m.group(8).toLong,
-      if (m.group(9) == null) Long.MaxValue else m.group(9).toLong,
-      if (m.group(10) == null) -1L else m.group(10).toLong,
+      at(7, Long.MinValue), at(8, Long.MaxValue), at(9, -1L),
       // cleanedMs is a round-12 addition: absent → -1 (never cleaned /
       // legacy — the cleaner falls back to the kc-name parse)
-      if (m.group(11) == null) -1L else m.group(11).toLong,
+      at(10, -1L),
       // producer-txn mark (r13): hex-encoded transactional.id, absent on
       // plain committed segments
-      Option(m.group(12)).map(hexDecode),
+      if (t.size > 11) Some(hexDecode(JsonText.text(t.get(11)))) else None,
       // the mark's fencing epoch (r14): absent in r13 manifests → -1
       // (unknown — resolution falls back to the id-only rule)
-      if (m.group(13) == null) -1L else m.group(13).toLong)
+      at(12, -1L))
+  }
 
   private[log] def parseManifest(s: String): Vector[FileEntry] =
-    FileEntryRe.findAllMatchIn(s).map(entryOf).toVector.sortBy(_.minOffset)
+    parseManifestDoc(s).files.sortBy(_.minOffset)
 
   private[log] def hexEncode(s: String): String =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -1117,75 +1110,68 @@ object LogMetadata {
     new String(out, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  private val FileEntryRe =
-    """\[(\d+),"([^"]+)",(-?\d+),(-?\d+),(\d+),(\d+),(\d+)(?:,(-?\d+),(-?\d+)(?:,(-?\d+)(?:,(-?\d+)(?:,"([0-9a-f]*)"(?:,(-?\d+))?)?)?)?)?\]""".r
+  private def intOf(v: Long): Int = {
+    require(v >= 0L && v <= Int.MaxValue, s"expected a non-negative int, got $v")
+    v.toInt
+  }
 
-  private val SinkCommitRe = """\["([0-9a-f]*)",(\d+)(?:,(\d+))?\]""".r
-
-  private val ManifestRe = """\[(\d+),"([^"]+)"\]""".r
+  // the array field `name` of `doc` (empty when an optional one is absent)
+  private def arrayOf(doc: JsonNode, name: String, optional: Boolean = false): Iterator[JsonNode] =
+    Option(doc.get(name)) match {
+      case Some(a) if a.isArray => a.elements.asScala
+      case None if optional => Iterator.empty
+      case other => throw new IllegalArgumentException(
+        s"metadata field '$name' must be an array, got ${other.getOrElse("nothing")}")
+    }
 
   private[log] def parse(s: String): LogMetadata = {
-    checkFormat(s, "topic root doc")
-    def longField(name: String): Long = {
-      val m = s""""$name"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(s)
-        .getOrElse(throw new IllegalArgumentException(s"missing $name in metadata: $s"))
-      m.group(1).toLong
-    }
-    val arr = """"producerOffsets"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(s)
-      .getOrElse(throw new IllegalArgumentException(s"missing producerOffsets: $s"))
-      .group(1).trim
-    val offsets =
-      if (arr.isEmpty) Vector.empty[Long]
-      else arr.split(",").map(_.trim.toLong).toVector
-    val sinkTuples = SinkCommitRe.findAllMatchIn(s).map { m =>
-      (hexDecode(m.group(1)), m.group(2).toLong, Option(m.group(3)).map(_.toLong))
+    val doc = JsonText.parseObject(s)
+    checkFormat(doc, "topic root doc")
+    def longField(name: String): Long = JsonText.longField(doc, name)
+      .getOrElse(throw new IllegalArgumentException(s"missing $name in metadata: $s"))
+    val offsets = arrayOf(doc, "producerOffsets").map(JsonText.long).toVector
+    // sink ids are hex-encoded; pre-r9 entries carry no commit timestamp
+    val sinkTuples = arrayOf(doc, "sinkCommits", optional = true).map { t =>
+      require(t.isArray && (t.size == 2 || t.size == 3), s"malformed sink commit $t")
+      (hexDecode(JsonText.text(t.get(0))), JsonText.long(t.get(1)),
+        if (t.size == 3) Some(JsonText.long(t.get(2))) else None)
     }.toVector
     val sinks = sinkTuples.map { case (id, b, _) => id -> b }.toMap
     val sinkMs = sinkTuples.collect { case (id, _, Some(ms)) => id -> ms }.toMap
     // current docs point at per-partition manifests; legacy docs (pre
     // manifest-list) carry [part,"name",min,max,count,bytes,createdMs]
     // file tuples inline — read both, publish always writes the new shape
-    val manifestSection =
-      """"manifests"\s*:\s*\[(.*)\]""".r.findFirstMatchIn(s).map(_.group(1))
-    val (byPart, names) = manifestSection match {
-      case Some(sec) =>
+    val (byPart, names) =
+      if (doc.has("manifests"))
         (Map.empty[Int, Vector[FileEntry]],
-          ManifestRe.findAllMatchIn(sec)
-            .map(m => m.group(1).toInt -> m.group(2)).toMap)
-      case None =>
-        val files = FileEntryRe.findAllMatchIn(s).map(entryOf).toVector
+          arrayOf(doc, "manifests").map { t =>
+            require(t.isArray && t.size == 2, s"malformed manifest pointer $t")
+            intOf(JsonText.long(t.get(0))) -> JsonText.text(t.get(1))
+          }.toMap)
+      else {
+        val files = arrayOf(doc, "files", optional = true).map(entryOf).toVector
         (files.groupBy(_.part).map { case (p, v) => p -> v.sortBy(_.minOffset) },
           Map.empty[Int, String])
-    }
-    // commitMs is a round-8 addition: absent in older docs → 0 (legacy,
-    // mtime fallback in versionAt)
-    val commitMs = """"commitMs"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong).getOrElse(0L)
-    // per-topic config overrides (r10): values are surface-validated to an
-    // escape-free charset, so the non-nested object match is exact
-    val props = """"props"\s*:\s*\{([^{}]*)\}""".r.findFirstMatchIn(s)
-      .map(m => """"([^"]+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(m.group(1))
-        .map(p => p.group(1) -> p.group(2)).toMap)
-      .getOrElse(Map.empty[String, String])
-    val logStarts = """"logStarts"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(s)
-      .map(_.group(1).trim).filter(_.nonEmpty)
-      .map(_.split(",").map(_.trim.toLong).toVector)
-      .getOrElse(Vector.empty[Long])
-    // deferred-deletion ledger (r12): tuples hold no nested brackets, so
-    // the section ends at the first `]]`
-    val pendingDeletes = """"pendingDeletes"\s*:\s*\[(.*?\])\s*\]""".r
-      .findFirstMatchIn(s).map(_.group(1))
-      .map(sec => """\[(\d+)\s*,\s*"([^"]+)"\s*,\s*(\d+)\s*\]""".r
-        .findAllMatchIn(sec)
-        .map(m => PendingDelete(m.group(1).toInt, m.group(2), m.group(3).toLong))
-        .toVector)
-      .getOrElse(Vector.empty)
-    // writer-lease stamp (r15): absent in pre-lease docs → 0 (unleased)
-    val writerEpoch = """"writerEpoch"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong).getOrElse(0L)
-    LogMetadata(longField("version"), longField("clusterSize").toInt,
-      longField("rangesPerToken").toInt, offsets, byPart, sinks, names,
-      commitMs, sinkMs, props, logStarts, pendingDeletes, writerEpoch)
+      }
+    // per-topic config overrides (r10): a flat string → string object
+    val props = Option(doc.get("props")).map { o =>
+      require(o.isObject, s"metadata field 'props' must be an object, got $o")
+      o.properties.asScala.map(e => e.getKey -> JsonText.text(e.getValue)).toMap
+    }.getOrElse(Map.empty[String, String])
+    val pendingDeletes = arrayOf(doc, "pendingDeletes", optional = true).map { t =>
+      require(t.isArray && t.size == 3, s"malformed pending delete $t")
+      PendingDelete(intOf(JsonText.long(t.get(0))), JsonText.text(t.get(1)),
+        JsonText.long(t.get(2)))
+    }.toVector
+    LogMetadata(longField("version"), intOf(longField("clusterSize")),
+      intOf(longField("rangesPerToken")), offsets, byPart, sinks, names,
+      // commitMs is a round-8 addition: absent in older docs → 0 (legacy,
+      // mtime fallback in versionAt)
+      JsonText.longField(doc, "commitMs").getOrElse(0L), sinkMs, props,
+      arrayOf(doc, "logStarts", optional = true).map(JsonText.long).toVector,
+      pendingDeletes,
+      // writer-lease stamp (r15): absent in pre-lease docs → 0 (unleased)
+      JsonText.longField(doc, "writerEpoch").getOrElse(0L))
   }
 }
 

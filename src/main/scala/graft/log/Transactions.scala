@@ -1,5 +1,6 @@
 package graft.log
 
+import graft.functions.JsonText
 import org.apache.hadoop.fs.Path
 
 /**
@@ -126,9 +127,6 @@ object Transactions {
   private def writeFile(p: Path, text: String, overwrite: Boolean): Unit =
     FsIO.writeString(p, text, overwrite)
 
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem, p: Path): String =
-    FsIO.readString(fs, p)
-
   // same-driver serialization of begin/commit/abort/recover per id — the
   // driver is the only metadata authority (SURVEY §7.1), so this makes the
   // marker writes race-free where they can race at all; the deterministic
@@ -142,28 +140,36 @@ object Transactions {
   private def lockFor(root: String, txnId: String): Object =
     lockStripes(java.lang.Math.floorMod(s"$root#$txnId".hashCode, 1024))
 
-  private val KindRe = """"kind"\s*:\s*"(\w+)"""".r
-  private val EpochRe = """"epoch"\s*:\s*(-?\d+)""".r
-
-  /** The (kind, epoch) standing in a marker/record file, retried briefly: a
-    * just-created marker may be momentarily empty (create precedes the
-    * content write). Epoch is -1 for r13-written markers. */
-  private def kindOf(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[(String, Long)] = {
+  /** `read` of the doc at `p`, retried briefly: a just-created marker may
+    * be momentarily empty or torn (create precedes the content write).
+    * None = absent, or still unreadable (or `read` None) after retries. */
+  private def readDoc[T](fs: org.apache.hadoop.fs.FileSystem, p: Path)(
+      read: com.fasterxml.jackson.databind.JsonNode => Option[T]): Option[T] = {
     var attempt = 0
     while (attempt < 5) {
       try {
         if (!fs.exists(p)) return None
-        val text = readSmall(fs, p)
-        val k = KindRe.findFirstMatchIn(text).map(_.group(1))
-        if (k.isDefined) return k.map(_ -> EpochRe.findFirstMatchIn(text)
-          .map(_.group(1).toLong).getOrElse(-1L))
-      } catch { case _: java.io.IOException => () }
+        val got = read(JsonText.parseObject(FsIO.readString(fs, p)))
+        if (got.isDefined) return got
+      } catch { case _: java.io.IOException | _: IllegalArgumentException => () }
       attempt += 1
       Thread.sleep(10)
     }
     None
   }
+
+  /** The (kind, epoch) standing in a marker/record file. Epoch is -1 for
+    * r13-written markers. */
+  private def kindOf(
+      fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[(String, Long)] =
+    readDoc(fs, p)(d => Option(d.get("kind")).map(k =>
+      JsonText.text(k) -> JsonText.longField(d, "epoch").getOrElse(-1L)))
+
+  /** open.json's (epoch, timeoutMs); a torn one reads as absent. */
+  private def openOf(
+      fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[(Long, Long)] =
+    readDoc(fs, p)(d => Some((JsonText.longField(d, "epoch").getOrElse(1L),
+      JsonText.longField(d, "timeoutMs").getOrElse(DefaultTimeoutMs))))
 
   /** The id's finalize record: (epoch, kind) of the LAST fully finalized
     * incarnation. None = never finalized (or a pre-r14 finalize). */
@@ -323,17 +329,12 @@ object Transactions {
       try {
         if (!fs.exists(d)) return Unknown
         val openP = new Path(d, "open.json")
-        def openState(): Option[Open] = {
-          if (!fs.exists(openP)) return None
-          val text = readSmall(fs, openP)
-          def longOf(name: String, dflt: Long) =
-            s""""$name"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(text)
-              .map(_.group(1).toLong).getOrElse(dflt)
+        def openState(): Option[Open] = openOf(fs, openP).map { case (e, t) =>
           val anchor = (Seq(fs.getFileStatus(openP).getModificationTime) ++
             (if (fs.exists(new Path(d, "hb")))
               Seq(fs.getFileStatus(new Path(d, "hb")).getModificationTime)
             else Seq.empty)).max
-          Some(Open(longOf("epoch", 1L), anchor, longOf("timeoutMs", DefaultTimeoutMs)))
+          Open(e, anchor, t)
         }
         val termP = new Path(d, "terminal.json")
         kindOf(fs, termP) match {
@@ -376,9 +377,9 @@ object Transactions {
               case Some(live) => return live
               case None =>
                 // finalize deletes open.json BEFORE the directory, so this
-                // state is either a torn begin (nothing staged) or a
-                // finalize already past its mark-resolution — Aborted is
-                // safe for both (recover's Aborted handling is idempotent)
+                // state is either a torn begin (no or a torn open.json,
+                // nothing staged) or a finalize already past its
+                // mark-resolution — Aborted is safe for both (recover's Aborted handling is idempotent)
                 return if (fs.exists(d)) Aborted() else Unknown
             }
         }
@@ -515,11 +516,20 @@ object Transactions {
     else fs.listStatus(d).toSeq.flatMap { s =>
       s.getPath.getName match {
         case StagedOffsetsRe(topicHex, groupHex) =>
-          val text = readSmall(fs, s.getPath)
+          // a torn staging refuses: read as a prefix it could carry a
+          // smaller epoch or a partial offsets map
+          val (offsets, epoch) =
+            try {
+              val doc = JsonText.parseObject(FsIO.readString(fs, s.getPath))
+              (ConsumerGroups.parseOffsets(doc),
+                JsonText.longField(doc, "epoch").getOrElse(-1L))
+            } catch {
+              case e: IllegalArgumentException => throw new IllegalStateException(
+                s"staged offsets ${s.getPath} of transaction '$txnId' are " +
+                  s"unreadable (${e.getMessage}); refusing to guess them", e)
+            }
           Some((LogMetadata.hexDecode(topicHex), LogMetadata.hexDecode(groupHex),
-            ConsumerGroups.parseOffsets(text),
-            s.getPath.getName,
-            EpochRe.findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(-1L)))
+            offsets, s.getPath.getName, epoch))
         case _ => None
       }
     }
@@ -964,14 +974,13 @@ object Transactions {
             case None => state(root, txnId) // torn marker: full discipline
           }
         case None => entries.get("open.json") match {
-          case Some(openSt) =>
-            val text = readSmall(fs, openSt.getPath)
-            def longOf(name: String, dflt: Long) =
-              s""""$name"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(text)
-                .map(_.group(1).toLong).getOrElse(dflt)
-            val anchor = (Seq(openSt.getModificationTime) ++
-              entries.get("hb").map(_.getModificationTime)).max
-            Open(longOf("epoch", 1L), anchor, longOf("timeoutMs", DefaultTimeoutMs))
+          case Some(openSt) => openOf(fs, openSt.getPath) match {
+            case Some((e, t)) =>
+              val anchor = (Seq(openSt.getModificationTime) ++
+                entries.get("hb").map(_.getModificationTime)).max
+              Open(e, anchor, t)
+            case None => state(root, txnId) // torn open.json: full discipline
+          }
           case None => Aborted() // mid-finalize shape, same rule as state()
         }
       }

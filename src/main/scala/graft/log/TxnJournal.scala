@@ -1,5 +1,6 @@
 package graft.log
 
+import graft.functions.JsonText
 import org.apache.hadoop.fs.Path
 
 /**
@@ -121,8 +122,6 @@ object TxnJournal {
     } catch { case _: java.io.IOException => () }
   }
 
-  private val TxnRe = """"txn"\s*:\s*\["([0-9a-f]*)",(\d+)\]""".r
-
   /** All live journals under `root`, with the age anchor recovery's grace
     * window is measured against: the NEWEST of the commit-point mtime and
     * the committer's `hb` heartbeat (see [[heartbeat]]).
@@ -147,32 +146,36 @@ object TxnJournal {
         scala.util.Try {
         val files = fs.listStatus(s.getPath).filter(_.isFile)
         val txnFile = files.find(_.getPath.getName == "txn.json")
-        val txn = txnFile.flatMap { f =>
-          val in = fs.open(f.getPath)
-          val text = try {
-            val buf = new Array[Byte](f.getLen.toInt)
-            in.readFully(0, buf); new String(buf, "UTF-8")
-          } finally in.close()
-          TxnRe.findFirstMatchIn(text).map(m =>
-            LogMetadata.hexDecode(m.group(1)) -> m.group(2).toLong)
+        // the commit point counts only when it parses whole: a torn
+        // txn.json is a committer that died writing it, before any CAS —
+        // an incomplete intent, never a complete one with a lost txn
+        val head = txnFile.flatMap { f =>
+          val text = FsIO.readString(fs, f.getPath)
+          try Some(JsonText.parseObject(text))
+          catch { case _: IllegalArgumentException => None }
+        }
+        val txn = head.flatMap(d => Option(d.get("txn"))).map { t =>
+          require(t.isArray && t.size == 2, s"malformed journal txn $t")
+          LogMetadata.hexDecode(JsonText.text(t.get(0))) -> JsonText.long(t.get(1))
         }
         val topics = files
           .filter(f => f.getPath.getName.startsWith("t-") &&
             f.getPath.getName.endsWith(".json"))
           .map { f =>
-            val in = fs.open(f.getPath)
-            val text = try {
-              val buf = new Array[Byte](f.getLen.toInt)
-              in.readFully(0, buf); new String(buf, "UTF-8")
-            } finally in.close()
+            val text = FsIO.readString(fs, f.getPath)
+            // t-files are all written before the commit point: a torn one
+            // in an INCOMPLETE intent names nothing recovery may rely on
+            // (its files are unregistered orphans vacuum reclaims); in a
+            // complete one it is corruption and fails closed
             f.getPath.getName.stripPrefix("t-").stripSuffix(".json") ->
-              LogMetadata.parseManifest(text)
+              (try LogMetadata.parseManifest(text)
+               catch { case _: IllegalArgumentException if head.isEmpty => Vector.empty })
           }.toMap
         val anchor = (txnFile.map(_.getModificationTime) ++
           files.find(_.getPath.getName == "hb").map(_.getModificationTime))
           .maxOption.getOrElse(s.getModificationTime)
         Journal(s.getPath.toString, anchor,
-          txn, complete = txnFile.isDefined, topics)
+          txn, complete = head.isDefined, topics)
         } match {
           case scala.util.Success(j) => Some(j)
           case scala.util.Failure(e) =>

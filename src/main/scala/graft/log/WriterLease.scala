@@ -1,5 +1,6 @@
 package graft.log
 
+import graft.functions.JsonText
 import org.apache.hadoop.fs.Path
 
 /**
@@ -115,17 +116,6 @@ object WriterLease {
   private def fsOf(p: Path) = p.getFileSystem(HadoopConf.shared)
 
   private val EpochNameRe = """^e(\d+)\.json$""".r
-  private val HolderRe = """"holder"\s*:\s*"([^"]*)"""".r
-  private val DeadlineRe = """"deadlineMs"\s*:\s*(-?\d+)""".r
-  private val TtlRe = """"ttlMs"\s*:\s*(-?\d+)""".r
-  // the COMPLETE shape writeEpochFile emits — adoption requires a full
-  // match: a doc torn mid-deadline-digits would still satisfy the field
-  // regexes with a TRUNCATED (earlier) deadline, turning a torn acquire
-  // into an instantly seizable lease while its writer may be alive; the
-  // end anchor makes any truncation fall to the conservative hold
-  private val LeaseDocRe =
-    """^\{"format":1,"holder":"[^"]*","deadlineMs":-?\d+,"ttlMs":-?\d+,"ms":-?\d+\}$""".r
-
   /** Valid holder ids are file/JSON-safe (same charset as group names). */
   def validHolderId(id: String): Boolean =
     id.nonEmpty && id.length <= 120 &&
@@ -163,23 +153,20 @@ object WriterLease {
       var pruned = false
       while (attempt < 5 && !pruned) {
         try {
-          val text = FsIO.readString(fs, p).trim
-          // the WHOLE doc must match the written shape for it to speak
-          // for its creator (plus overflow-safe field parses): any
-          // truncation or corruption falls to the conservative
-          // unreadable hold below, never to a bogus earlier deadline
-          val holder = HolderRe.findFirstMatchIn(text).map(_.group(1))
-          val deadline =
-            DeadlineRe.findFirstMatchIn(text).flatMap(_.group(1).toLongOption)
-          if (LeaseDocRe.findFirstIn(text).isDefined &&
-              holder.isDefined && deadline.isDefined) {
-            return Some(Lease(root, holder.get, epoch, deadline.get,
-              TtlRe.findFirstMatchIn(text).flatMap(_.group(1).toLongOption)
-                .getOrElse(DefaultTtlMs)))
+          // the doc must parse WHOLE (plus overflow-safe field reads) for
+          // it to speak for its creator: a doc torn mid-deadline-digits
+          // would otherwise read as a TRUNCATED (earlier) deadline, turning
+          // a torn acquire into an instantly seizable lease while its
+          // writer may be alive — any truncation or corruption falls to
+          // the conservative unreadable hold below
+          val doc = JsonText.parseObject(FsIO.readString(fs, p))
+          if (JsonText.longField(doc, "format").contains(1L)) {
+            return Some(Lease(root, JsonText.text(doc.path("holder")), epoch,
+              JsonText.long(doc.path("deadlineMs")), JsonText.long(doc.path("ttlMs"))))
           }
         } catch {
           case _: java.io.FileNotFoundException => pruned = true // re-list
-          case _: java.io.IOException => ()
+          case _: java.io.IOException | _: IllegalArgumentException => ()
         }
         if (!pruned) { attempt += 1; Thread.sleep(10) }
       }

@@ -1,5 +1,6 @@
 package graft.serving
 
+import graft.functions.JsonText
 import graft.log.{ConsumerGroups, PolarLog, RetentionScheduler, RingTemplate, TopicConfig, TopicOps}
 import io.netty.buffer.{ByteBuf, ByteBufUtil, Unpooled}
 import io.netty.channel.{Channel, ChannelFuture, ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer}
@@ -509,7 +510,7 @@ class PolarHttpServer(
             .getOrElse(graft.log.Transactions.DefaultTimeoutMs)
           val h = txnCall(graft.log.Transactions.begin(root, id, timeoutMs))
           respond(ex, 200,
-            s"""{"id":${PolarHttpServer.jsonStr(id)},"epoch":${h.epoch},""" +
+            s"""{"id":${JsonText.quote(id)},"epoch":${h.epoch},""" +
               s""""timeoutMs":$timeoutMs}""", "application/json")
         case ("POST", "/v1/txn/commit") =>
           txnCall(graft.log.Transactions.commit(txnHandleOf(ex)))
@@ -532,7 +533,8 @@ class PolarHttpServer(
             throw HttpError(400, s"Invalid group name: '$g'")
           val offsJson = q.get("offsets").flatMap(_.headOption).getOrElse(
             new String(ex.body, UTF_8))
-          val offs = ConsumerGroups.parseOffsets(offsJson)
+          val offs = try ConsumerGroups.parseOffsetMap(offsJson)
+            catch { case _: IllegalArgumentException => Map.empty[Int, Long] }
           if (offs.isEmpty) throw HttpError(400,
             """offsets are required as {"partition":nextOffset,...} (query param or body)""")
           txnCall(graft.log.Transactions.sendOffsets(h, cfgOf(t), g, offs))
@@ -853,12 +855,12 @@ class PolarHttpServer(
             s""""$t":$lag"""
           }.toOption
         }
-        // jsonStr everywhere a stored name is reflected: group names are
-        // validated at register, but defense-in-depth beats assuming every
-        // writer path validated (conn-derived ids carry ':' and '.')
-        s"""{"name":${PolarHttpServer.jsonStr(g)},"members":[${
-          ids.map(PolarHttpServer.jsonStr).mkString(",")}],""" +
-          s""""topics":[${topics.map(PolarHttpServer.jsonStr).mkString(",")}],""" +
+        // JsonText.quote everywhere a stored name is reflected: group names
+        // are validated at register, but defense-in-depth beats assuming
+        // every writer path validated (conn-derived ids carry ':' and '.')
+        s"""{"name":${JsonText.quote(g)},"members":[${
+          ids.map(JsonText.quote).mkString(",")}],""" +
+          s""""topics":[${topics.map(JsonText.quote).mkString(",")}],""" +
           s""""lag":{${lags.mkString(",")}}}"""
       }
     respond(ex, 200, body.mkString("""{"groups":[""", ",", "]}"),
@@ -884,7 +886,7 @@ class PolarHttpServer(
       val subs = members.filter(_.topics.contains(t)).map(_.consumerId).distinct.sorted
       val assign = ConsumerGroups.assignment(cfg, subs)
       val assignJson = subs.map { m =>
-        s"""${PolarHttpServer.jsonStr(m)}:[${
+        s"""${JsonText.quote(m)}:[${
           assign.getOrElse(m, Seq.empty).sorted.mkString(",")}]"""
       }.mkString("{", ",", "}")
       val parts = tails.toSeq.sortBy(_._1).map { case (p, tl) =>
@@ -894,8 +896,8 @@ class PolarHttpServer(
       s"""{"topic":"$t","assignments":$assignJson,"partitions":$parts}"""
     }.mkString("[", ",", "]")
     respond(ex, 200,
-      s"""{"name":${PolarHttpServer.jsonStr(g)},"members":[${
-        ids.map(PolarHttpServer.jsonStr).mkString(",")}],""" +
+      s"""{"name":${JsonText.quote(g)},"members":[${
+        ids.map(JsonText.quote).mkString(",")}],""" +
         s""""topics":$topicJson}""",
       "application/json")
   }
@@ -923,7 +925,7 @@ class PolarHttpServer(
       s"""{"partition":${l.part},"committed":${l.committed},""" +
         s""""tail":${l.tail},"lag":${l.lag}}""").mkString("[", ",", "]")
     respond(ex, 200,
-      s"""{"group":${PolarHttpServer.jsonStr(g)},"topic":"$t","partitions":$body}""",
+      s"""{"group":${JsonText.quote(g)},"topic":"$t","partitions":$body}""",
       "application/json")
   }
 
@@ -965,7 +967,7 @@ class PolarHttpServer(
     val body = next.toSeq.sorted
       .map { case (p, o) => s""""$p":$o""" }.mkString("{", ",", "}")
     respond(ex, 200,
-      s"""{"group":${PolarHttpServer.jsonStr(g)},"topic":"$t","offsets":$body}""",
+      s"""{"group":${JsonText.quote(g)},"topic":"$t","offsets":$body}""",
       "application/json")
   }
 
@@ -1036,32 +1038,30 @@ class PolarHttpServer(
     }
 
     var servedPending = Map.empty[String, Map[Int, Long]]
-    // the binary response's item count is a u16: cap the records ONE poll
-    // admits across all topics (the remainder auto-commits forward on
-    // later polls, same as the byte cap)
-    var countBudget = if (json) Long.MaxValue else 0xFFFFL
+    // the binary response's item count is a u16 and a topic renders at
+    // most one item per partition: a topic is polled only while its
+    // partition count still fits the budget (the rest wait for the next
+    // poll, same as the byte cap's remainder)
+    var itemBudget = if (json) Long.MaxValue else 0xFFFFL
     val items = r.topics.flatMap { topic =>
       val cfg = cfgOf(topic)
-      if (countBudget <= 0L) Seq.empty // budget spent: next poll's turn
+      if (itemBudget < cfg.numPartitions) Seq.empty // next poll's turn
       else {
+        itemBudget -= cfg.numPartitions
         // byte-bounded chunk per poll — the reference's
         // ConsumerReadThreshold (2 MiB, `internal/conf/config.go:278-280`);
         // the rest is served by subsequent polls after auto-commit
         val poll = ConsumerGroups.pollAs(spark, cfg, r.group, r.consumerId,
           members, r.policy, r.isolation,
-          maxBytes = Some(maxPollBytes).filter(_ > 0),
-          maxRecords = Some(countBudget).filter(_ != Long.MaxValue))
+          maxBytes = Some(maxPollBytes).filter(_ > 0))
         val served = poll.nextOffsets.filter { case (p, e) =>
           e > poll.startOffsets.getOrElse(p, 0L)
         }
         if (served.isEmpty) Seq.empty
         else {
           servedPending += topic -> served
-          val rendered =
-            if (json) TopicOps.pollJson(cfg, poll.records).map(_.getBytes(UTF_8))
-            else TopicOps.pollBinary(cfg, poll.records)
-          if (countBudget != Long.MaxValue) countBudget -= rendered.size
-          rendered
+          if (json) TopicOps.pollJson(cfg, poll.records).map(_.getBytes(UTF_8))
+          else TopicOps.pollBinary(cfg, poll.records)
         }
       }
     }
@@ -1147,16 +1147,4 @@ object PolarHttpServer {
       // Kafka's consumer isolation.level, fixed at registration
       isolation: String = "read_uncommitted")
 
-  /** Minimal JSON string escaping for user-supplied values interpolated
-    * into hand-rolled response bodies (quotes, backslashes, controls). */
-  private[serving] def jsonStr(s: String): String = {
-    val sb = new StringBuilder(s.length + 2).append('"')
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
 }

@@ -179,9 +179,7 @@ private[sources] object PolarProcedures {
         val arg = a.getUTF8String(1).toString.trim
         // deleteRecords resolves -1 = tail natively; this only parses
         val cuts: Map[Int, Long] =
-          if (arg.startsWith("{"))
-            """"(\d+)"\s*:\s*(-?\d+)""".r.findAllMatchIn(arg).map(m =>
-              m.group(1).toInt -> m.group(2).toLong).toMap
+          if (arg.startsWith("{")) ConsumerGroups.parseOffsetMap(arg)
           else
             PolarLog.tails(cfg).keys.map(_ -> arg.toLong).toMap
         Seq(new GenericInternalRow(Array[Any](
@@ -361,7 +359,7 @@ private[sources] object PolarProcedures {
               throw new IllegalArgumentException(
                 s"group '$group' has no committed position on ${cfg.topic}; " +
                   "pass offsets explicitly"))
-          else ConsumerGroups.parseOffsets(json)
+          else ConsumerGroups.parseOffsetMap(json)
         Transactions.sendOffsets(Transactions.TxnHandle(
           root, a.getUTF8String(0).toString, a.getLong(1)), cfg, group, offsets)
         Seq(new GenericInternalRow(Array[Any](offsets.size)))

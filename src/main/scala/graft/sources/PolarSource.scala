@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.JsonText
 import graft.log.{LogMetadata, PolarLog, TopicConfig}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -112,14 +113,16 @@ object PolarSource {
     // Kafka's `assign` mode: an explicit (topic → partitions) map replaces
     // the subscription — only the named partitions are ever planned
     val assign: Option[Map[String, Set[Int]]] = opt("assign").map { s =>
-      val m = """"([^"]+)"\s*:\s*\[([0-9,\s]*)\]""".r.findAllMatchIn(s).map { g =>
-        g.group(1) -> g.group(2).split(",").map(_.trim).filter(_.nonEmpty)
-          .map(_.toInt).toSet
-      }.toMap
-      require(m.nonEmpty && m.values.forall(_.nonEmpty),
+      val m =
+        try JsonText.parseObject(s).properties.asScala.map { e =>
+          require(e.getValue.isArray && !e.getValue.isEmpty)
+          e.getKey -> e.getValue.elements.asScala.map(JsonText.long).toSet
+        }.toMap
+        catch { case _: IllegalArgumentException => Map.empty[String, Set[Long]] }
+      require(m.nonEmpty && m.values.flatten.forall(p => p >= 0L && p <= Int.MaxValue),
         s"""assign must be a {"topic":[part,...]} map with at least one """ +
           s"partition per topic, got '$s'")
-      m
+      m.map { case (t, ps) => t -> ps.map(_.toInt) }
     }
     val names = (opt("topic"), opt("topics"), opt("topicPattern")) match {
       case (None, None, None) if assign.isDefined =>
@@ -1411,37 +1414,26 @@ final case class PolarOffsets(tails: Map[(String, Int), Long]) extends Offset {
 }
 
 object PolarOffsets {
-  private val EntryRe = """"([^"]+)"\s*:\s*(-?\d+)""".r
-
-  /** STRICT parse of `{"topic/partition": offset, ...}`: anything the
-    * entry pattern does not account for — quoted numbers, Kafka's nested
-    * `{"topic":{"0":23}}` shape, trailing junk — REFUSES with a clear
-    * message. A silently-dropped entry would read the full log (or the
-    * wrong positions) instead of the offsets the user asked for. */
-  def parse(json: String, defaultTopic: String): PolarOffsets = {
-    val s = json.trim
-    require(s.startsWith("{") && s.endsWith("}"),
-      s"""malformed offsets map '$json' (expected {"topic/partition": offset, ...})""")
-    val inner = s.substring(1, s.length - 1)
-    val residue = EntryRe.replaceAllIn(inner, "").replaceAll("[\\s,]+", "")
-    require(residue.isEmpty,
-      s"malformed offsets map '$json': unrecognized content '$residue' " +
-        """(expected {"topic/partition": offset, ...} with NUMERIC offsets; """ +
-        "nested per-topic objects are not supported)")
-    def part(raw: String): Int =
-      try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"malformed offsets map '$json': partition '$raw' is not a number")
-      }
-    PolarOffsets(EntryRe.findAllMatchIn(inner).map { m =>
-      val k = m.group(1)
+  /** STRICT parse of `{"topic/partition": offset, ...}`: anything else —
+    * quoted numbers, Kafka's nested `{"topic":{"0":23}}` shape, trailing
+    * junk — REFUSES with a clear message. A silently-dropped entry would
+    * read the full log (or the wrong positions) instead of the offsets the
+    * user asked for. */
+  def parse(json: String, defaultTopic: String): PolarOffsets =
+    try PolarOffsets(JsonText.parseObject(json).properties.asScala.map { e =>
+      val k = e.getKey
       val slash = k.lastIndexOf('/')
-      val key =
-        if (slash < 0) (defaultTopic, part(k))
-        else (k.take(slash), part(k.drop(slash + 1)))
-      key -> m.group(2).toLong
+      val part = k.drop(slash + 1)
+      (if (slash < 0) defaultTopic else k.take(slash), part.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"partition '$part' is not a number"))) ->
+        JsonText.long(e.getValue)
     }.toMap)
-  }
+    catch {
+      case e: IllegalArgumentException => throw new IllegalArgumentException(
+        s"malformed offsets map '$json': ${e.getMessage} " +
+          """(expected {"topic/partition": offset, ...} with NUMERIC offsets; """ +
+          "nested per-topic objects are not supported)", e)
+    }
   def zeros(topics: Seq[TopicConfig]): PolarOffsets =
     PolarOffsets(topics.flatMap(c =>
       (0 until c.numPartitions).map(p => (c.topic, p) -> 0L)).toMap)

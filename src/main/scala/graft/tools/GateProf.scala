@@ -88,6 +88,9 @@ object GateProf {
         f"gc=${gcTimeMs.get / 1e3}%.1fs input=${input.get / 1e6}%.1fMB " +
         f"shufR=${shufRead.get / 1e6}%.1fMB shufW=${shufWrite.get / 1e6}%.1fMB " +
         f"jobBusy=${busyMs / 1e3}%.2fs driverGap=$gap%.2fs")
+      // session-wide sweep (stops every active stream, clears the whole SQL
+      // cache): harness-only, safe because GateProf owns the session and
+      // profiles one gate at a time.
       Materialize.sweep(spark)
       // the sweep's own async unpersist events must land before the next
       // rep resets the counters, or they'd be charged to that rep

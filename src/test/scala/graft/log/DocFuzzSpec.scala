@@ -157,4 +157,99 @@ class DocFuzzSpec extends AnyFunSuite {
       if (epoch == 0L) assert(!doc.contains("writerEpoch"), s"round $i: $doc")
     }
   }
+
+  // every strict prefix of `doc` (a torn write) plus `doc` with trailing
+  // garbage: the hostile shapes a control-plane doc read must never
+  // mistake for a smaller epoch, a different kind or a partial map
+  private def tornAndPadded(doc: String): Seq[String] =
+    (0 until doc.length).map(doc.take) :+ (doc + "garbage")
+
+  private def txnDir(root: String, id: String) =
+    new Path(s"${Transactions.dir(root)}/${LogMetadata.hexEncode(id)}")
+
+  test("txn open.json fuzz: a torn doc never reads as a smaller epoch") {
+    val root = freshRoot()
+    val epoch = 1755000000123L
+    val open = s"""{"format":1,"epoch":$epoch,"timeoutMs":45000,"startMs":1}"""
+    tornAndPadded(open).zipWithIndex.foreach { case (text, i) =>
+      val id = s"open-$i"
+      plant(new Path(txnDir(root, id), "open.json"), text.getBytes("UTF-8"))
+      Transactions.state(root, id) match {
+        case Transactions.Open(e, _, t) =>
+          assert(e === epoch && t === 45000L, s"case $i: '$text' read as epoch $e")
+        // a begin torn mid-write resolves like one that never wrote it
+        case Transactions.Aborted(e) =>
+          assert(e === -1L && text != open, s"case $i: '$text' read as aborted($e)")
+        case other => fail(s"case $i: '$text' read as $other")
+      }
+    }
+    plant(new Path(txnDir(root, "whole"), "open.json"), open.getBytes("UTF-8"))
+    assert(Transactions.state(root, "whole").isInstanceOf[Transactions.Open])
+  }
+
+  test("txn terminal marker fuzz: a torn marker never reads as another epoch or kind") {
+    val root = freshRoot()
+    val epoch = 1755000000456L
+    val marker =
+      s"""{"format":1,"kind":"commit","reason":"user","epoch":$epoch,"ms":1}"""
+    tornAndPadded(marker).zipWithIndex.foreach { case (text, i) =>
+      val id = s"term-$i"
+      plant(new Path(txnDir(root, id), "open.json"),
+        s"""{"format":1,"epoch":$epoch,"timeoutMs":60000,"startMs":1}""".getBytes("UTF-8"))
+      plant(new Path(txnDir(root, id), "terminal.json"), text.getBytes("UTF-8"))
+      Transactions.state(root, id) match {
+        case Transactions.Committed(e) =>
+          assert(e === epoch, s"case $i: '$text' read as committed at $e")
+        // unreadable marker: the live open.json stands, the arbiter retries
+        case Transactions.Open(e, _, _) =>
+          assert(e === epoch && text != marker, s"case $i: '$text' read as open($e)")
+        case other => fail(s"case $i: '$text' read as $other")
+      }
+    }
+  }
+
+  test("txn staged offsets fuzz: a torn staging refuses, never applies a prefix") {
+    val root = freshRoot()
+    val cfg = TopicConfig(root, "staged", 1, 2)
+    LogMetadata.write(cfg, LogMetadata.empty(cfg))
+    val want = Map(0 -> 12L, 1 -> 7L)
+    val h0 = Transactions.begin(root, "shape")
+    Transactions.sendOffsets(h0, cfg, "shape", want)
+    def gFile(id: String) = fs(txnDir(root, id)).listStatus(txnDir(root, id))
+      .map(_.getPath).find(_.getName.startsWith("g-")).get
+    val staged = FsIO.readString(fs(gFile("shape")), gFile("shape"))
+    Transactions.abort(h0)
+    tornAndPadded(staged).zipWithIndex.foreach { case (text, i) =>
+      val (id, group) = (s"staged-$i", s"g$i")
+      val h = Transactions.begin(root, id)
+      Transactions.sendOffsets(h, cfg, group,
+        want.map { case (p, o) => p -> (o + 100) }) // overwritten below
+      plant(gFile(id), text.replace(s"${h0.epoch}", s"${h.epoch}").getBytes("UTF-8"))
+      val committed = scala.util.Try(Transactions.commit(h))
+      if (committed.isSuccess)
+        assert(ConsumerGroups.committed(cfg, group) === Some(want),
+          s"case $i: '$text' applied a partial staging")
+      else assert(committed.failed.get.getMessage.contains("staged offsets"),
+        s"case $i: must refuse loudly, got ${committed.failed.get}")
+    }
+  }
+
+  test("journal txn.json fuzz: a torn commit point is an incomplete intent, never a lost txn") {
+    val root = freshRoot()
+    val entry = FileEntry(0, "j.parquet", 0, 9, 10, 400, 1700000000000L)
+    val jdir = TxnJournal.write(root, Map("jt" -> Seq(entry)), Some(("sink-1", 12L)))
+    val commitPoint = new Path(jdir, "txn.json")
+    val whole = FsIO.readString(fs(commitPoint), commitPoint)
+    tornAndPadded(whole).zipWithIndex.foreach { case (text, i) =>
+      plant(commitPoint, text.getBytes("UTF-8"))
+      val j = TxnJournal.list(root).head
+      assert(j.topics === Map("jt" -> Vector(entry)))
+      assert((!j.complete && j.txn.isEmpty) ||
+        (j.complete && j.txn === Some(("sink-1", 12L))),
+        s"case $i: '$text' read as complete=${j.complete} txn=${j.txn}")
+    }
+    plant(commitPoint, whole.getBytes("UTF-8"))
+    val j = TxnJournal.list(root).head
+    assert(j.complete && j.txn === Some(("sink-1", 12L)))
+  }
 }

@@ -2,7 +2,6 @@ package graft.log
 
 import graft.GraftSession
 import graft.functions.TokenMath
-import graft.streaming.GraftMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -340,29 +339,5 @@ class TopicOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(served === total - committedOf(g).values.sum,
         s"group $g served $served")
     }
-  }
-
-  test("metrics listener counts polar stream consumption (A34)") {
-    val cfg = TopicConfig(root, "t_metrics")
-    val recs = graft.Tables.events(spark, sfDir)
-      .select(col("user_id").cast("string").as("partitionKey"),
-        col("ts").as("timestamp"), col("props").as("value"))
-    PolarLog.produce(recs, cfg)
-    val metrics = GraftMetrics.attach(spark)
-    val q = graft.streaming.PolarStream.read(spark, cfg, startingOffsets = "earliest")
-      .writeStream.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", s"$root/ckpt_metrics")
-      .format("memory").queryName("t_metrics_out").start()
-    q.awaitTermination(120000)
-    // listener events are async; give the bus a moment
-    var tries = 0
-    while (metrics.snapshot.getOrElse("records_consumed", 0L) < 1000 && tries < 50) {
-      Thread.sleep(100); tries += 1
-    }
-    val snap = metrics.snapshot
-    assert(snap.getOrElse("queries_started", 0L) >= 1)
-    assert(snap.getOrElse("records_consumed", 0L) >= 1000)
-    assert(snap.getOrElse("polar_records_consumed", 0L) >= 1000)
-    spark.streams.removeListener(metrics)
   }
 }

@@ -530,6 +530,29 @@ class PolarHttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a binary poll's u16 counts items: one poll serves a >65535-record chunk the byte cap admits") {
+    val topic = "bin_many"
+    val n = 70000
+    // tiny records in ONE partition: the 2 MiB byte cap admits them all
+    PolarLog.produce(spark.range(n).selectExpr("'one-key' AS partitionKey",
+      "current_timestamp() AS timestamp", "CAST('v' AS BINARY) AS value"),
+      TopicConfig(root, topic))
+    put(s"/v1/consumer/register?consumerId=cmany&group=gmany&topic=$topic&onNewGroup=startFromEarliest")
+    val r = client.send(
+      HttpRequest.newBuilder(URI.create(s"$base/v1/consumer/poll?consumerId=cmany"))
+        .POST(BodyPublishers.noBody()).header("Accept", "application/octet-stream").build(),
+      BodyHandlers.ofByteArray())
+    assert(r.statusCode() === 200)
+    val b = java.nio.ByteBuffer.wrap(r.body())
+    assert(b.getShort() === 1, "one partition chunk is one item")
+    b.position(b.position() + 8 + 1 + 4) // token, rangeIndex, version
+    val topicLen = b.get() & 0xFF
+    b.position(b.position() + topicLen + 8) // topic, startOffset
+    val payload = b.getInt()
+    // per record: timestamp i64 | length u32 | 1-byte body
+    assert(payload === 13 * n, s"one poll must serve all $n records")
+  }
+
   test("accept negotiation: wildcard and absent Accept get JSON; the binary count is record-capped") {
     val topic = "acc"
     post(s"/v1/topic/$topic/messages?partitionKey=ka", "v".getBytes(UTF_8))
@@ -539,9 +562,9 @@ class PolarHttpServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("Accept" -> "*/*"))
     assert(r.statusCode() === 200)
     assert(r.body().trim.startsWith("["), s"wildcard Accept must be JSON: ${r.body()}")
-    // the u16 guard itself: recordCapEnd bounds one poll's admitted
-    // records across arbitrarily large backlogs (registry-only check —
-    // producing 66k records would dominate the suite's wall clock)
+    // the library record cap: recordCapEnd bounds one poll's admitted
+    // records across arbitrarily large backlogs (registry-only check; the
+    // binary poll's u16 counts items, see the test above)
     val meta = graft.log.LogMetadata(1L, 1, 1, Vector(200000L),
       filesByPart = Map(0 -> Vector.tabulate(10)(i =>
         graft.log.FileEntry(0, s"w$i.parquet", i * 20000L, i * 20000L + 19999L,

@@ -324,6 +324,22 @@ class PolarCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DROP TABLE polar.metaview")
   }
 
+  test("delete_records: a per-partition map with a quoted, nested or non-numeric entry refuses") {
+    spark.sql("CREATE TABLE polar.delrec_bad")
+    spark.sql("""INSERT INTO polar.delrec_bad SELECT * FROM VALUES
+      ('k1', TIMESTAMP '2026-01-01 00:00:00', CAST('x' AS BINARY))
+      AS t(partitionKey, timestamp, value)""")
+    Seq("""{"0":"5"}""", """{"t":{"0":5}}""", """{"x":5}""", """{"0":5.5}""",
+      """{"0":5} extra""").foreach { cuts =>
+      intercept[Exception] {
+        spark.sql("CALL polar.system.delete_records(topic => 'delrec_bad', " +
+          s"before_offset => '$cuts')").collect()
+      }
+    }
+    assert(spark.sql("SELECT count(*) FROM polar.delrec_bad").head().getLong(0) === 1L)
+    spark.sql("DROP TABLE polar.delrec_bad")
+  }
+
   test("delete_records: offset-addressed trim, clamped sentinels, survivors exact") {
     import graft.log.{LogMetadata, PolarLog, TopicConfig}
     spark.sql("CREATE TABLE polar.delrec")

@@ -160,6 +160,17 @@ class PolarSourceHardeningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(PolarOffsets.parse("{}", "t").tails.isEmpty)
   }
 
+  test("an assign map with any junk entry refuses instead of dropping it") {
+    Seq("""{"hard_a":[0,1],"junk":5}""", """{"hard_a":[0,1]} extra""",
+      """{"hard_a":[0,"1"]}""", """{"hard_a":{"0":1}}""", """{"hard_a":[]}""",
+      """{"hard_a":[0],"hard_a":[1]}""", "{}").foreach { assign =>
+      val e = intercept[IllegalArgumentException] {
+        PolarSource.configFrom(Map("root" -> root, "assign" -> assign))
+      }
+      assert(e.getMessage.contains("assign"), s"$assign: ${e.getMessage}")
+    }
+  }
+
   test("a checkpointed topic that no longer resolves plans as absent, not key-not-found") {
     val cfg = TopicConfig(root, "hard_alive")
     keyed(cfg, "a", 0 until 20)
