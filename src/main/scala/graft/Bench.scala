@@ -35,6 +35,17 @@ object Bench {
     (if (f.length > 7) f(7) else 0L, f.take(8).sum)
   }
 
+  /** The gate → seconds map of a bench reference doc: the numeric fields
+    * of its `queries` object. Anything else there (a nested object, a
+    * quoted number) is skipped without losing the gates around it. */
+  private[graft] def referenceGates(text: String): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val queries = graft.functions.JsonText.parseObject(text).path("queries")
+    queries.properties().asScala.collect {
+      case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+    }.toMap
+  }
+
   private def stealPct(before: (Long, Long), after: (Long, Long)): Double = {
     val dTotal = after._2 - before._2
     if (dTotal <= 0) 0.0 else 100.0 * (after._1 - before._1) / dTotal
@@ -175,14 +186,7 @@ object Bench {
       val refPath = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_reference.json"))
       if (!java.nio.file.Files.exists(refPath)) Map.empty
-      else {
-        val text = java.nio.file.Files.readString(refPath)
-        """"queries"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(text)
-          .map(_.group(1)).map { sec =>
-            """"([A-Za-z0-9_]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(sec)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }.getOrElse(Map.empty)
-      }
+      else referenceGates(java.nio.file.Files.readString(refPath))
     } catch { case _: Throwable => Map.empty[String, Double] }
     val outliers =
       if (reference.nonEmpty)

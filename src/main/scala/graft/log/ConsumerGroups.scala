@@ -2,9 +2,8 @@ package graft.log
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.functions.JsonText
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 /**
@@ -67,7 +66,7 @@ object ConsumerGroups {
     val path = groupPath(cfg, group)
     val fc = FileContext.getFileContext(path.toUri, HadoopConf.shared)
     if (!fc.util().exists(path)) return None
-    val text = FsIO.readString(fc, path)
+    val text = FsIO.read(path)
     try {
       val doc = JsonText.parseObject(text)
       val (offsets, epoch) = (parseOffsets(doc), JsonText.longField(doc, "writerEpoch"))
@@ -117,20 +116,8 @@ object ConsumerGroups {
       nextOffsets: Map[Int, Long], docEpoch: Long): Unit = {
     WriterLease.checkWrite(cfg.root)
     WriterLease.checkStamp(cfg.root, docEpoch)
-    val path = groupPath(cfg, group)
-    // writer-unique tmp: cross-process committers must not clobber each
-    // other's staged bytes mid-rename (same discipline as the root doc)
-    val tmp = new Path(path.toString + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val fc = FileContext.getFileContext(path.toUri, HadoopConf.shared)
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(render(nextOffsets, WriterLease.heldEpoch(cfg.root))
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fc.rename(tmp, path, Options.Rename.OVERWRITE)
+    FsIO.replace(groupPath(cfg, group),
+      render(nextOffsets, WriterLease.heldEpoch(cfg.root)))
   }
 
   /** Starting offsets for a group: committed state, or — for a brand-new

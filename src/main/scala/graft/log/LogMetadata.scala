@@ -1,8 +1,7 @@
 package graft.log
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path}
-import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileContext, Path}
 import com.fasterxml.jackson.databind.JsonNode
 import graft.functions.JsonText
 import scala.jdk.CollectionConverters._
@@ -515,12 +514,12 @@ object LogMetadata {
     resolvedCache.clear(); segmentCache.clear()
   }
 
-  private def segmentOf(cfg: TopicConfig, fc: FileContext, name: String): ManifestDoc = {
+  private def segmentOf(cfg: TopicConfig, name: String): ManifestDoc = {
     val mPath = s"${manifestDir(cfg)}/$name"
     val cached = segmentCache.get(mPath)
     if (cached != null) cached
     else {
-      val doc = parseManifestDoc(FsIO.readString(fc, new Path(mPath)))
+      val doc = parseManifestDoc(FsIO.read(new Path(mPath)))
       cacheSegment(mPath, doc)
       doc
     }
@@ -531,14 +530,14 @@ object LogMetadata {
     * by offset. Chain contents are immutable given the head name, so the
     * resolution caches at every level. */
   private def resolveChain(
-      cfg: TopicConfig, fc: FileContext, name: String): Vector[FileEntry] = {
+      cfg: TopicConfig, name: String): Vector[FileEntry] = {
     val mPath = s"${manifestDir(cfg)}/$name"
     val cached = resolvedCache.get(mPath)
     if (cached != null) cached
     else {
-      val doc = segmentOf(cfg, fc, name)
+      val doc = segmentOf(cfg, name)
       val full = (doc.parent match {
-        case Some(p) => resolveChain(cfg, fc, p) ++ doc.files
+        case Some(p) => resolveChain(cfg, p) ++ doc.files
         case None => doc.files
       }).sortBy(_.minOffset)
       cacheResolved(mPath, full)
@@ -549,10 +548,9 @@ object LogMetadata {
   /** Every manifest name the current root doc depends on: the heads plus
     * their full parent chains — what vacuum must treat as live. */
   def liveManifestNames(cfg: TopicConfig, meta: LogMetadata): Set[String] = {
-    val fc = FileContext.getFileContext(new Path(cfg.metadataPath).toUri, hadoopConf)
     val live = scala.collection.mutable.Set.empty[String]
     def walk(name: String): Unit = if (live.add(name))
-      scala.util.Try(segmentOf(cfg, fc, name)).toOption
+      scala.util.Try(segmentOf(cfg, name)).toOption
         .flatMap(_.parent).foreach(walk)
     meta.manifestNames.values.foreach(walk)
     live.toSet
@@ -636,7 +634,7 @@ object LogMetadata {
           if (!fc.util().exists(path)) {
             val hasData = fc.util().exists(new Path(cfg.dir))
             if (!hasData || attempt >= MaxReadRetries) Some(empty(cfg)) else None
-          } else Some(resolveManifests(cfg, fc, parse(FsIO.readString(fc, path))))
+          } else Some(resolveManifests(cfg, parse(FsIO.read(path))))
         } catch {
           case e: java.io.IOException =>
             if (attempt >= MaxReadRetries) throw e else None
@@ -652,12 +650,12 @@ object LogMetadata {
   }
 
   private def resolveManifests(
-      cfg: TopicConfig, fc: FileContext, root: LogMetadata): LogMetadata =
+      cfg: TopicConfig, root: LogMetadata): LogMetadata =
     // resolve manifest pointers through the cache; legacy docs carry files
     // inline and have no pointers (first publish upgrades them)
     if (root.manifestNames.isEmpty) root
     else root.copy(filesByPart = root.manifestNames.map { case (p, name) =>
-      p -> resolveChain(cfg, fc, name)
+      p -> resolveChain(cfg, name)
     })
 
   /** Full publish: renders EVERY non-empty partition's manifest (topic
@@ -707,8 +705,6 @@ object LogMetadata {
     WriterLease.checkWrite(cfg.root)
     val next0 = next00.copy(writerEpoch =
       math.max(next00.writerEpoch, WriterLease.heldEpoch(cfg.root)))
-    val rootPath = new Path(cfg.metadataPath)
-    val fc = FileContext.getFileContext(rootPath.toUri, hadoopConf)
     val prevNames = prev.map(_.manifestNames).getOrElse(Map.empty)
     val prevFiles = prev.map(_.filesByPart).getOrElse(Map.empty)
     val names = next0.filesByPart.collect {
@@ -734,7 +730,7 @@ object LogMetadata {
             val doc =
               if (isAppend) {
                 val prevDepth =
-                  scala.util.Try(segmentOf(cfg, fc, prevName.get).depth)
+                  scala.util.Try(segmentOf(cfg, prevName.get).depth)
                     .getOrElse(MaxManifestDepth)
                 if (prevDepth + 1 <= MaxManifestDepth)
                   ManifestDoc(prevName, prevDepth + 1, v.drop(prevV.length))
@@ -745,11 +741,7 @@ object LogMetadata {
             val suffix = java.util.UUID.randomUUID().toString.take(8)
             val n = f"part-$p%05d-v${next0.version}-$suffix.json"
             val mPath = new Path(s"${manifestDir(cfg)}/$n")
-            val out = fc.create(mPath,
-              java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-              Options.CreateOpts.createParent())
-            try out.write(renderManifestDoc(doc).getBytes(StandardCharsets.UTF_8))
-            finally out.close()
+            FsIO.create(mPath, renderManifestDoc(doc))
             cacheSegment(mPath.toString, doc)
             cacheResolved(mPath.toString, v)
             n
@@ -759,17 +751,8 @@ object LogMetadata {
     val next = next0.copy(manifestNames = names,
       commitMs = System.currentTimeMillis())
     // manifests are durable before the root rename makes them reachable; a
-    // crash in between leaves unreferenced manifests for vacuum. The tmp
-    // name is unique per publish so no two writers ever share one.
-    val tmp = new Path(cfg.metadataPath + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(render(next).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fc.rename(tmp, rootPath, Options.Rename.OVERWRITE)
+    // crash in between leaves unreferenced manifests for vacuum
+    FsIO.replace(new Path(cfg.metadataPath), render(next))
     // Retained root snapshot: a write-once copy of the root doc keyed by
     // version — the TIME-TRAVEL anchor ([[readAt]]). Snapshots live in the
     // manifest dir, unreferenced by any live chain, so vacuum reclaims
@@ -780,12 +763,7 @@ object LogMetadata {
     try {
       val snapName = f"root-v${next.version}%011d-" +
         java.util.UUID.randomUUID().toString.take(8) + ".json"
-      val sPath = new Path(s"${manifestDir(cfg)}/$snapName")
-      val sOut = fc.create(sPath,
-        java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-        Options.CreateOpts.createParent())
-      try sOut.write(render(next).getBytes(StandardCharsets.UTF_8))
-      finally sOut.close()
+      FsIO.create(new Path(s"${manifestDir(cfg)}/$snapName"), render(next))
     } catch {
       // best-effort contract: NOTHING a snapshot write throws may fail the
       // commit itself (exotic FileContexts surface RuntimeException /
@@ -802,22 +780,31 @@ object LogMetadata {
     * still fail later if retention/compaction physically removed that
     * version's data files, the same contract as any snapshot-isolated
     * table format. */
-  def readAt(cfg: TopicConfig, version: Long): LogMetadata = {
-    val dir = new Path(manifestDir(cfg))
-    val fc = FileContext.getFileContext(dir.toUri, hadoopConf)
-    val prefix = f"root-v$version%011d-"
-    val candidates =
-      if (!fc.util().exists(dir)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fc.util().listStatus(dir).filter(f =>
-        f.isFile && f.getPath.getName.startsWith(prefix))
-    if (candidates.isEmpty)
-      throw new IllegalArgumentException(
+  def readAt(cfg: TopicConfig, version: Long): LogMetadata =
+    retainedSnapshots(cfg).find(_._1 == version) match {
+      case Some((_, snap)) => resolveManifests(cfg, parse(FsIO.read(snap.getPath)))
+      case None => throw new IllegalArgumentException(
         s"version $version of topic ${cfg.topic} is not retained " +
           "(vacuumed past the manifest grace window, or never committed)")
-    // topic re-creation at the same path can leave same-version snapshots:
-    // the newest one belongs to the current topic incarnation
-    val snap = candidates.maxBy(_.getModificationTime).getPath
-    resolveManifests(cfg, fc, parse(FsIO.readString(fc, snap)))
+    }
+
+  private val SnapRe = """root-v(\d+)-.*\.json""".r
+
+  /** The retained root snapshots [[publish]] wrote, one per version,
+    * oldest first. Topic re-creation at the same path can leave
+    * same-version snapshots: the newest mtime belongs to the current topic
+    * incarnation. */
+  private def retainedSnapshots(
+      cfg: TopicConfig): Array[(Long, org.apache.hadoop.fs.FileStatus)] = {
+    val dir = new Path(manifestDir(cfg))
+    val fc = FileContext.getFileContext(dir.toUri, hadoopConf)
+    if (!fc.util().exists(dir)) Array.empty
+    else fc.util().listStatus(dir).flatMap(f => f.getPath.getName match {
+      case SnapRe(v) if f.isFile => Some(v.toLong -> f)
+      case _ => None
+    }).groupBy(_._1).map { case (v, fs) =>
+      v -> fs.maxBy(_._2.getModificationTime)._2
+    }.toArray.sortBy(_._1)
   }
 
   /** The newest retained commit version whose commit time is at or before
@@ -830,24 +817,11 @@ object LogMetadata {
     * searches the version-sorted snapshot list and reads O(log n) tiny
     * docs, never the whole retained set. */
   def versionAt(cfg: TopicConfig, tsMicros: Long): Long = {
-    val dir = new Path(manifestDir(cfg))
-    val fc = FileContext.getFileContext(dir.toUri, hadoopConf)
-    val SnapRe = """root-v(\d+)-.*\.json""".r
-    val snaps =
-      if (!fc.util().exists(dir)) Array.empty[(Long, org.apache.hadoop.fs.FileStatus)]
-      else fc.util().listStatus(dir).flatMap(f => f.getPath.getName match {
-        case SnapRe(v) if f.isFile => Some(v.toLong -> f)
-        case _ => None
-      })
-    if (snaps.isEmpty)
+    val byVersion = retainedSnapshots(cfg)
+    if (byVersion.isEmpty)
       throw new IllegalArgumentException(
         s"no retained commit of topic ${cfg.topic} at or before " +
           s"timestamp $tsMicros (earliest retained: none)")
-    // topic re-creation at the same path can leave same-version snapshots:
-    // the newest mtime belongs to the current incarnation (readAt's rule)
-    val byVersion = snaps.groupBy(_._1).map { case (v, fs) =>
-      v -> fs.maxBy(_._2.getModificationTime)._2
-    }.toArray.sortBy(_._1)
     // (commitMicros, isLegacy) per index, memoized — the binary search
     // reads O(log n) docs, the legacy fallback at most all of them once
     val cache = new java.util.HashMap[Int, (Long, Boolean)]()
@@ -856,7 +830,7 @@ object LogMetadata {
       if (hit != null) hit
       else {
         val st = byVersion(i)._2
-        val ms = try parse(FsIO.readString(fc, st.getPath)).commitMs
+        val ms = try parse(FsIO.read(st.getPath)).commitMs
           catch { case scala.util.control.NonFatal(_) => 0L }
         val r = ((if (ms > 0) ms else st.getModificationTime) * 1000L, ms == 0L)
         cache.put(i, r)
@@ -907,21 +881,10 @@ object LogMetadata {
     * the same set vacuum bounds with its grace window. Duplicate versions
     * from topic re-creation resolve to the newest incarnation (the
     * [[readAt]] rule). */
-  def history(cfg: TopicConfig): Seq[LogMetadata] = {
-    val dir = new Path(manifestDir(cfg))
-    val fc = FileContext.getFileContext(dir.toUri, hadoopConf)
-    val SnapRe = """root-v(\d+)-.*\.json""".r
-    val snaps =
-      if (!fc.util().exists(dir)) Array.empty[(Long, org.apache.hadoop.fs.FileStatus)]
-      else fc.util().listStatus(dir).flatMap(f => f.getPath.getName match {
-        case SnapRe(v) if f.isFile => Some(v.toLong -> f)
-        case _ => None
-      })
-    snaps.groupBy(_._1).toSeq
-      .map { case (_, fs) => fs.maxBy(_._2.getModificationTime)._2 }
-      .flatMap(st => scala.util.Try(parse(FsIO.readString(fc, st.getPath))).toOption)
+  def history(cfg: TopicConfig): Seq[LogMetadata] =
+    retainedSnapshots(cfg).toSeq
+      .flatMap { case (_, st) => scala.util.Try(parse(FsIO.read(st.getPath))).toOption }
       .sortBy(_.version)
-  }
 
   // -- doc serde: renders are hand-rolled so every doc stays byte-stable
   //    under its format stamp; parses read through JsonText's strict

@@ -4,18 +4,19 @@ import org.apache.hadoop.fs.Path
 
 /**
  * Startup probe for the two filesystem primitives the engine's control
- * plane is built on — run them against the REAL root once and fail loudly
- * where a deployment contract would otherwise fail silently:
+ * plane is built on — run [[FsIO]]'s own functions against the REAL root
+ * once and fail loudly where a deployment contract would otherwise fail
+ * silently:
  *
- *  - **Exclusive create** (`create(p, overwrite = false)` must refuse an
- *    existing path): the commit-vs-abort arbiter (`terminal.json`,
+ *  - **Exclusive create** (`FsIO.create` must refuse an existing path):
+ *    the commit-vs-abort arbiter (`terminal.json`,
  *    `Transactions.decideTerminal`) and the writer-lease epoch files
  *    ([[WriterLease]]) use first-writer-wins creation as their atomicity
  *    primitive. A store that silently overwrites turns "exactly one
  *    decision" into "last writer wins" — commit/abort could half-apply.
- *  - **Atomic rename-onto-existing** (`FileContext.rename(OVERWRITE)`):
- *    root-doc publishes, group-document commits and finalize records all
- *    swap content by rename. A store that implements rename as
+ *  - **Atomic rename-onto-existing** (`FsIO.publish`, the second half of
+ *    `FsIO.replace`): root-doc publishes, group-document commits,
+ *    finalize records and the txn state docs all swap content by rename. A store that implements rename as
  *    copy+delete exposes readers to missing/partial docs.
  *
  * HDFS, ABFS, GCS and local filesystems provide both. Raw S3A provides
@@ -40,7 +41,7 @@ object StorageProbe {
     * model a non-compliant store (raw S3A semantics) without a custom
     * Hadoop filesystem registration. */
   private[log] trait Ops {
-    /** create with overwrite=false; must throw if the path exists. */
+    /** exclusive create; must throw if the path exists. */
     def createExclusive(p: Path, content: String): Unit
     /** rename src onto an EXISTING dst, overwrite semantics. */
     def renameOverwrite(src: Path, dst: Path): Unit
@@ -49,16 +50,12 @@ object StorageProbe {
     def mkdirs(p: Path): Unit
   }
 
+  /** The engine's own primitives, so the probe checks the code it runs. */
   private[log] class RealOps extends Ops {
     private def fsOf(p: Path) = p.getFileSystem(HadoopConf.shared)
-    def createExclusive(p: Path, content: String): Unit =
-      FsIO.writeString(p, content, overwrite = false)
-    def renameOverwrite(src: Path, dst: Path): Unit = {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        dst.toUri, HadoopConf.shared)
-      fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    def read(p: Path): String = FsIO.readString(fsOf(p), p)
+    def createExclusive(p: Path, content: String): Unit = FsIO.create(p, content)
+    def renameOverwrite(src: Path, dst: Path): Unit = FsIO.publish(src, dst)
+    def read(p: Path): String = FsIO.read(p)
     def delete(p: Path): Unit = { fsOf(p).delete(p, true): Unit }
     def mkdirs(p: Path): Unit = { fsOf(p).mkdirs(p): Unit }
   }
@@ -96,7 +93,7 @@ object StorageProbe {
         catch { case _: java.io.IOException => true }
       val intact = ops.read(arb) == "first"
       exclusive = refused && intact
-      if (!refused) details += ("create(p, overwrite=false) OVERWROTE an " +
+      if (!refused) details += ("an exclusive create OVERWROTE an " +
         "existing file — first-writer-wins arbitration is unavailable")
       else if (!intact) details += ("a refused exclusive create still " +
         "ALTERED the existing file's content")

@@ -124,9 +124,6 @@ object Transactions {
 
   private def fsOf(p: Path) = p.getFileSystem(HadoopConf.shared)
 
-  private def writeFile(p: Path, text: String, overwrite: Boolean): Unit =
-    FsIO.writeString(p, text, overwrite)
-
   // same-driver serialization of begin/commit/abort/recover per id — the
   // driver is the only metadata authority (SURVEY §7.1), so this makes the
   // marker writes race-free where they can race at all; the deterministic
@@ -149,7 +146,7 @@ object Transactions {
     while (attempt < 5) {
       try {
         if (!fs.exists(p)) return None
-        val got = read(JsonText.parseObject(FsIO.readString(fs, p)))
+        val got = read(JsonText.parseObject(FsIO.read(p)))
         if (got.isDefined) return got
       } catch { case _: java.io.IOException | _: IllegalArgumentException => () }
       attempt += 1
@@ -194,13 +191,12 @@ object Transactions {
     val keep = lastRecord(root, txnId).exists { case (e, _) => e >= epoch }
     if (keep) return
     val p = lastPath(root, txnId)
-    // writer-unique tmp name: concurrent cross-process finalize replays
-    // must not clobber each other's staged bytes mid-rename
-    val tmp = new Path(p.toString + ".tmp-" +
-      java.lang.Long.toHexString(Thread.currentThread().getId ^ System.nanoTime()))
-    writeFile(tmp,
+    // FsIO.replace in its two halves, so the re-check below sits between
+    // them; the staged tmp is writer-unique, so concurrent cross-process
+    // finalize replays never clobber each other's bytes mid-rename
+    val tmp = FsIO.stage(p,
       s"""{"format":1,"kind":"$kind","epoch":$epoch,""" +
-        s""""ms":${System.currentTimeMillis()}}""", overwrite = true)
+        s""""ms":${System.currentTimeMillis()}}""")
     // re-check right before the rename: same-JVM writers are serialized by
     // the caller's stripe lock, and this shrinks the cross-process
     // check-to-rename window (a second driver replaying an OLD finalize)
@@ -212,9 +208,7 @@ object Transactions {
       catch { case _: java.io.IOException => () }
       return
     }
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, HadoopConf.shared)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    FsIO.publish(tmp, p)
   }
 
   /** The ATOMIC commit-vs-abort arbiter: exclusive-create `terminal.json`
@@ -247,13 +241,10 @@ object Transactions {
     var lastErr: java.io.IOException = null
     while (attempt < 10) {
       try {
-        val out = fs.create(p, false)
-        try out.write(
-          (s"""{"format":1,"kind":"$kind","reason":"$reason",""" +
-            s""""epoch":$epoch,"ms":${System.currentTimeMillis()}}""").getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // RESURRECTION GUARD: Hadoop's create auto-creates parents, so the
+        FsIO.create(p,
+          s"""{"format":1,"kind":"$kind","reason":"$reason",""" +
+            s""""epoch":$epoch,"ms":${System.currentTimeMillis()}}""")
+        // RESURRECTION GUARD: FsIO.create makes missing parents, so the
         // "exclusive" create can succeed in a freshly re-created directory
         // AFTER a concurrent finalize fully dropped it — our kind would
         // then stand for a transaction whose opposite decision already
@@ -434,11 +425,9 @@ object Transactions {
       // backwards NTP correction can never re-mint a finalized epoch
       val floor = math.max(prevEpoch, lastRecord(root, txnId).map(_._1).getOrElse(0L))
       val epoch = math.max(floor + 1, System.currentTimeMillis())
-      val d = txnPath(root, txnId)
-      fsOf(d).mkdirs(d)
-      writeFile(new Path(d, "open.json"),
+      FsIO.replace(new Path(txnPath(root, txnId), "open.json"),
         s"""{"format":1,"epoch":$epoch,"timeoutMs":$timeoutMs,""" +
-          s""""startMs":${System.currentTimeMillis()}}""", overwrite = true)
+          s""""startMs":${System.currentTimeMillis()}}""")
       TxnHandle(root, txnId, epoch)
     }
 
@@ -448,7 +437,7 @@ object Transactions {
   def requireOpen(root: String, txnId: String, epoch: Long): Unit =
     state(root, txnId) match {
       case Open(e, _, _) if e == epoch =>
-        writeFile(new Path(txnPath(root, txnId), "hb"), "1", overwrite = true)
+        FsIO.replace(new Path(txnPath(root, txnId), "hb"), "1")
       case Open(e, _, _) => throw new IllegalStateException(
         s"producer fenced: transactional.id '$txnId' was re-begun " +
           s"(epoch $e, this producer holds $epoch)")
@@ -462,9 +451,9 @@ object Transactions {
   def touchTopic(root: String, txnId: String, topic: String): Unit = {
     require(TopicConfig.validNewTopicName(topic),
       s"invalid transactional topic '$topic'")
-    val p = new Path(txnPath(root, txnId), s"t-$topic.json")
-    val fs = fsOf(p)
-    if (!fs.exists(p)) writeFile(p, "{}", overwrite = true)
+    // an existing stub means an earlier produce already recorded the topic
+    try FsIO.create(new Path(txnPath(root, txnId), s"t-$topic.json"), "{}")
+    catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
   }
 
   /**
@@ -498,9 +487,8 @@ object Transactions {
       // entries stamped with the finalizing epoch — a zombie's staged
       // offsets are discarded, never adopted by a commit that did not
       // stage them.
-      writeFile(p,
-        s"""{"epoch":${h.epoch},${ConsumerGroups.render(nextOffsets).stripPrefix("{")}""",
-        overwrite = true)
+      FsIO.replace(p,
+        s"""{"epoch":${h.epoch},${ConsumerGroups.render(nextOffsets).stripPrefix("{")}""")
     }
 
   private val StagedOffsetsRe = """^g-([0-9a-f]*)-([0-9a-f]*)\.json$""".r
@@ -520,7 +508,7 @@ object Transactions {
           // smaller epoch or a partial offsets map
           val (offsets, epoch) =
             try {
-              val doc = JsonText.parseObject(FsIO.readString(fs, s.getPath))
+              val doc = JsonText.parseObject(FsIO.read(s.getPath))
               (ConsumerGroups.parseOffsets(doc),
                 JsonText.longField(doc, "epoch").getOrElse(-1L))
             } catch {
@@ -802,7 +790,13 @@ object Transactions {
           st match {
             case Committed(e) => finalizeCommit(root, id, e); resolved += 1
             case Aborted(e) => finalizeAbort(root, id, e); resolved += 1
-            case Open(e, anchor, timeoutMs) if nowMs - anchor > timeoutMs =>
+            case Open(e, anchor, timeoutMs) if nowMs - anchor > timeoutMs &&
+                // re-read under the lock: a heartbeat may have landed since
+                // the listing, or been mid-replace (briefly absent) during it
+                (state(root, id) match {
+                  case Open(_, a, _) => nowMs - a > timeoutMs
+                  case _ => true
+                }) =>
               // the coordinator's timeout abort goes through the arbiter: a
               // commit whose marker landed first stands and gets finished
               decideTerminal(root, id, "abort", "timeout", e) match {

@@ -63,24 +63,18 @@ object TxnJournal {
         "journal's derived t-<topic>.json must fit the filesystem's " +
         "255-byte component limit (topic max 248 UTF-8 bytes); " +
         "single-topic produces to it still work"))
-    val fs = jdir.getFileSystem(HadoopConf.shared)
-    fs.mkdirs(jdir)
     topics.foreach { case (t, entries) =>
       // per-topic files carry a `t-` prefix so a topic literally named
       // "txn" can never collide with the txn.json commit point
-      val out = fs.create(new Path(jdir, s"t-$t.json"), false)
-      try out.write(LogMetadata.renderManifest(entries.toVector)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      FsIO.create(new Path(jdir, s"t-$t.json"),
+        LogMetadata.renderManifest(entries.toVector))
     }
     val head = txn match {
       case Some((sinkId, batchId)) =>
         s"""{"format":1,"txn":["${LogMetadata.hexEncode(sinkId)}",$batchId]}"""
       case None => """{"format":1}"""
     }
-    val out = fs.create(new Path(jdir, "txn.json"), false)
-    try out.write(head.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    FsIO.create(new Path(jdir, "txn.json"), head)
     jdir.toString
   }
 
@@ -100,12 +94,8 @@ object TxnJournal {
     * underneath itself. (A single CAS stalled longer than the grace is
     * still exposed; size `graceMs` above the longest expected rebase.) */
   def heartbeat(journalPath: String): Unit =
-    try {
-      val p = new Path(journalPath, "hb")
-      val fs = p.getFileSystem(HadoopConf.shared)
-      val out = fs.create(p, true)
-      try out.write('1'.toByte) finally out.close()
-    } catch { case _: java.io.IOException => () }
+    try FsIO.replace(new Path(journalPath, "hb"), "1")
+    catch { case _: java.io.IOException => () }
 
   /** Mark a journal undrivable (some staged files are gone AND their topic
     * never committed — roll-forward impossible, roll-back unsafe): renamed
@@ -150,7 +140,7 @@ object TxnJournal {
         // txn.json is a committer that died writing it, before any CAS —
         // an incomplete intent, never a complete one with a lost txn
         val head = txnFile.flatMap { f =>
-          val text = FsIO.readString(fs, f.getPath)
+          val text = FsIO.read(f.getPath)
           try Some(JsonText.parseObject(text))
           catch { case _: IllegalArgumentException => None }
         }
@@ -162,7 +152,7 @@ object TxnJournal {
           .filter(f => f.getPath.getName.startsWith("t-") &&
             f.getPath.getName.endsWith(".json"))
           .map { f =>
-            val text = FsIO.readString(fs, f.getPath)
+            val text = FsIO.read(f.getPath)
             // t-files are all written before the commit point: a torn one
             // in an INCOMPLETE intent names nothing recovery may rely on
             // (its files are unregistered orphans vacuum reclaims); in a
@@ -171,8 +161,10 @@ object TxnJournal {
               (try LogMetadata.parseManifest(text)
                catch { case _: IllegalArgumentException if head.isEmpty => Vector.empty })
           }.toMap
+        // `hb.tmp-…` counts too: FsIO.replace's rename-over can leave `hb`
+        // briefly absent, but one of the two is always on disk
         val anchor = (txnFile.map(_.getModificationTime) ++
-          files.find(_.getPath.getName == "hb").map(_.getModificationTime))
+          files.filter(_.getPath.getName.startsWith("hb")).map(_.getModificationTime))
           .maxOption.getOrElse(s.getModificationTime)
         Journal(s.getPath.toString, anchor,
           txn, complete = head.isDefined, topics)

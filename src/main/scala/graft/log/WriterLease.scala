@@ -159,7 +159,7 @@ object WriterLease {
           // a torn acquire into an instantly seizable lease while its
           // writer may be alive — any truncation or corruption falls to
           // the conservative unreadable hold below
-          val doc = JsonText.parseObject(FsIO.readString(fs, p))
+          val doc = JsonText.parseObject(FsIO.read(p))
           if (JsonText.longField(doc, "format").contains(1L)) {
             return Some(Lease(root, JsonText.text(doc.path("holder")), epoch,
               JsonText.long(doc.path("deadlineMs")), JsonText.long(doc.path("ttlMs"))))
@@ -348,10 +348,9 @@ object WriterLease {
       deadlineMs: Long, ttlMs: Long): Option[Lease] = {
     val p = new Path(leaseDir(root), s"e$epoch.json")
     try {
-      FsIO.writeString(p,
+      FsIO.create(p,
         s"""{"format":1,"holder":"$holderId","deadlineMs":$deadlineMs,""" +
-          s""""ttlMs":$ttlMs,"ms":${System.currentTimeMillis()}}""",
-        overwrite = false)
+          s""""ttlMs":$ttlMs,"ms":${System.currentTimeMillis()}}""")
       Some(Lease(root, holderId, epoch, deadlineMs, ttlMs))
     } catch { case _: java.io.IOException => None }
   }

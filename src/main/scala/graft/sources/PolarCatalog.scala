@@ -90,8 +90,7 @@ class PolarCatalog extends TableCatalog
       props.get("clusterSize").map(_.toInt).getOrElse(defaultClusterSize),
       props.get("rangesPerToken").map(_.toInt).getOrElse(defaultRangesPerToken))
 
-  private def fs(p: Path) =
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+  private def fs(p: Path) = p.getFileSystem(graft.log.HadoopConf.shared)
 
   private def exists(cfg: TopicConfig): Boolean = {
     val p = new Path(cfg.metadataPath)

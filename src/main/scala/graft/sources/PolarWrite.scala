@@ -503,14 +503,9 @@ class PolarBatchWrite(
   /** Best-effort delete of rebase-rewritten (rb*) files after a terminal
     * commit failure — the originals they replaced are already gone, and
     * Spark's abort only knows the original names. */
-  private def deleteRebased(entries: Array[FileEntry]): Unit = {
-    val conf = graft.log.HadoopConf.shared
-    entries.filter(f => PolarBatchWrite.isRebased(f.name)).foreach { f =>
-      val p = new Path(f.path(cfg))
-      try { val fs = p.getFileSystem(conf); if (fs.exists(p)) fs.delete(p, false) }
-      catch { case _: java.io.IOException => () }
-    }
-  }
+  private def deleteRebased(entries: Array[FileEntry]): Unit =
+    graft.log.PolarLog.quietDelete(
+      entries.filter(f => PolarBatchWrite.isRebased(f.name)).map(_.path(cfg)).toSeq)
 
   /** Shift this batch's files onto the current tails: per partition, delta =
     * new tail − our baked base; files in conflicting partitions are

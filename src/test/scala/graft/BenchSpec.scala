@@ -9,4 +9,11 @@ class BenchSpec extends AnyFunSuite {
     val line = "cpu  100 20 30 400 5 6 7 8 50 9"
     assert(Bench.stealTicks(line) === ((8L, 576L)))
   }
+
+  test("reference gates: a nested object or a quoted number before other gates loses none") {
+    val ref = """{"note":"x","queries":{"a_gate":1.5,"nested":{"inner":2},""" +
+      """"quoted":"3","b_gate":2,"c_gate":0.25},"control":{"q1_agg":0.4}}"""
+    assert(Bench.referenceGates(ref) ===
+      Map("a_gate" -> 1.5, "b_gate" -> 2.0, "c_gate" -> 0.25))
+  }
 }

@@ -217,7 +217,7 @@ class DocFuzzSpec extends AnyFunSuite {
     Transactions.sendOffsets(h0, cfg, "shape", want)
     def gFile(id: String) = fs(txnDir(root, id)).listStatus(txnDir(root, id))
       .map(_.getPath).find(_.getName.startsWith("g-")).get
-    val staged = FsIO.readString(fs(gFile("shape")), gFile("shape"))
+    val staged = FsIO.read(gFile("shape"))
     Transactions.abort(h0)
     tornAndPadded(staged).zipWithIndex.foreach { case (text, i) =>
       val (id, group) = (s"staged-$i", s"g$i")
@@ -239,7 +239,7 @@ class DocFuzzSpec extends AnyFunSuite {
     val entry = FileEntry(0, "j.parquet", 0, 9, 10, 400, 1700000000000L)
     val jdir = TxnJournal.write(root, Map("jt" -> Seq(entry)), Some(("sink-1", 12L)))
     val commitPoint = new Path(jdir, "txn.json")
-    val whole = FsIO.readString(fs(commitPoint), commitPoint)
+    val whole = FsIO.read(commitPoint)
     tornAndPadded(whole).zipWithIndex.foreach { case (text, i) =>
       plant(commitPoint, text.getBytes("UTF-8"))
       val j = TxnJournal.list(root).head

@@ -679,6 +679,33 @@ class TransactionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ConsumerGroups.committed(a, "zg") === Some(Map(0 -> 5L)))
   }
 
+  test("re-sent staged offsets swap whole: a concurrent reader never parses a torn doc") {
+    val a = TopicConfig(root, "t_resend", 1, 2)
+    LogMetadata.write(a, LogMetadata.empty(a))
+    val h = Transactions.begin(root, "resend")
+    Transactions.sendOffsets(h, a, "rg", Map(0 -> 0L, 1 -> 0L))
+    val staged = new Path(txnDirPath("resend"),
+      s"g-${LogMetadata.hexEncode(a.topic)}-${LogMetadata.hexEncode("rg")}.json")
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val torn = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    var parsed = 0
+    val reader = new Thread(() => while (!done.get) {
+      try {
+        val text = FsIO.read(staged)
+        try { graft.functions.JsonText.parseObject(text); parsed += 1 }
+        catch { case _: IllegalArgumentException => torn.add(text): Unit }
+      } catch { case _: java.io.IOException => () } // mid-swap: read again
+    })
+    reader.start()
+    try (1 to 200).foreach(i =>
+      Transactions.sendOffsets(h, a, "rg", Map(0 -> i.toLong, 1 -> 2L * i)))
+    finally { done.set(true); reader.join() }
+    assert(torn.size === 0, s"torn reads, e.g. '${torn.peek}'")
+    assert(parsed > 0, "the reader must have parsed the staged doc")
+    Transactions.commit(h)
+    assert(ConsumerGroups.committed(a, "rg") === Some(Map(0 -> 200L, 1 -> 400L)))
+  }
+
   test("a stale lower-epoch terminal marker inside a live txn reads as Open and is cleared") {
     val h0 = Transactions.begin(root, "stalemark")
     Transactions.abort(h0)

@@ -122,16 +122,12 @@ class WriterLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     PolarLog.produce(rows(4, "g"), cfg)
     // unleased docs stay byte-identical to the pre-stamp format
     ConsumerGroups.commit(cfg, "plain", Map(0 -> 1L))
-    val plainDoc = FsIO.readString(
-      new Path(cfg.groupsDir).getFileSystem(HadoopConf.shared),
-      new Path(s"${cfg.groupsDir}/plain.json"))
+    val plainDoc = FsIO.read(new Path(s"${cfg.groupsDir}/plain.json"))
     assert(!plainDoc.contains("writerEpoch"), plainDoc)
     // holder a stamps its epoch into the group doc
     val a = WriterLease.acquire(root, "driver-a", ttlMs = 3600000L)
     ConsumerGroups.commit(cfg, "g", Map(0 -> 2L))
-    val aDoc = FsIO.readString(
-      new Path(cfg.groupsDir).getFileSystem(HadoopConf.shared),
-      new Path(s"${cfg.groupsDir}/g.json"))
+    val aDoc = FsIO.read(new Path(s"${cfg.groupsDir}/g.json"))
     assert(aDoc.contains(s""""writerEpoch":${a.epoch}"""), aDoc)
     // driver-b seizes the root and advances the group
     val b = WriterLease.acquire(root, "driver-b", ttlMs = 3600000L, takeover = true)
@@ -148,9 +144,7 @@ class WriterLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(WriterLease.heldLease(root).isEmpty, "stamp fencing drops the dead lease")
     // the successor's position is untouched, and merge paths kept its stamp
     assert(ConsumerGroups.committed(cfg, "g") === Some(Map(0 -> 3L)))
-    val bDoc = FsIO.readString(
-      new Path(cfg.groupsDir).getFileSystem(HadoopConf.shared),
-      new Path(s"${cfg.groupsDir}/g.json"))
+    val bDoc = FsIO.read(new Path(s"${cfg.groupsDir}/g.json"))
     assert(bDoc.contains(s""""writerEpoch":${b.epoch}"""), bDoc)
     // the fenced incumbent's merge paths are equally refused
     WriterLease.installHeldForTest(a)
