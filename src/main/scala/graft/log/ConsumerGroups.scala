@@ -395,8 +395,8 @@ object ConsumerGroups {
   }
 
   /** One consume round for ONE member of a shared group: only the member's
-    * assigned partitions are planned and served, under the same byte and
-    * record caps as [[poll]]; `nextOffsets` covers only those, so a
+    * assigned partitions are planned and served, under the same byte cap
+    * as [[poll]]; `nextOffsets` covers only those, so a
     * [[commitPartial]] never clobbers the other members' progress. */
   def pollAs(
       spark: SparkSession,
@@ -406,11 +406,10 @@ object ConsumerGroups {
       memberIds: Seq[String],
       policy: ResetPolicy = Latest,
       isolation: String = "read_uncommitted",
-      maxBytes: Option[Long] = None,
-      maxRecords: Option[Long] = None): Poll = {
+      maxBytes: Option[Long] = None): Poll = {
     val mine = assignment(cfg, memberIds).getOrElse(memberId,
       throw new IllegalArgumentException(s"$memberId not in member list")).toSet
-    window(spark, cfg, group, policy, isolation, mine, maxBytes, maxRecords)
+    window(spark, cfg, group, policy, isolation, mine, maxBytes, None)
   }
 
   /** Registered consumer groups of a topic — one directory listing of the

@@ -1,7 +1,8 @@
 package graft.log
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
 
 /** The control plane's doc store: the one place `graft.log` creates,
   * renames or reads a small whole-file UTF-8 doc — root, manifest and
@@ -18,29 +19,73 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - [[replace]], the atomic swap — a unique `<name>.tmp-<suffix>`
   *    sibling ([[stage]]) renamed over the doc ([[publish]]), so a reader
   *    sees the old doc or the new one, never a truncated one.
-  * There is no in-place overwrite. All of it runs on `FileContext`: a local
-  * FileContext open costs about a third of the checksummed FileSystem
-  * open. Control-plane docs are all tiny — the whole-file read is
-  * deliberate. */
-private[log] object FsIO {
+  * There is no in-place overwrite.
+  *
+  * On a `file:` root ([[localFile]]) all of it is `java.nio`: `create` is
+  * one `open(O_CREAT|O_EXCL)` (`CREATE_NEW`), `publish` one `rename(2)`
+  * (`ATOMIC_MOVE`), so both hold across processes; no `chmod` is forked
+  * and no `.crc` sidecar is written or checked. Hadoop's local file system
+  * gives neither: its create is exists-then-open and its overwriting
+  * rename is delete-then-rename. Every other store runs on `FileContext`.
+  * Both sides throw Hadoop's `FileAlreadyExistsException` for a refused
+  * create and `FileNotFoundException` for a missing doc. Control-plane docs
+  * are all tiny — the whole-file read is deliberate. */
+private[graft] object FsIO {
+
+  /** The local file behind `p` when it lives on a `file:` store (a
+    * scheme-less path resolves against the default file system), else
+    * `None`. */
+  def localFile(p: Path): Option[java.nio.file.Path] = {
+    val u = p.toUri
+    if (Option(u.getScheme).getOrElse(defaultScheme) == "file")
+      Some(java.nio.file.Paths.get(u.getPath))
+    else None
+  }
+
+  private lazy val defaultScheme =
+    FileSystem.getDefaultUri(HadoopConf.shared).getScheme
 
   private def fc(p: Path): FileContext =
     FileContext.getFileContext(p.toUri, HadoopConf.shared)
 
+  // java.nio's exceptions in the types the Hadoop side throws, so callers
+  // stay store-agnostic
+  private def hadoopTyped[A](p: Path)(body: => A): A =
+    try body catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$p already exists")
+      case _: java.nio.file.NoSuchFileException =>
+        throw new java.io.FileNotFoundException(s"$p does not exist")
+    }
+
   /** Reads the opened file to its end — never a length from a separate
     * status call, which a concurrent rename-over can make disagree with
     * the file actually opened (a torn read). */
-  def read(p: Path): String = {
-    val in = fc(p).open(p)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  def read(p: Path): String = localFile(p) match {
+    case Some(f) => hadoopTyped(p)(new String(Files.readAllBytes(f), UTF_8))
+    case None =>
+      val in = fc(p).open(p)
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
   /** Exclusive create (missing parents included): throws an
     * `IOException` if `p` exists, leaving its content as it was. */
-  def create(p: Path, text: String): Unit = {
-    val out = fc(p).create(p, java.util.EnumSet.of(CreateFlag.CREATE),
-      Options.CreateOpts.createParent())
-    try out.write(text.getBytes(UTF_8)) finally out.close()
+  def create(p: Path, text: String): Unit = localFile(p) match {
+    case Some(f) => hadoopTyped(p) {
+      Files.createDirectories(f.getParent)
+      Files.write(f, text.getBytes(UTF_8), StandardOpenOption.CREATE_NEW,
+        StandardOpenOption.WRITE): Unit
+    }
+    case None =>
+      val out = fc(p).create(p, java.util.EnumSet.of(CreateFlag.CREATE),
+        Options.CreateOpts.createParent())
+      try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** A directory and its missing parents. */
+  def mkdirs(p: Path): Unit = localFile(p) match {
+    case Some(f) => hadoopTyped(p)(Files.createDirectories(f): Unit)
+    case None => p.getFileSystem(HadoopConf.shared).mkdirs(p): Unit
   }
 
   /** Atomically replace (or first write) the doc at `p`. */
@@ -56,6 +101,9 @@ private[log] object FsIO {
   }
 
   /** The second half of [[replace]]: rename the staged `tmp` over `p`. */
-  def publish(tmp: Path, p: Path): Unit =
-    fc(p).rename(tmp, p, Options.Rename.OVERWRITE)
+  def publish(tmp: Path, p: Path): Unit = (localFile(tmp), localFile(p)) match {
+    case (Some(from), Some(to)) =>
+      hadoopTyped(tmp)(Files.move(from, to, StandardCopyOption.ATOMIC_MOVE): Unit)
+    case _ => fc(p).rename(tmp, p, Options.Rename.OVERWRITE)
+  }
 }

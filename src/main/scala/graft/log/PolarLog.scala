@@ -2,8 +2,10 @@ package graft.log
 
 import graft.functions.GraftFunctions.{murmur3_h1, polar_partition}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -549,10 +551,7 @@ object PolarLog {
     }
     if (wanted.isEmpty) return emptyLog(spark, cfg)
 
-    var out = spark.read
-      .schema(ValueSchema.add(StructField("part", IntegerType)))
-      .option("basePath", cfg.dir)
-      .parquet(wanted.map(_.path(cfg)): _*)
+    var out = scanSegments(spark, cfg, wanted.map(_.path(cfg)))
       .withColumn("topic", lit(cfg.topic))
     if (startOffsets.nonEmpty) {
       val m = offsetMap(startOffsets)
@@ -576,11 +575,42 @@ object PolarLog {
       cfg: TopicConfig,
       wanted: Seq[FileEntry]): DataFrame = {
     if (wanted.isEmpty) return emptyLog(spark, cfg)
-    spark.read
-      .schema(ValueSchema.add(StructField("part", IntegerType)))
-      .option("basePath", cfg.dir)
-      .parquet(wanted.map(_.path(cfg)): _*)
+    scanSegments(spark, cfg, wanted.map(_.path(cfg)))
       .withColumn("topic", lit(cfg.topic))
+  }
+
+  /** A scan of explicit registry segments: the envelope columns plus
+    * `part`. On a `file:` root the relation is planned from one status
+    * call per segment, made on the driver. `spark.read` checks every path
+    * and then, past 32 paths, lists them with a Spark job of one task per
+    * file: planning 720 segments that way took 2.3-5.7 s on 4 cores,
+    * where counting them took 0.4 s. Every other store plans through
+    * `spark.read`, whose parallel listing suits remote stores. */
+  private def scanSegments(spark: SparkSession, cfg: TopicConfig,
+      paths: Seq[String]): DataFrame = {
+    val schema = ValueSchema.add(StructField("part", IntegerType))
+    val dir = new Path(cfg.dir)
+    if (FsIO.localFile(dir).isEmpty)
+      return spark.read.schema(schema).option("basePath", cfg.dir).parquet(paths: _*)
+    val fs = dir.getFileSystem(HadoopConf.shared)
+    val statuses = paths.map { s =>
+      val st = fs.getFileStatus(new Path(s))
+      st.getPath -> st
+    }
+    val byPath = statuses.toMap
+    // the index asks this cache for each root path's leaf files, so it
+    // lists nothing
+    val known = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = byPath.get(p).map(Array(_))
+      override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> cfg.dir)
+    val index = new InMemoryFileIndex(spark, statuses.map(_._1), options, Some(schema), known)
+    // nullable data columns, as `spark.read` makes a user schema
+    val data = StructType(ValueSchema.map(_.copy(nullable = true)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, data,
+      None, new ParquetFileFormat, options)(spark))
   }
 
   /**
@@ -870,10 +900,7 @@ object PolarLog {
     pending = pending.filter(_._2.nonEmpty)
     while (pending.nonEmpty) {
       val heads = pending.values.map(_.head.path(cfg)).toSeq
-      val found = spark.read
-        .schema(ValueSchema.add(StructField("part", IntegerType)))
-        .option("basePath", cfg.dir)
-        .parquet(heads: _*)
+      val found = scanSegments(spark, cfg, heads)
         .filter(unix_micros(col("timestamp")) >= tsMicros)
         .groupBy(col("part")).agg(min(col("offset")).as("o"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.log.{FileEntry, HadoopConf, LogMetadata, PolarLog, TopicConfig}
+import graft.log.{FileEntry, LogMetadata, PolarLog, TopicConfig}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -415,9 +415,7 @@ object PolarLogCleaner {
         seal()
         out.iterator
       }.collect().map { case (p, name, lo, hi, n, tsMin, tsMax, tsNulls, stamp) =>
-        val path = new Path(s"$dir/part=$p/$name")
-        val bytes = path.getFileSystem(HadoopConf.shared)
-          .getFileStatus(path).getLen
+        val bytes = PolarDataWriter.sealedSize(new Path(s"$dir/part=$p/$name"))
         val (tLo, tHi) =
           if (tsMin > tsMax) (Long.MinValue, Long.MaxValue) else (tsMin, tsMax)
         // createdMs carries the NEWEST source segment's commit age forward

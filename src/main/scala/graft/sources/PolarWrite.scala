@@ -1,11 +1,13 @@
 package graft.sources
 
-import graft.log.{FileEntry, LogMetadata, PolarLog, RecordRejectedException, RingTemplate, TopicConfig, TopicProps}
+import graft.log.{FileEntry, FsIO, LogMetadata, PolarLog, RecordRejectedException, RingTemplate, TopicConfig, TopicProps}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
@@ -250,8 +252,7 @@ object PolarBatchWrite {
           writer.write(buf)
         } finally writer.close()
     }
-    val dest = new Path(destPath)
-    dest.getFileSystem(graft.log.HadoopConf.shared).getFileStatus(dest).getLen
+    PolarDataWriter.sealedSize(new Path(destPath))
   }
 }
 
@@ -552,17 +553,30 @@ object PolarDataWriter {
     conf
   }
 
-  private class RowWriterBuilder(path: Path)
-      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
+  private class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
     override def self(): RowWriterBuilder = this
     override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
       new ParquetWriteSupport
   }
 
+  /** The one opener of log segments: produce, the rebase/compaction copy
+    * and the log cleaner. The file is created exclusively. On a `file:`
+    * root it goes through parquet's `LocalOutputFile` after
+    * `Files.createDirectories`, so a segment forks no Hadoop `chmod` and
+    * gets no `.crc` sidecar (Spark's reader verifies a sidecar only where
+    * one exists); every other store through `HadoopOutputFile`. The
+    * builder settings, and so the bytes of the file, are the same. */
   def open(path: Path, conf: Configuration,
       codec: CompressionCodecName = CompressionCodecName.ZSTD)
-      : ParquetWriter[InternalRow] =
-    new RowWriterBuilder(path)
+      : ParquetWriter[InternalRow] = {
+    val file = FsIO.localFile(path) match {
+      case Some(f) =>
+        java.nio.file.Files.createDirectories(f.getParent)
+        new LocalOutputFile(f)
+      case None => HadoopOutputFile.fromPath(path, conf)
+    }
+    new RowWriterBuilder(file)
       .withConf(conf)
       .withCompressionCodec(codec)
       // point-lookup insurance: a bloom filter on partitionKey lets the
@@ -571,11 +585,21 @@ object PolarDataWriter {
       // exactly the 100 TB case). Adaptive sizing picks the smallest
       // candidate bloom that fits the group's true NDV; fully-dictionary-
       // encoded chunks skip the bloom (the dictionary already filters
-      // exactly). Capped well below the 1 MiB parquet default.
+      // exactly). Capped well below the 1 MiB parquet default; 9
+      // candidates halve down from the cap to 512 B, so a small segment
+      // does not pay parquet's default 5-candidate floor of 8 KiB.
       .withBloomFilterEnabled("partitionKey", true)
       .withAdaptiveBloomFilterEnabled(true)
       .withMaxBloomFilterBytes(128 * 1024)
+      .withBloomFilterCandidateNumber("partitionKey", 9)
       .build()
+  }
+
+  /** The byte size of a sealed segment written by [[open]]. */
+  def sealedSize(path: Path): Long = FsIO.localFile(path) match {
+    case Some(f) => java.nio.file.Files.size(f)
+    case None => path.getFileSystem(graft.log.HadoopConf.shared).getFileStatus(path).getLen
+  }
 }
 
 /** Streams one topic's rows of a task (pre-clustered by `part`,
@@ -619,7 +643,7 @@ class PolarDataWriter(
     var tsNulls: Long = 0L
     def seal(createdMs: Long): FileEntry = {
       writer.close()
-      val bytes = path.getFileSystem(conf).getFileStatus(path).getLen
+      val bytes = PolarDataWriter.sealedSize(path)
       val (lo, hi) =
         if (tsMin > tsMax) (Long.MinValue, Long.MaxValue) // all-null: unknown
         else (tsMin, tsMax)

@@ -50,6 +50,51 @@ class PolarLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(perPart.map(_.getAs[Long]("n")).sum === 1000)
   }
 
+  test("a produce on a file: root writes no .crc sidecar; its data files are its segments") {
+    val cfg = TopicConfig(root, "t_no_crc")
+    assert(cfg.numPartitions === 12)
+    PolarLog.produce(eventsAsRecords.drop("event_id").limit(64), cfg)
+    val files = {
+      val s = Files.walk(java.nio.file.Paths.get(cfg.dir))
+      try s.filter(Files.isRegularFile(_)).toArray.toSeq
+        .map(f => java.nio.file.Paths.get(cfg.dir).relativize(
+          f.asInstanceOf[java.nio.file.Path]).toString)
+      finally s.close()
+    }
+    assert(!files.exists(_.endsWith(".crc")), files)
+    val segments = LogMetadata.read(cfg).files.map(f => s"part=${f.part}/${f.name}")
+    assert(segments.map(n => n.take(n.indexOf('/'))).distinct.size > 1)
+    assert(files.filter(_.endsWith(".parquet")).toSet === segments.toSet)
+  }
+
+  test("planning a consume over more than 32 segments on a file: root runs no Spark job") {
+    val cfg = TopicConfig(root, "t_plan_no_job")
+    (0 until 6).foreach(_ => PolarLog.produce(eventsAsRecords.drop("event_id").limit(64), cfg))
+    assert(LogMetadata.read(cfg).files.size > 32)
+    // job starts by the "probe" local property of the thread that ran them
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("probe"))).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("probe", "plan")
+      val log = PolarLog.consume(spark, cfg)
+      // a marker job: listener events arrive in order, so once it is seen
+      // every job the planning started has been seen too
+      sc.setLocalProperty("probe", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty("probe", null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("marker"))
+      assert(!seen.contains("plan"), "planning listed the segments with a Spark job")
+      assert(log.count() === 384)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("same key always lands in the same partition; placement matches kernel") {
     val cfg = TopicConfig(root, "t_placement")
     PolarLog.produce(eventsAsRecords.drop("event_id"), cfg)

@@ -650,4 +650,27 @@ class PolarWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a small segment's partitionKey bloom stays small") {
+    // 30 distinct keys fall back from dictionary to PLAIN, so the bloom is
+    // written; with parquet's default 5 candidates under the 128 KiB cap
+    // the smallest is 8 KiB, a footer larger than the segment's data
+    val path = new org.apache.hadoop.fs.Path(
+      Files.createTempDirectory("polar_bloom").toString, "part=0/w.parquet")
+    val conf = PolarDataWriter.writeConf()
+    val w = PolarDataWriter.open(path, conf)
+    try (0 until 30).foreach { i =>
+      w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(f"user-$i%05d"),
+          i.toLong * 7919L, i.toLong, 1700000000000000L + i,
+          s"""{"seq":$i,"body":"${"x" * 200}"}""".getBytes("UTF-8"))))
+    } finally w.close()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    val key = try reader.getFooter.getBlocks.get(0).getColumns.toArray.toSeq
+      .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+      .find(_.getPath.toDotString == "partitionKey").get
+    finally reader.close()
+    assert(key.getBloomFilterLength > 0, "the bloom must be written")
+    assert(key.getBloomFilterLength <= 2048, s"bloom ${key.getBloomFilterLength} B")
+  }
 }
