@@ -24,9 +24,10 @@ import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
   * On a `file:` root ([[localFile]]) all of it is `java.nio`: `create` is
   * one `open(O_CREAT|O_EXCL)` (`CREATE_NEW`), `publish` one `rename(2)`
   * (`ATOMIC_MOVE`), so both hold across processes; no `chmod` is forked
-  * and no `.crc` sidecar is written or checked. Hadoop's local file system
-  * gives neither: its create is exists-then-open and its overwriting
-  * rename is delete-then-rename. Every other store runs on `FileContext`.
+  * and no `.crc` sidecar is written or checked, and `publish` drops the
+  * stale sidecar an older Hadoop write left beside a doc. Hadoop's local
+  * file system gives neither primitive: its create is exists-then-open
+  * and its overwriting rename is delete-then-rename. Every other store runs on `FileContext`.
   * Both sides throw Hadoop's `FileAlreadyExistsException` for a refused
   * create and `FileNotFoundException` for a missing doc. Control-plane docs
   * are all tiny — the whole-file read is deliberate. */
@@ -82,12 +83,6 @@ private[graft] object FsIO {
       try out.write(text.getBytes(UTF_8)) finally out.close()
   }
 
-  /** A directory and its missing parents. */
-  def mkdirs(p: Path): Unit = localFile(p) match {
-    case Some(f) => hadoopTyped(p)(Files.createDirectories(f): Unit)
-    case None => p.getFileSystem(HadoopConf.shared).mkdirs(p): Unit
-  }
-
   /** Atomically replace (or first write) the doc at `p`. */
   def replace(p: Path, text: String): Unit = publish(stage(p, text), p)
 
@@ -100,10 +95,18 @@ private[graft] object FsIO {
     tmp
   }
 
-  /** The second half of [[replace]]: rename the staged `tmp` over `p`. */
+  /** The second half of [[replace]]: rename the staged `tmp` over `p`.
+    * On a `file:` root the doc's `.crc` sidecar, left by a Hadoop write on
+    * an older root, is unlinked first: the staged doc has none, and a
+    * reader still checking sidecars (an older build, `hadoop fs -cat`)
+    * would otherwise fail on the new doc for good. Unlinking before the
+    * rename leaves no moment where the new doc sits beside the old
+    * checksum. */
   def publish(tmp: Path, p: Path): Unit = (localFile(tmp), localFile(p)) match {
-    case (Some(from), Some(to)) =>
-      hadoopTyped(tmp)(Files.move(from, to, StandardCopyOption.ATOMIC_MOVE): Unit)
+    case (Some(from), Some(to)) => hadoopTyped(tmp) {
+      Files.deleteIfExists(to.resolveSibling(s".${to.getFileName}.crc"))
+      Files.move(from, to, StandardCopyOption.ATOMIC_MOVE): Unit
+    }
     case _ => fc(p).rename(tmp, p, Options.Rename.OVERWRITE)
   }
 }

@@ -579,24 +579,23 @@ object PolarLog {
       .withColumn("topic", lit(cfg.topic))
   }
 
-  /** A scan of explicit registry segments: the envelope columns plus
-    * `part`. On a `file:` root the relation is planned from one status
-    * call per segment, made on the driver. `spark.read` checks every path
-    * and then, past 32 paths, lists them with a Spark job of one task per
-    * file: planning 720 segments that way took 2.3-5.7 s on 4 cores,
-    * where counting them took 0.4 s. Every other store plans through
-    * `spark.read`, whose parallel listing suits remote stores. */
-  private def scanSegments(spark: SparkSession, cfg: TopicConfig,
-      paths: Seq[String]): DataFrame = {
+  /** The one planner of scans over explicit segments of `cfg`'s topic
+    * (log reads, consumes, the rebase/compaction copy, the stats
+    * backfill): the envelope columns plus `part`. The relation is planned
+    * from one status call per segment, made on the driver. `spark.read`
+    * checks every path and then, past 32 paths, lists them with a Spark
+    * job of one task per file: planning 720 segments that way took
+    * 2.3-5.7 s on 4 cores, where counting them took 0.4 s. With
+    * `missingOk`, a segment deleted before or during the scan is skipped
+    * instead of failing it. */
+  private[graft] def scanSegments(spark: SparkSession, cfg: TopicConfig,
+      paths: Seq[String], missingOk: Boolean = false): DataFrame = {
     val schema = ValueSchema.add(StructField("part", IntegerType))
-    val dir = new Path(cfg.dir)
-    if (FsIO.localFile(dir).isEmpty)
-      return spark.read.schema(schema).option("basePath", cfg.dir).parquet(paths: _*)
-    val fs = dir.getFileSystem(HadoopConf.shared)
-    val statuses = paths.map { s =>
-      val st = fs.getFileStatus(new Path(s))
-      st.getPath -> st
-    }
+    val fs = new Path(cfg.dir).getFileSystem(HadoopConf.shared)
+    val statuses = paths.flatMap { s =>
+      try Some(fs.getFileStatus(new Path(s)))
+      catch { case _: java.io.FileNotFoundException if missingOk => None }
+    }.map(st => st.getPath -> st)
     val byPath = statuses.toMap
     // the index asks this cache for each root path's leaf files, so it
     // lists nothing
@@ -605,7 +604,7 @@ object PolarLog {
       override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
       override def invalidateAll(): Unit = ()
     }
-    val options = Map("basePath" -> cfg.dir)
+    val options = Map("basePath" -> cfg.dir, "ignoreMissingFiles" -> missingOk.toString)
     val index = new InMemoryFileIndex(spark, statuses.map(_._1), options, Some(schema), known)
     // nullable data columns, as `spark.read` makes a user schema
     val data = StructType(ValueSchema.map(_.copy(nullable = true)))

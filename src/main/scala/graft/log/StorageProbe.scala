@@ -52,11 +52,12 @@ object StorageProbe {
 
   /** The engine's own primitives, so the probe checks the code it runs. */
   private[log] class RealOps extends Ops {
+    private def fsOf(p: Path) = p.getFileSystem(HadoopConf.shared)
     def createExclusive(p: Path, content: String): Unit = FsIO.create(p, content)
     def renameOverwrite(src: Path, dst: Path): Unit = FsIO.publish(src, dst)
     def read(p: Path): String = FsIO.read(p)
-    def delete(p: Path): Unit = { p.getFileSystem(HadoopConf.shared).delete(p, true): Unit }
-    def mkdirs(p: Path): Unit = FsIO.mkdirs(p)
+    def delete(p: Path): Unit = { fsOf(p).delete(p, true): Unit }
+    def mkdirs(p: Path): Unit = { fsOf(p).mkdirs(p): Unit }
   }
 
   private val cache =

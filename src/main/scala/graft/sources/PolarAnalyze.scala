@@ -36,25 +36,19 @@ object PolarAnalyze {
     if (targets.isEmpty) return 0
 
     // one read over exactly the stale files; per-file stats map-side.
-    // ignoreMissingFiles: a file deleted between the metadata read and the
-    // scan (racing retention/delete-records) is SKIPPED — the CAS below
+    // missingOk: a file deleted between the metadata read and the scan
+    // (racing retention/delete-records) is SKIPPED — the CAS below
     // matches by (part, name), so the meanwhile-unregistered entry is
     // simply left alone, per the contract in the header doc
     val byPath = targets.map(f => f.path(cfg) -> (f.part, f.name)).toMap
-    val fs = new org.apache.hadoop.fs.Path(cfg.dir)
-      .getFileSystem(graft.log.HadoopConf.shared)
-    val present = byPath.keys.toSeq.filter(p =>
-      fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (present.isEmpty) return 0
-    val rows = spark.read.schema(PolarLog.ValueSchema)
-      .option("ignoreMissingFiles", "true")
-      .parquet(present: _*)
+    val rows = PolarLog.scanSegments(spark, cfg, byPath.keys.toSeq, missingOk = true)
       .select(input_file_name().as("file"), col("timestamp"))
       .groupBy(col("file"))
       .agg(count(lit(1)).as("n"), count(col("timestamp")).as("n_ts"),
         min(unix_micros(col("timestamp"))).as("ts_min"),
         max(unix_micros(col("timestamp"))).as("ts_max"))
       .collect()
+    if (rows.isEmpty) return 0
 
     // input_file_name is a URI; match registry paths by suffix
     val statsByFile: Map[(Int, String), (Long, Long, Long)] = rows.flatMap { r =>

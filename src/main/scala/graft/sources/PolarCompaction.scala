@@ -74,7 +74,7 @@ object PolarCompaction {
         val name = f"$pfx${run.head.minOffset}%011d-$horizon$suffix.parquet"
         val destPath = s"${cfg.dir}/part=$p/$name"
         val bytes = PolarBatchWrite.copySegments(
-          spark, run.map(_.path(cfg)), destPath, delta = 0L,
+          spark, cfg, run.map(_.path(cfg)), destPath, delta = 0L,
           codec = PolarWrite.effectiveCodec(meta.props))
         (p, run) -> FileEntry(p, name, run.head.minOffset, run.last.maxOffset,
           run.map(_.count).sum, bytes,

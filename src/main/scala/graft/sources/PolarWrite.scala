@@ -212,7 +212,7 @@ object PolarBatchWrite {
     // rebases are the rare CAS-loss path)
     val codec = PolarWrite.effectiveCodec(
       scala.util.Try(LogMetadata.read(cfg).props).getOrElse(Map.empty))
-    val bytes = copySegments(spark, Seq(f.path(cfg)), destPath, delta, codec)
+    val bytes = copySegments(spark, cfg, Seq(f.path(cfg)), destPath, delta, codec)
     val hconf = graft.log.HadoopConf.shared
     try {
       val old = new Path(f.path(cfg))
@@ -231,11 +231,12 @@ object PolarBatchWrite {
     * rewrite and segment compaction. */
   private[sources] def copySegments(
       spark: org.apache.spark.sql.SparkSession,
+      cfg: TopicConfig,
       srcPaths: Seq[String],
       destPath: String,
       delta: Long,
       codec: CompressionCodecName = CompressionCodecName.ZSTD): Long = {
-    val rdd = spark.read.schema(PolarLog.ValueSchema).parquet(srcPaths: _*)
+    val rdd = PolarLog.scanSegments(spark, cfg, srcPaths).drop("part")
       .coalesce(1).sortWithinPartitions("offset")
       .queryExecution.toRdd
     rdd.foreachPartition {
@@ -596,10 +597,8 @@ object PolarDataWriter {
   }
 
   /** The byte size of a sealed segment written by [[open]]. */
-  def sealedSize(path: Path): Long = FsIO.localFile(path) match {
-    case Some(f) => java.nio.file.Files.size(f)
-    case None => path.getFileSystem(graft.log.HadoopConf.shared).getFileStatus(path).getLen
-  }
+  def sealedSize(path: Path): Long =
+    path.getFileSystem(graft.log.HadoopConf.shared).getFileStatus(path).getLen
 }
 
 /** Streams one topic's rows of a task (pre-clustered by `part`,

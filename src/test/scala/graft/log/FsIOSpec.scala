@@ -90,5 +90,8 @@ class FsIOSpec extends AnyFunSuite {
     FsIO.replace(p, next)
     assert(FsIO.read(p) === next)
     assert(LogMetadata.read(cfg).version === 7L)
+    // and so does a reader that still verifies sidecars through Hadoop
+    val in = local.open(p)
+    try assert(new String(in.readAllBytes(), "UTF-8") === next) finally in.close()
   }
 }

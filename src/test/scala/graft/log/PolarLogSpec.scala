@@ -95,6 +95,20 @@ class PolarLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a segment scan with missingOk skips deleted segments, and all of them") {
+    val cfg = TopicConfig(root, "t_scan_missing")
+    PolarLog.produce(eventsAsRecords.drop("event_id").limit(64), cfg)
+    val files = LogMetadata.read(cfg).files
+    val gone = files.head
+    Files.delete(java.nio.file.Paths.get(gone.path(cfg)))
+    val paths = files.map(_.path(cfg))
+    assert(PolarLog.scanSegments(spark, cfg, paths, missingOk = true).count() ===
+      64L - gone.count)
+    intercept[java.io.FileNotFoundException](PolarLog.scanSegments(spark, cfg, paths))
+    assert(PolarLog.scanSegments(spark, cfg, Seq(gone.path(cfg)), missingOk = true)
+      .count() === 0L)
+  }
+
   test("same key always lands in the same partition; placement matches kernel") {
     val cfg = TopicConfig(root, "t_placement")
     PolarLog.produce(eventsAsRecords.drop("event_id"), cfg)
